@@ -16,6 +16,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from lakehouse_cdc_spark.streaming import store
+
 logger = logging.getLogger(__name__)
 
 
@@ -40,38 +42,8 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 1) -> None
     shutil.rmtree(back)
 
 
-
-def _snapshot_versions(target_dir: str) -> list[int]:
-    """Ascending snapshot numbers with a ``v=N`` directory — THE
-    parsing rule for the sink's layout, kept in one place so retention
-    and the pin logic can never disagree about what a snapshot is."""
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(target_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-
-
-def _load_refs(target_dir: str) -> dict:
-    """The sink's named-refs document (empty categories when absent) —
-    tags / branches / cursors / cursors_meta, same shape
-    SnapshotUpsertSink.refs() normalizes to."""
-    import json
-
-    refs_file = os.path.join(target_dir, "_REFS.json")
-    refs: dict = {}
-    if os.path.exists(refs_file):
-        with open(refs_file) as f:
-            refs = json.load(f)
-    refs.setdefault("tags", {})
-    refs.setdefault("branches", {})
-    refs.setdefault("cursors", {})
-    refs.setdefault("cursors_meta", {})
-    return refs
-
-
 def _ref_roots(target_dir: str, versions: list[int]) -> set[int]:
-    """Snapshots pinned by named refs (_REFS.json): every tag, plus a
+    """Snapshots pinned by the sink's named refs: every tag, plus a
     WAP branch's whole base..head chain (staged history must stay
     time-travelable until published or aborted), plus — for every
     REGISTERED feed cursor — every snapshot at or above its acked
@@ -81,7 +53,7 @@ def _ref_roots(target_dir: str, versions: list[int]) -> set[int]:
     (a cursor that never consumed, acked = -1, pins everything).
     Ref roots join the keep set of expire_snapshots/expiry_safety
     before the manifest reference closure."""
-    refs = _load_refs(target_dir)
+    refs = store.read_refs(target_dir)
     return _named_ref_roots(refs) | _cursor_pins(refs, versions)
 
 
@@ -110,18 +82,12 @@ def _manifest_closure(target_dir: str, seed: set[int]) -> set[int]:
     dirs (and MOR delta dirs) each retained manifest references join
     the set, iterated to a fixed point — a kept referenced snapshot's
     manifest may reference further snapshots."""
-    import json
-
-    from lakehouse_cdc_spark.streaming.pipeline import manifest_path
-
     keep = set(seed)
     while True:
         referenced = set()
         for v in keep:
-            manifest_file = manifest_path(target_dir, v)
-            if os.path.exists(manifest_file):
-                with open(manifest_file) as f:
-                    m = json.load(f)
+            m = store.read_manifest(target_dir, v)
+            if m is not None:
                 referenced.update(int(s) for s in m["buckets"].values())
                 referenced.update(int(s) for s in m.get("deltas") or [])
         if referenced <= keep:
@@ -202,43 +168,26 @@ def expire_snapshots(
     longer honors and have its history deleted in the same pass —
     under the lock, registration orders strictly before or after the
     deletion."""
-    from lakehouse_cdc_spark.streaming.pipeline import (
-        manifest_path,
-        parse_version_pointer,
-        refs_lock,
-    )
-
-    with refs_lock(target_dir):
-        versions = _snapshot_versions(target_dir)
-        committed_snap = parse_version_pointer(target_dir)[2]
-        refs = _load_refs(target_dir)
-        if cursor_ttl_seconds is not None:
-            import json
-
-            if _evict_stale_cursors(target_dir, refs, cursor_ttl_seconds):
-                # persist the eviction atomically BEFORE computing
-                # pins, inside the same critical section — a crash
-                # between eviction and deletion just re-evicts next run
-                refs_file = os.path.join(target_dir, "_REFS.json")
-                tmp = refs_file + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(refs, f)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, refs_file)
+    with store.refs_lock(target_dir):
+        versions = store.list_snapshots(target_dir)
+        committed_snap = store.read_pointer(target_dir)[2]
+        refs = store.read_refs(target_dir)
+        if cursor_ttl_seconds is not None and _evict_stale_cursors(
+            target_dir, refs, cursor_ttl_seconds
+        ):
+            # persist the eviction atomically BEFORE computing pins,
+            # inside the same critical section — a crash between
+            # eviction and deletion just re-evicts next run
+            store.write_refs(target_dir, refs)
         base = set(versions[-retain_last:])
         if committed_snap is not None:
             base.add(committed_snap)
         base |= _named_ref_roots(refs)
-        # a live v=N.claim marks an IN-FLIGHT writer's directory (data
+        # a live claim marks an IN-FLIGHT writer's directory (data
         # lands before its manifest/ref record exists anywhere expiry
         # can see) — never delete under it; a CRASHED writer's claim
         # is recover_interrupted_commit's to resolve, not expiry's
-        base |= {
-            v
-            for v in versions
-            if os.path.exists(os.path.join(target_dir, f"v={v}.claim"))
-        }
+        base |= _claimed(target_dir, versions)
         # every RETAINED snapshot must stay fully readable (time
         # travel): close over manifest references — keeping only the
         # committed manifest's references would leave retained history
@@ -297,13 +246,18 @@ def expire_snapshots(
         expired = []
         for v in versions:
             if v not in keep:
-                stale_manifest = manifest_path(target_dir, v)
+                stale_manifest = store.manifest_path(target_dir, v)
                 if os.path.exists(stale_manifest):
                     os.remove(stale_manifest)
                 expired.append(v)
     for v in expired:
-        shutil.rmtree(os.path.join(target_dir, f"v={v}"), ignore_errors=True)
+        shutil.rmtree(store.snapshot_path(target_dir, v), ignore_errors=True)
     return expired
+
+
+def _claimed(target_dir: str, versions: list[int]) -> set[int]:
+    """The snapshot dirs in ``versions`` a writer claim file fences."""
+    return set(versions) & set(store.list_claims(target_dir))
 
 
 def expiry_safety(target_dir: str, retain_last: int = 5) -> list[dict]:
@@ -337,19 +291,14 @@ def expiry_safety(target_dir: str, retain_last: int = 5) -> list[dict]:
     ``cdf_base_usable_after`` snapshot.  :func:`retention_report` is
     the per-PIN dual of this per-SNAPSHOT view: it names which
     tag/branch/cursor/claim is holding each survivor."""
-    from lakehouse_cdc_spark.streaming.pipeline import parse_version_pointer
-
-    versions = _snapshot_versions(target_dir)
-    committed_snap = parse_version_pointer(target_dir)[2]
+    versions = store.list_snapshots(target_dir)
+    committed_snap = store.read_pointer(target_dir)[2]
     base_keep = set(versions[-retain_last:])
     if committed_snap is not None:
         base_keep.add(committed_snap)
     base_keep |= _ref_roots(target_dir, versions)
-    base_keep |= {  # same in-flight-writer keep as expire_snapshots
-        v
-        for v in versions
-        if os.path.exists(os.path.join(target_dir, f"v={v}.claim"))
-    }
+    # same in-flight-writer keep as expire_snapshots
+    base_keep |= _claimed(target_dir, versions)
     keep = _manifest_closure(target_dir, base_keep)
     return [
         {
@@ -377,7 +326,7 @@ def retention_report(target_dir: str, retain_last: int = 5) -> list[dict]:
     Returns one dict per pin, sorted by (kind, name):
 
     - ``kind`` — ``"tag"`` | ``"branch"`` | ``"cursor"`` |
-      ``"claim"`` (a live ``v=N.claim`` file: in-flight or crashed
+      ``"claim"`` (a live writer claim file: in-flight or crashed
       writer);
     - ``name`` — ref/cursor name; for claims the owner string from
       the claim file (lineage[@wap:branch]);
@@ -400,11 +349,9 @@ def retention_report(target_dir: str, retain_last: int = 5) -> list[dict]:
       signal)."""
     import time
 
-    from lakehouse_cdc_spark.streaming.pipeline import parse_version_pointer
-
-    versions = _snapshot_versions(target_dir)
-    committed_snap = parse_version_pointer(target_dir)[2]
-    refs = _load_refs(target_dir)
+    versions = store.list_snapshots(target_dir)
+    committed_snap = store.read_pointer(target_dir)[2]
+    refs = store.read_refs(target_dir)
     baseline = set(versions[-retain_last:])
     if committed_snap is not None:
         baseline.add(committed_snap)
@@ -464,20 +411,15 @@ def retention_report(target_dir: str, retain_last: int = 5) -> list[dict]:
     # claim for a not-yet-staged snapshot), so a crash can leave a
     # claim with no v=N dir — the exact dead-writer pin this report
     # exists to surface; recover_interrupted_commit scans the same way
-    for fname in sorted(os.listdir(target_dir)):
-        if not (fname.startswith("v=") and fname.endswith(".claim")):
-            continue
-        num = fname[len("v=") : -len(".claim")]
-        if not num.isdigit():
-            continue
-        v = int(num)
-        claim = os.path.join(target_dir, fname)
+    for v in store.list_claims(target_dir):
+        claim = store.read_claim(target_dir, v)
         try:
-            with open(claim) as f:
-                owner = f.read().rpartition(":")[0]
-            mtime = os.path.getmtime(claim)
+            mtime = os.path.getmtime(store.claim_path(target_dir, v))
         except FileNotFoundError:
-            continue  # released between listdir and open
+            continue  # released between listing and stat
+        if claim is None:
+            continue  # released between listing and open
+        owner = claim[0]
         rows.append(
             {
                 "kind": "claim",

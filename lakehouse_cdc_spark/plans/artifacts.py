@@ -33,22 +33,22 @@ def prepare_artifacts(spark, sf_dir: str) -> dict[str, float]:
     """Eagerly build every per-process artifact for ``sf_dir``.
 
     Returns ``{artifact_name: wall_seconds}``.  Idempotent: a second
-    call finds the caches hot and reports ~0 s.
+    call finds the caches hot, runs no Spark job and reports ~0 s.
     """
+    from lakehouse_cdc_spark.plans import llm_queries
+
     timings: dict[str, float] = {}
 
     t0 = time.perf_counter()
-    from lakehouse_cdc_spark.plans.llm_queries import _old_shard_band_index
-
-    _old_shard_band_index(spark, sf_dir)
+    if sf_dir not in llm_queries._OLD_INDEX_CACHE:
+        llm_queries._old_shard_band_index(spark, sf_dir)
     timings["lsh_old_band_index"] = round(time.perf_counter() - t0, 4)
 
     t0 = time.perf_counter()
-    from lakehouse_cdc_spark.plans.llm_queries import _auto_fit
-
     # the two min_k configurations the declared queries use
-    _auto_fit(spark, sf_dir, min_k=8, with_block=True)
-    _auto_fit(spark, sf_dir, min_k=32, with_block=True)
+    for min_k in (8, 32):
+        if not llm_queries._auto_fit_cached(sf_dir, min_k):
+            llm_queries._auto_fit(spark, sf_dir, min_k=min_k, with_block=True)
     timings["ivf_auto_fit"] = round(time.perf_counter() - t0, 4)
 
     t0 = time.perf_counter()

@@ -30,6 +30,7 @@ Batch algebra (all arithmetic in exact integer cents):
 
 from __future__ import annotations
 
+import functools
 import tempfile
 
 from pyspark.sql import functions as F
@@ -45,9 +46,37 @@ from lakehouse_cdc_spark.plans.registry import (
 
 _FP = sql_fixed_point("o_totalprice", 2)
 
-#: process-local cache: the demo sink's content is a pure function of
-#: sf_dir, so one build serves every query and every repeat call
-_SINK_CACHE: dict[str, object] = {}
+#: process-local fixture memo, keyed by (fixture name, sf_dir): a demo
+#: sink's content is a pure function of sf_dir, so one build serves
+#: every query and every repeat call
+_FIXTURES: dict[tuple[str, str], object] = {}
+
+
+def _fixture(is_valid):
+    """Memoize a demo-fixture builder ``build(spark, sf_dir)`` per
+    (fixture name, sf_dir).  A cached fixture is served only while
+    ``is_valid(fixture)`` holds (the sink still sits on the state its
+    build committed); otherwise it is rebuilt and the stale entry
+    REPLACED."""
+
+    def deco(build):
+        @functools.wraps(build)
+        def get(spark, sf_dir):
+            key = (build.__name__, sf_dir)
+            hit = _FIXTURES.get(key)
+            if hit is not None and is_valid(hit):
+                return hit
+            _FIXTURES[key] = built = build(spark, sf_dir)
+            return built
+
+        return get
+
+    return deco
+
+
+def _at_snapshot(n: int):
+    """Fixture validity: the sink's committed snapshot is still ``n``."""
+    return lambda sink: sink.committed_snapshot() == n
 
 
 def _demo_batches(spark, sf_dir):
@@ -91,15 +120,13 @@ def _demo_batches(spark, sf_dir):
     return [b0, b1, b2]
 
 
+@_fixture(_at_snapshot(2))
 def _demo_sink(spark, sf_dir):
     """Build (once per sf_dir per process) the three-snapshot demo
     sink.  COW mode so every snapshot is bucket-complete and the feed
     exercises the rewritten-bucket diff path."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
-    sink = _SINK_CACHE.get(sf_dir)
-    if sink is not None and sink.committed_snapshot() == 2:
-        return sink
     sink = SnapshotUpsertSink(
         tempfile.mkdtemp(prefix="cdf_demo_"),
         keys=["k"],
@@ -109,7 +136,6 @@ def _demo_sink(spark, sf_dir):
     for i, b in enumerate(_demo_batches(spark, sf_dir)):
         sink.process_batch(b, i)
     assert sink.committed_snapshot() == 2
-    _SINK_CACHE[sf_dir] = sink
     return sink
 
 
@@ -314,9 +340,6 @@ def timetravel_snapshot_diff(spark, sf_dir):
     )
 
 
-_IDX_CACHE: dict[str, object] = {}
-
-
 def _text_demo_batches(spark, sf_dir):
     """The shared documents-derived change batches: b0 inserts docs
     with ``doc_id % 3 = 0``; b1 appends ' updated extra' to docs with
@@ -356,15 +379,13 @@ def _text_demo_batches(spark, sf_dir):
     return (b0, b1, b2)
 
 
+@_fixture(_at_snapshot(2))
 def _text_demo_sinks(spark, sf_dir):
     """Base text sink (3 change batches) + the inverted-index sink
     maintained from its feed, cached per sf_dir."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import token_index_changes
 
-    cached = _IDX_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 2:
-        return cached
     base = SnapshotUpsertSink(
         tempfile.mkdtemp(prefix="cdf_textbase_"),
         keys=["doc"],
@@ -388,7 +409,6 @@ def _text_demo_sinks(spark, sf_dir):
         idx.process_batch(
             token_index_changes(feed, prev, ["doc"], snapshot=i), i
         )
-    _IDX_CACHE[sf_dir] = idx
     return idx
 
 
@@ -450,8 +470,6 @@ def cdf_incremental_index(spark, sf_dir):
     )
 
 
-_ANN_CACHE: dict[str, object] = {}
-
 #: DuckDB cosine fragments against the 64-dim embeddings (mirror of
 #: llm/similarity.py's fold — same shape emb_ivf_assign's oracle uses)
 _ANN_NSQ = (
@@ -464,6 +482,7 @@ _ANN_DOT = (
 )
 
 
+@_fixture(_at_snapshot(2))
 def _ann_demo_sinks(spark, sf_dir):
     """Base vector sink (3 embeddings-derived change batches) + the
     IVF assignment index maintained from its feed, cached per sf_dir.
@@ -479,9 +498,6 @@ def _ann_demo_sinks(spark, sf_dir):
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import ann_index_changes
 
-    cached = _ANN_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 2:
-        return cached
     e = table(spark, sf_dir, "embeddings")
     vid = F.col("vec_id")
     neg = F.transform(F.col("embedding"), lambda x: -x)
@@ -533,7 +549,6 @@ def _ann_demo_sinks(spark, sf_dir):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)
         idx.process_batch(ann_index_changes(feed, centroids, snapshot=i), i)
-    _ANN_CACHE[sf_dir] = idx
     return idx
 
 
@@ -599,8 +614,6 @@ def cdf_incremental_ann_index(spark, sf_dir):
     )
 
 
-_LSH_CACHE: dict[str, object] = {}
-
 #: DuckDB mirror of llm/dedup.py's md5 minhash family + banding, over
 #: the final-state docs CTE (column ``doc``)
 _LSH_MINS = ",\n             ".join(
@@ -615,6 +628,7 @@ _LSH_LONG = "\n      UNION ALL ".join(
 )
 
 
+@_fixture(_at_snapshot(2))
 def _lsh_demo_sinks(spark, sf_dir):
     """Base text sink (same batches as the inverted-index demo) + the
     MinHash-LSH band-index sink maintained from its feed, cached per
@@ -622,9 +636,6 @@ def _lsh_demo_sinks(spark, sf_dir):
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import lsh_index_changes
 
-    cached = _LSH_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 2:
-        return cached
     base = SnapshotUpsertSink(
         tempfile.mkdtemp(prefix="cdf_lshbase_"),
         keys=["doc"],
@@ -641,7 +652,6 @@ def _lsh_demo_sinks(spark, sf_dir):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)
         idx.process_batch(lsh_index_changes(feed, snapshot=i), i)
-    _LSH_CACHE[sf_dir] = idx
     return idx
 
 
@@ -834,8 +844,6 @@ def cdf_incremental_text_index(spark, sf_dir):
     )
 
 
-_GRP_CACHE: dict[str, object] = {}
-
 #: uncapped per-band candidate join over the `bands` CTE (the pair
 #: policy must be insertion-monotone for maintained ≡ rebuild; the
 #: capped _BAND_UNION of dedup_minhash_lsh is time-dependent under
@@ -847,6 +855,7 @@ _GRP_BAND_UNION = "\n      UNION\n".join(
 )
 
 
+@_fixture(_at_snapshot(2))
 def _grp_demo_sinks(spark, sf_dir):
     """Base text sink fed three INSERT-ONLY batches (doc_id % 3 =
     0 / 1 / 2 — the whole documents table by the end), with the LSH
@@ -858,9 +867,6 @@ def _grp_demo_sinks(spark, sf_dir):
         lsh_index_changes,
     )
 
-    cached = _GRP_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 2:
-        return cached
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     batches = [
@@ -902,7 +908,6 @@ def _grp_demo_sinks(spark, sf_dir):
             i,
         )
         idx.process_batch(lsh_index_changes(feed, snapshot=i), i)
-    _GRP_CACHE[sf_dir] = lab
     return lab
 
 
@@ -980,18 +985,13 @@ def cdf_incremental_dedup_groups(spark, sf_dir):
     )
 
 
-_CHK_CACHE: dict[str, object] = {}
-
-
+@_fixture(_at_snapshot(0))
 def _chk_demo_sink(spark, sf_dir):
     """Sink with CHECK constraints fed one orders-derived batch whose
     rows deterministically violate them (negative totals minted from
     key parity, out-of-range dates), cached per sf_dir."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
-    cached = _CHK_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 0:
-        return cached
     o = table(spark, sf_dir, "orders")
     batch = o.select(
         F.col("o_orderkey").alias("k"),
@@ -1022,7 +1022,6 @@ def _chk_demo_sink(spark, sf_dir):
         },
     )
     sink.process_batch(batch, 0)
-    _CHK_CACHE[sf_dir] = sink
     return sink
 
 
@@ -1084,18 +1083,13 @@ def sink_check_quarantine(spark, sf_dir):
     )
 
 
-_ZONE_CACHE: dict[str, object] = {}
-
-
+@_fixture(_at_snapshot(1))
 def _zone_demo_sink(spark, sf_dir):
     """Sink with a zone-mapped day column, fed two orders-derived
     batches (the second rewrites some buckets so carried + refreshed
     zones coexist), cached per sf_dir."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
-    cached = _ZONE_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 1:
-        return cached
     o = table(spark, sf_dir, "orders")
     day = F.expr("datediff(to_date(o_orderdate), DATE '1992-01-01')")
 
@@ -1117,7 +1111,6 @@ def _zone_demo_sink(spark, sf_dir):
     )
     sink.process_batch(batch(F.col("o_orderkey") % 2 == 0, 0), 0)
     sink.process_batch(batch(F.col("o_orderkey") % 2 == 1, 1), 1)
-    _ZONE_CACHE[sf_dir] = sink
     return sink
 
 
@@ -1169,9 +1162,7 @@ def sink_zone_range_lookup(spark, sf_dir):
     )
 
 
-_WAP_CACHE: dict[str, object] = {}
-
-
+@_fixture(_at_snapshot(1))
 def _wap_demo_sink(spark, sf_dir):
     """Sink taken through one full write-audit-publish lifecycle:
     main commit of all orders, a pre-publish tag, a branch staging
@@ -1179,9 +1170,6 @@ def _wap_demo_sink(spark, sf_dir):
     (key%5==0), then publish — cached per sf_dir."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
-    cached = _WAP_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 1:
-        return cached
     o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("k"),
@@ -1210,11 +1198,6 @@ def _wap_demo_sink(spark, sf_dir):
     sink.create_branch("audit")
     sink.stage_batch("audit", staged, 1)
     sink.publish_branch("audit")
-    # explicit assign, NOT setdefault: a stale cached sink that failed
-    # the committed_snapshot()==1 health check above must be REPLACED
-    # by this rebuilt one (setdefault would return — and keep — the
-    # broken entry whenever the key already exists)
-    _WAP_CACHE[sf_dir] = sink
     return sink
 
 
@@ -1277,9 +1260,10 @@ def sink_wap_publish(spark, sf_dir):
         )
         .orderBy("lane")
     )
-_WAP_MB_CACHE: dict[str, object] = {}
 
-
+@_fixture(
+    lambda sink: "mb_base" in sink.refs()["tags"] and not sink.refs()["branches"]
+)
 def _wap_multibranch_sink(spark, sf_dir):
     """Demo sink for the CONCURRENT write-audit-publish lifecycle: two
     branches staged from the same base, first publish fast-forwards,
@@ -1296,11 +1280,6 @@ def _wap_multibranch_sink(spark, sf_dir):
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.pipeline import ConcurrentCommitError
 
-    cached = _WAP_MB_CACHE.get(sf_dir)
-    if cached is not None:
-        refs = cached.refs()
-        if "mb_base" in refs["tags"] and not refs["branches"]:
-            return cached
     o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("k"),
@@ -1342,7 +1321,6 @@ def _wap_multibranch_sink(spark, sf_dir):
         sink.create_branch("audit_b")
         sink.stage_batch("audit_b", stage_b, 2)
         sink.publish_branch("audit_b")
-    _WAP_MB_CACHE[sf_dir] = sink
     return sink
 
 
@@ -1413,10 +1391,7 @@ def sink_wap_multibranch(spark, sf_dir):
     )
 
 
-
-_CURSOR_CACHE: dict[str, object] = {}
-
-
+@_fixture(_at_snapshot(2))
 def _cursor_demo_sink(spark, sf_dir):
     """Sink taken through the cursor-pinned retention lifecycle: all
     orders committed (snapshot 0), a NAMED feed cursor registered and
@@ -1430,9 +1405,6 @@ def _cursor_demo_sink(spark, sf_dir):
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.feed import FeedCursor
 
-    cached = _CURSOR_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 2:
-        return cached
     o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("k"),
@@ -1477,7 +1449,6 @@ def _cursor_demo_sink(spark, sf_dir):
             f"cursor pin failed: expiry removed {expired} above the "
             "acked floor"
         )
-    _CURSOR_CACHE[sf_dir] = sink
     return sink
 
 
@@ -1535,9 +1506,7 @@ def feed_cursor_pinned_drain(spark, sf_dir):
     )
 
 
-_RETENTION_CACHE: dict[str, object] = {}
-
-
+@_fixture(_at_snapshot(3))
 def _retention_demo_sink(spark, sf_dir):
     """Sink exhibiting every retention-PIN kind at once, cached per
     sf_dir: four commits (all orders inserted → snapshot 0, +70 cents
@@ -1554,9 +1523,6 @@ def _retention_demo_sink(spark, sf_dir):
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.feed import FeedCursor
 
-    cached = _RETENTION_CACHE.get(sf_dir)
-    if cached is not None and cached.committed_snapshot() == 3:
-        return cached
     o = table(spark, sf_dir, "orders")
     cents = fixed_point(F.col("o_totalprice"), 2)
     base = o.select(
@@ -1606,14 +1572,13 @@ def _retention_demo_sink(spark, sf_dir):
         name="abandoned",
     )
     # crashed writer's leftover claim on snapshot 2 (recovery not run)
-    with open(os.path.join(sink.target_dir, "v=2.claim"), "w") as f:
+    with open(sink._claim_path(2), "w") as f:
         f.write("crashed_writer:42")
     expired = expire_snapshots(sink.target_dir, retain_last=1)
     if expired:
         raise RuntimeError(
             f"retention pins failed: expiry removed {expired}"
         )
-    _RETENTION_CACHE[sf_dir] = sink
     return sink
 
 

@@ -123,6 +123,15 @@ def _auto_fit(spark, sf_dir, min_k, with_block=False):
     return emb, centroids, k, block
 
 
+def _auto_fit_cached(sf_dir, min_k) -> bool:
+    """True once ``_auto_fit(.., min_k, with_block=True)`` for
+    ``sf_dir`` is served from the caches (count and block)."""
+    from lakehouse_cdc_spark.llm.similarity import auto_k
+
+    n = _EMB_COUNT_CACHE.get(sf_dir)
+    return n is not None and (sf_dir, auto_k(n, 64, min_k=min_k)) in _FIT_BLOCK_CACHE
+
+
 @register(
     "dedup_exact_documents",
     oracle="""

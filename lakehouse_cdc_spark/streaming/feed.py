@@ -33,12 +33,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
+from lakehouse_cdc_spark.streaming import store
+
 
 class FeedCursor:
     """Durable, exactly-once cursor over a sink's change feed.
 
     Pass ``name`` to REGISTER the cursor in the sink's refs document
-    (``_REFS.json`` → ``cursors``): a registered cursor is a retention
+    (``cursors``): a registered cursor is a retention
     PIN — ``maintenance.expire_snapshots`` keeps every snapshot ≥ its
     acked floor, so a lagging consumer can never be stranded by expiry
     deleting a manifest its next ``changes_between`` range needs (the
@@ -115,12 +117,7 @@ class FeedCursor:
             self.sink._refs_update(_force)
 
     def _write_file_only(self, snapshot: int) -> None:
-        tmp = self.cursor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"acked": snapshot}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.cursor_path)
+        store.write_json(self.cursor_path, {"acked": snapshot})
 
     def _write(self, snapshot: int) -> None:
         self._write_file_only(snapshot)
@@ -239,11 +236,7 @@ class FeedRangeStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("snapshotfeed: maxSnapshots > 0 required")
 
     def _committed(self) -> int | None:
-        from lakehouse_cdc_spark.streaming.pipeline import (
-            parse_version_pointer,
-        )
-
-        return parse_version_pointer(self.path)[2]
+        return store.read_pointer(self.path)[2]
 
     def initialOffset(self) -> dict:
         return {"snapshot": self.start}

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import base64
 import contextlib
-import fcntl
 import json
 import os
 import shutil
@@ -55,6 +54,10 @@ from lakehouse_cdc_spark.operators.dedup import (
     latest_per_key,
     latest_per_key_bucketed,
 )
+from lakehouse_cdc_spark.streaming import store
+
+# importable from here too: perfbench reads manifests through it
+from lakehouse_cdc_spark.streaming.store import manifest_path
 
 # Re-entrant, refcounted AQE suppression.  The session conf is GLOBAL,
 # and two streaming queries' foreachBatch bodies run on separate
@@ -136,18 +139,10 @@ class SnapshotUpsertSink:
     """Idempotent CDC upsert sink over versioned, key-bucketed parquet
     snapshots.
 
-    Layout::
-
-        <target>/v=<snap>/__bucket=<k>/part-*.parquet
-                              -- bucket k's full state, as rewritten at
-                                 snapshot <snap> (touched buckets only)
-        <target>/_MANIFEST_<snap>.json
-                              -- {"n_buckets": K, "buckets": {k: snap'}}:
-                                 where every bucket's CURRENT data lives
-                                 (snap' ≤ snap — untouched buckets keep
-                                 pointing at older snapshot dirs, so
-                                 their files are never rewritten)
-        <target>/_VERSION     -- pointer to committed snapshot
+    The on-disk layout (pointer, per-snapshot manifests, refs, claim
+    fences, bucket and delta dirs, quarantine lane) is defined by
+    :mod:`lakehouse_cdc_spark.streaming.store`; this class reads and
+    writes it only through that module.
 
     ``process_batch`` is safe to call twice with the same ``batch_id``
     (T4's processed-batches ledger, spark_exactly_once.py:292-341,
@@ -264,31 +259,13 @@ class SnapshotUpsertSink:
 
     # -- snapshot bookkeeping -------------------------------------------
     #
-    # _VERSION pointer format: "<lineage>:<batch_id>:<snapshot>"
-    # (lineage may be empty).  Snapshot numbers are monotone and
-    # INDEPENDENT of batch ids: a replayed batch under a new checkpoint
-    # lineage reads snapshot S and writes snapshot S+1 — never the same
-    # path (Spark cannot overwrite a path it is reading from).
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.target_dir, "_VERSION")
-
+    # Snapshot numbers are monotone and INDEPENDENT of batch ids: a
+    # replayed batch under a new checkpoint lineage reads snapshot S and
+    # writes snapshot S+1 — never the same path (Spark cannot overwrite
+    # a path it is reading from).
     def committed(self) -> tuple[str | None, int | None, int | None]:
         """(lineage, batch_id, snapshot) of the committed state."""
-        try:
-            with open(self._pointer) as f:
-                raw = f.read().strip()
-        except FileNotFoundError:
-            return (None, None, None)
-        # rsplit: the lineage itself may contain ':' (a checkpoint URI)
-        parts = raw.rsplit(":", 2)
-        try:
-            if len(parts) == 3:
-                lineage = parts[0] or None
-                return (lineage, int(parts[1]), int(parts[2]))
-        except ValueError:
-            pass
-        return (None, None, None)
+        return store.read_pointer(self.target_dir)
 
     def committed_version(self) -> int | None:
         """Batch id of the last committed micro-batch."""
@@ -299,35 +276,29 @@ class SnapshotUpsertSink:
         return self.committed()[2]
 
     def _snapshot_path(self, snapshot: int) -> str:
-        return os.path.join(self.target_dir, f"v={snapshot}")
+        return store.snapshot_path(self.target_dir, snapshot)
 
     def _bucket_path(self, snapshot: int, bucket: int) -> str:
-        return os.path.join(self._snapshot_path(snapshot), f"__bucket={bucket}")
+        return store.bucket_path(self.target_dir, snapshot, bucket)
+
+    def _delta_path(self, snapshot: int) -> str:
+        return store.delta_path(self.target_dir, snapshot)
 
     def _manifest_path(self, snapshot: int) -> str:
         return manifest_path(self.target_dir, snapshot)
 
-    def _written_buckets(self, snap_dir: str) -> set[int]:
-        """Bucket ids whose partition dirs actually materialized in a
-        snapshot write (an empty merged bucket writes no dir)."""
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(snap_dir)
-            if d.startswith("__bucket=")
-        }
-
     def _claim_path(self, snapshot: int) -> str:
-        return os.path.join(self.target_dir, f"v={snapshot}.claim")
+        return store.claim_path(self.target_dir, snapshot)
 
     def _upgrade_marker_path(self, snapshot: int) -> str:
         """O_EXCL fence for upgrading a lane RESERVATION into a staged
         batch's claim: the reservation rewrite is a read-then-rewrite
         of an existing file, so without this marker two concurrent
         first ``stage_batch`` calls could both observe the reservation
-        and interleave data under the same ``v=N`` dir.  Exactly one
+        and interleave data under the same snapshot dir.  Exactly one
         upgrader can create the marker; it lives as long as the claim
         and is released with it."""
-        return self._claim_path(snapshot) + ".upgrade"
+        return store.upgrade_marker_path(self.target_dir, snapshot)
 
     def _release_claim(self, snapshot: int) -> None:
         """Unlink a claim file and any upgrade marker riding it."""
@@ -335,10 +306,15 @@ class SnapshotUpsertSink:
             self._claim_path(snapshot),
             self._upgrade_marker_path(snapshot),
         ):
-            try:
+            with contextlib.suppress(FileNotFoundError):
                 os.unlink(p)
-            except FileNotFoundError:
-                pass
+
+    def _discard_snapshot(self, snapshot: int) -> None:
+        """Delete a snapshot's data dir and manifest (never called on
+        the committed chain)."""
+        shutil.rmtree(self._snapshot_path(snapshot), ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(self._manifest_path(snapshot))
 
     @staticmethod
     def _validate_ref_name(name: str, kind: str) -> None:
@@ -375,8 +351,8 @@ class SnapshotUpsertSink:
         branch: str | None = None,
         expected_head: int | None = None,
     ) -> None:
-        """CAS-style writer fence: exclusively create ``v=N.claim``
-        BEFORE any snapshot data is written.  Exactly one writer can
+        """CAS-style writer fence: exclusively create snapshot N's claim
+        file BEFORE any snapshot data is written.  Exactly one writer can
         claim a snapshot number, so two writers that both read base
         snapshot N-1 can never interleave data files under the same
         ``v=N`` directory — the loser fails here, having written
@@ -394,12 +370,9 @@ class SnapshotUpsertSink:
                 self._claim_path(new_snap), os.O_CREAT | os.O_EXCL | os.O_WRONLY
             )
         except FileExistsError:
-            try:
-                with open(self._claim_path(new_snap)) as f:
-                    raw = f.read()
-                owner, _, owner_batch = raw.rpartition(":")
-            except FileNotFoundError:
-                owner, owner_batch = None, None
+            owner, owner_batch = store.read_claim(
+                self.target_dir, new_snap
+            ) or (None, None)
             ours = f"{'' if batch_id is None else batch_id}"
             if (
                 branch is not None
@@ -530,7 +503,7 @@ class SnapshotUpsertSink:
         interleaved lane numbers, not just committed+1 — a staged
         writer that died holding a higher-numbered claim would block
         other branches' allocation at that number forever — so EVERY
-        ``v=*.claim`` file is scanned, not only the main candidate.
+        claim file is scanned, not only the main candidate.
 
         Returns "rolled_forward", "rolled_back", or None (nothing to
         recover)."""
@@ -538,11 +511,7 @@ class SnapshotUpsertSink:
         cand = (cur if cur is not None else -1) + 1
         primary = None
         if os.path.exists(self._claim_path(cand)):
-            try:
-                with open(self._claim_path(cand)) as f:
-                    claim_owner = f.read().rpartition(":")[0]
-            except FileNotFoundError:
-                claim_owner = ""
+            claim_owner = (store.read_claim(self.target_dir, cand) or ("",))[0]
             if "@wap:" in claim_owner:
                 primary = (
                     "rolled_back"
@@ -560,13 +529,7 @@ class SnapshotUpsertSink:
                     self._release_claim(cand)
                     primary = "rolled_forward"
                 else:
-                    shutil.rmtree(
-                        self._snapshot_path(cand), ignore_errors=True
-                    )
-                    try:
-                        os.unlink(self._manifest_path(cand))
-                    except FileNotFoundError:
-                        pass
+                    self._discard_snapshot(cand)
                     self._release_claim(cand)
                     primary = "rolled_back"
             if primary == "rolled_forward":
@@ -575,18 +538,11 @@ class SnapshotUpsertSink:
                 cur = self.committed_snapshot()
         # sweep the remaining claim files
         swept = False
-        for fn in sorted(os.listdir(self.target_dir)):
-            if not (fn.startswith("v=") and fn.endswith(".claim")):
+        for snap in store.list_claims(self.target_dir):
+            claim = store.read_claim(self.target_dir, snap)
+            if snap == cand or claim is None:
                 continue
-            num = fn[2 : -len(".claim")]
-            if not num.isdigit() or int(num) == cand:
-                continue
-            snap = int(num)
-            try:
-                with open(self._claim_path(snap)) as f:
-                    owner = f.read().rpartition(":")[0]
-            except FileNotFoundError:
-                continue
+            owner = claim[0]
             if "@wap:" in owner:
                 swept = self._recover_wap_claim(snap, owner) or swept
             elif cur is not None and snap <= cur:
@@ -625,11 +581,7 @@ class SnapshotUpsertSink:
         had_debris = os.path.isdir(
             self._snapshot_path(snap)
         ) or os.path.exists(self._manifest_path(snap))
-        shutil.rmtree(self._snapshot_path(snap), ignore_errors=True)
-        try:
-            os.unlink(self._manifest_path(snap))
-        except FileNotFoundError:
-            pass
+        self._discard_snapshot(snap)
         if b is not None and int(b.get("reserved") or -1) == snap:
             with open(self._claim_path(snap), "w") as f:
                 f.write(f"@wap:{branch}:")
@@ -644,87 +596,74 @@ class SnapshotUpsertSink:
         return True
 
     def _publish_pointer(self, lineage, batch_id, new_snap: int) -> None:
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{lineage or ''}:{batch_id}:{new_snap}")
-            f.flush()
-            os.fsync(f.fileno())  # survive power loss, not just crash
-        os.replace(tmp, self._pointer)
-        # fsync the directory so the rename itself is durable
-        dfd = os.open(self.target_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        store.write_pointer(self.target_dir, lineage, batch_id, new_snap)
+
+    #: manifest fields a commit inherits from the manifest it builds on
+    #: unless the caller overrides them:
+    #: - n_buckets / buckets — the bucket map: bucket -> snapshot dir
+    #:   holding its current files;
+    #: - gc_watermark — the late-data floor (ISO string for datetimes;
+    #:   process_batch compares it via Spark's string→timestamp cast);
+    #: - schema — the union schema of the committed state, so base
+    #:   buckets read with an EXPLICIT schema (no mergeSchema
+    #:   footer-merge job); absent on legacy targets and after type
+    #:   conflicts, which stay on mergeSchema;
+    #: - deltas — merge-on-read snapshots whose delta dirs hold raw
+    #:   change batches not yet folded into the buckets;
+    #: - blooms — per-bucket bloom filters ({"bits", "hashes",
+    #:   "cols": {col: {bucket: b64}}}) pruning point lookups;
+    #: - zones — per-bucket [min, max] zone maps ({col: {bucket:
+    #:   [lo, hi]}}) pruning range lookups.
+    _CARRIED = (
+        "n_buckets", "buckets", "gc_watermark", "schema", "deltas",
+        "blooms", "zones",
+    )
 
     def _commit(
         self,
         new_snap: int,
-        buckets: dict,
-        n_buckets: int,
+        prev: dict,
         batch_id: int,
-        watermark=None,
-        schema_json: str | None = None,
-        deltas: list[int] | None = None,
-        blooms: dict | None = None,
-        zones: dict | None = None,
         branch: str | None = None,
+        **changes,
     ) -> None:
-        """The snapshot commit protocol, shared by every writer
-        (process_batch / gc_tombstones / compact_buckets): manifest
-        first, pointer last, both atomically — a crash between the two
-        leaves the previous commit fully intact (and is rolled forward
-        by ``recover_interrupted_commit``, since the manifest records
-        the committing lineage/batch).  Callers hold the ``_claim``
-        fence for ``new_snap``, so the pointer can only move forward."""
-        new_manifest = {
-            "n_buckets": n_buckets,
-            "buckets": buckets,
-            # the full commit record, so the pointer is reconstructible
-            "committed_lineage": self.lineage or "",
-            "committed_batch": batch_id,
-        }
+        """The snapshot commit protocol and the ONLY manifest writer:
+        manifest first, pointer last, both atomically — a crash between
+        the two leaves the previous commit fully intact (and is rolled
+        forward by ``recover_interrupted_commit``, since the manifest
+        records the committing lineage/batch).  Callers hold the
+        ``_claim`` fence for ``new_snap``, so the pointer can only move
+        forward.
+
+        The new manifest is ``prev``'s ``_CARRIED`` fields plus the
+        commit record (``committed_lineage`` = this sink's lineage,
+        ``committed_batch``, ``parent``), overridden by ``changes`` —
+        the only fields a caller passes are the ones its commit
+        changes.  An override of None (or an empty deltas / blooms /
+        zones value) drops the field.  The pointer takes the manifest's
+        own commit record."""
+        manifest = {k: prev[k] for k in self._CARRIED if k in prev}
+        manifest["committed_lineage"] = self.lineage or ""
+        manifest["committed_batch"] = batch_id
         # PARENT link: snapshot numbers interleave across concurrently
         # staged branches, so the committed chain is no longer the
         # integer sequence — chain walkers (change feed, ledger) follow
         # parents instead.  Main commits always target committed+1;
         # staged commits chain on the branch head they merged from.
         if branch is None:
-            if new_snap > 0:
-                new_manifest["parent"] = new_snap - 1
+            parent = new_snap - 1 if new_snap > 0 else None
         else:
-            b_head = (self.refs()["branches"].get(branch) or {}).get(
-                "snapshot"
-            )
-            if b_head is not None:
-                new_manifest["parent"] = int(b_head)
-        if watermark is not None:
-            # event-time watermarks arrive as datetime/date: store the
-            # ISO string (json-safe); process_batch's late-data filter
-            # compares it against the timestamp column via Spark's
-            # implicit string→timestamp cast
-            new_manifest["gc_watermark"] = _iso_watermark(watermark)
-        if schema_json is not None:
-            # the union schema of the committed state: lets the next
-            # batch read its base buckets with an EXPLICIT schema (no
-            # mergeSchema footer-merge job).  Absent on legacy targets
-            # and after type conflicts — those stay on mergeSchema.
-            new_manifest["schema"] = schema_json
-        if deltas:
-            # merge-on-read: snapshot numbers whose v=<s>/__delta dirs
-            # hold raw change batches not yet folded into the buckets;
-            # readers compact base+deltas, fold_deltas clears the list
-            new_manifest["deltas"] = deltas
-        if blooms:
-            # per-bucket per-column bloom filters over the committed
-            # base ({"bits", "hashes", "cols": {col: {bucket: b64}}});
-            # probe_buckets/lookup prune point reads with them
-            new_manifest["blooms"] = blooms
-        if zones:
-            # per-bucket per-column [min, max] zone maps folded from
-            # the written parquet footers ({col: {bucket: [lo, hi]}});
-            # zone_probe_buckets/lookup_range prune range reads
-            new_manifest["zones"] = zones
+            parent = (self.refs()["branches"].get(branch) or {}).get("snapshot")
+        manifest["parent"] = None if parent is None else int(parent)
+        manifest.update(changes)
+        manifest = {
+            k: v
+            for k, v in manifest.items()
+            if k in ("n_buckets", "buckets", "committed_lineage", "committed_batch")
+            or v not in (None, [], {})
+        }
+        if "gc_watermark" in manifest:
+            manifest["gc_watermark"] = _iso_watermark(manifest["gc_watermark"])
         # fence FIRST: if another writer already advanced the pointer,
         # fail before touching the manifest — replacing it afterwards
         # would leave the committed pointer describing the loser's map.
@@ -739,12 +678,7 @@ class SnapshotUpsertSink:
                     f"commit fence violated: pointer already at "
                     f"{cur_snap}, refusing to move it back to {new_snap}"
                 )
-        mtmp = self._manifest_path(new_snap) + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump(new_manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(mtmp, self._manifest_path(new_snap))
+        store.write_manifest(self.target_dir, new_snap, manifest)
         if branch is not None:
             # write-audit-publish: the snapshot is complete and durable
             # but INVISIBLE to main readers — advance the branch ref,
@@ -770,32 +704,34 @@ class SnapshotUpsertSink:
 
             self._refs_update(_advance)
             return
-        self._publish_pointer(self.lineage, batch_id, new_snap)
+        self._publish_pointer(
+            manifest["committed_lineage"] or None,
+            manifest["committed_batch"],
+            new_snap,
+        )
         self._release_claim(new_snap)  # no-op for a pre-claim-era caller
 
     def _read_manifest(self, snapshot: int | None) -> dict | None:
         if snapshot is None:
             return None
-        try:
-            with open(self._manifest_path(snapshot)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _has_any_manifest(self) -> bool:
-        """True iff the target has EVER committed a manifest — the
-        discriminator between a true pre-manifest legacy layout (flat
-        ``v=N`` dirs are committed state) and a manifest-era target
-        (a bare ``v=N`` dir is a crashed writer's uncommitted data)."""
-        return any(
-            n.startswith("_MANIFEST_") and n.endswith(".json")
-            for n in os.listdir(self.target_dir)
-        )
+        return store.read_manifest(self.target_dir, snapshot)
 
     def _bucket_col(self, n_buckets: int) -> Column:
         # pmod handles hash()'s negative values (incl. MIN_INT, where
         # abs() would overflow)
         return F.pmod(F.hash(*[F.col(k) for k in self.keys]), F.lit(n_buckets))
+
+    def _state_reader(self, spark: SparkSession, stored_schema: str | None):
+        """Reader for committed state files: the manifest-carried union
+        schema when tracked (missing columns null-fill, no footer-merge
+        job), mergeSchema otherwise (legacy / post-type-conflict)."""
+        if stored_schema is not None:
+            from pyspark.sql import types as T
+
+            return spark.read.schema(
+                T.StructType.fromJson(json.loads(stored_schema))
+            )
+        return spark.read.option("mergeSchema", "true")
 
     def state_at(self, spark: SparkSession, snapshot: int) -> DataFrame | None:
         """Time travel: full state as of any snapshot whose manifest is
@@ -806,16 +742,19 @@ class SnapshotUpsertSink:
         if manifest is None:
             # the flat fallback is ONLY for true pre-manifest legacy
             # targets (no manifest anywhere).  A manifest-era target
-            # with a bare v=N dir is an uncommitted/crashed attempt —
-            # reading it would return partial, never-committed state.
-            if not self._has_any_manifest() and os.path.isdir(
+            # with a bare snapshot dir is an uncommitted/crashed attempt
+            # (or a pointer rolled onto one) — reading it would return
+            # partial, never-committed state.
+            if not store.has_any_manifest(self.target_dir) and os.path.isdir(
                 self._snapshot_path(snapshot)
             ):
                 # pre-manifest flat snapshot (legacy layout)
                 return spark.read.parquet(self._snapshot_path(snapshot))
             raise ValueError(
-                f"snapshot {snapshot} has no retained manifest "
-                f"(expired or never committed)"
+                f"snapshot {snapshot} has no manifest (expired, never "
+                "committed, or a crashed writer's data); run "
+                "recover_interrupted_commit() or roll back to a "
+                "manifest-bearing snapshot"
             )
         deltas = manifest.get("deltas") or []
         if not manifest["buckets"] and not deltas:
@@ -829,10 +768,15 @@ class SnapshotUpsertSink:
             raise ValueError(
                 f"snapshot {snapshot} references expired data dirs: {missing}"
             )
+        # manifest-tracked union schema when available; else mergeSchema
+        # (buckets evolve independently — a batch adding a column only
+        # rewrites ITS buckets, so the state schema is the union of all
+        # live bucket schemas, footer-only cost)
         df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
         if deltas:
             # merge-on-read: deltas hold raw (uncompacted) change rows —
             # compact the union so the contract (one row per key) holds
+            # (the read cost MOR trades for its O(batch) ingest commits)
             df = latest_per_key(df, self.keys, self.order_by)
         return df
 
@@ -936,13 +880,9 @@ class SnapshotUpsertSink:
                     *[self._delta_path(s) for s, _ in delta_run]
                 ).withColumn(
                     "_change_snapshot",
-                    # anchored to the path TAIL: a target_dir that
-                    # itself contains a /v=N/__delta/ segment (clone
-                    # nested under another sink's layout) must not
-                    # mis-stamp every row with the OUTER snapshot
                     F.regexp_extract(
                         F.col("_metadata.file_path"),
-                        r"/v=(\d+)/__delta/[^/]+$",
+                        store.DELTA_FILE_SNAPSHOT_RE,
                         1,
                     ).cast("int"),
                 )
@@ -1083,7 +1023,7 @@ class SnapshotUpsertSink:
         manifest = self._read_manifest(snapshot)
         if manifest is None and not os.path.isdir(self._snapshot_path(snapshot)):
             raise ValueError(f"cannot roll back to unknown snapshot {snapshot}")
-        if manifest is None and self._has_any_manifest():
+        if manifest is None and store.has_any_manifest(self.target_dir):
             # a bare v=N dir on a manifest-era target is a crashed
             # writer's uncommitted attempt — rolling the pointer onto it
             # would make current_state serve partial state
@@ -1151,20 +1091,15 @@ class SnapshotUpsertSink:
         # them forward and fresh writers aren't wedged by dead claims
         # (tags above the target were refused above, so nothing here
         # can be tag-pinned)
-        for d in os.listdir(self.target_dir):
-            name = os.path.basename(d)
-            snap_s = None
-            if name.startswith("_MANIFEST_") and name.endswith(".json"):
-                snap_s = name[len("_MANIFEST_"):-len(".json")]
-            elif name.startswith("v=") and name.endswith(
-                (".claim", ".claim.upgrade")
-            ):
-                snap_s = name[len("v="):].split(".", 1)[0]
-            if snap_s is not None and snap_s.isdigit() and int(snap_s) > snapshot:
-                try:
-                    os.unlink(os.path.join(self.target_dir, name))
-                except FileNotFoundError:
-                    pass
+        for s in store.list_manifests(self.target_dir):
+            if s > snapshot:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(self._manifest_path(s))
+        for s in set(store.list_claims(self.target_dir)) | set(
+            store.list_upgrade_markers(self.target_dir)
+        ):
+            if s > snapshot:
+                self._release_claim(s)
 
     # -- named refs: tags + write-audit-publish branches -------------------
     #
@@ -1180,9 +1115,6 @@ class SnapshotUpsertSink:
     # staging discipline a 100 TB ingest needs so a bad batch is
     # auditable before anyone reads it.
 
-    def _refs_path(self) -> str:
-        return os.path.join(self.target_dir, "_REFS.json")
-
     def refs(self) -> dict:
         """Named refs document: ``{"tags": {name: snapshot},
         "branches": {name: {"base": int, "snapshot": int (head),
@@ -1194,66 +1126,19 @@ class SnapshotUpsertSink:
         "cursors_meta": {name: last_ack_epoch_seconds (observability
         only — lets maintenance.retention_report age an abandoned
         cursor; never read by retention decisions)}}``."""
-        try:
-            with open(self._refs_path()) as f:
-                doc = json.load(f)
-        except FileNotFoundError:
-            doc = {}
-        doc.setdefault("tags", {})
-        doc.setdefault("branches", {})
-        doc.setdefault("cursors", {})
-        doc.setdefault("cursors_meta", {})
-        for b in doc["branches"].values():
-            # legacy single-lane branch refs: staged snapshots were the
-            # contiguous base+1..head range and the reservation base+1
-            if "snaps" not in b:
-                b["snaps"] = list(
-                    range(int(b["base"]) + 1, int(b["snapshot"]) + 1)
-                )
-            if "reserved" not in b:
-                b["reserved"] = int(b["base"]) + 1
-        return doc
+        return store.read_refs(self.target_dir)
 
     def _write_refs(self, doc: dict) -> None:
-        tmp = self._refs_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._refs_path())
-
-    @contextlib.contextmanager
-    def _refs_lock(self):
-        """Exclusive advisory lock serializing every read-modify-write
-        of the refs document.  ``_REFS.json`` is one whole-document
-        file, so two concurrent unlocked updates (two branches'
-        ``_commit`` ref advances, two ``create_branch`` calls, a
-        publish racing a stage) would lose one writer's change — and a
-        lost ``snaps`` entry later makes publish/abort's
-        ``_drop_branch_claim`` treat that recorded staged snapshot as a
-        crashed stage and delete its data.  The O_EXCL claim files
-        fence the DATA directories; this lock fences the refs document
-        those claims are reconciled against.
-
-        ``flock`` rather than an O_EXCL lock file: the kernel releases
-        it on ANY process death (SIGKILL included), so a killed staged
-        writer can never wedge the table the way a leftover lock file
-        would — no staleness heuristics, no breakable-lock races.  The
-        sink already assumes a POSIX filesystem for O_EXCL claims and
-        atomic renames; flock holds on the same class of filesystems.
-        The module-level :func:`refs_lock` is the same lock, takeable
-        without a sink instance (maintenance uses it).
-        """
-        with refs_lock(self.target_dir):
-            yield
+        store.write_refs(self.target_dir, doc)
 
     def _refs_update(self, mutate):
         """Apply ``mutate(doc)`` to the refs document atomically under
         the refs lock: re-READ inside the critical section (never trust
         a copy read before the lock), mutate, write.  ``mutate`` may
         raise to abort — nothing is written.  Returns ``mutate``'s
-        return value."""
-        with self._refs_lock():
+        return value.  The lock (:func:`store.refs_lock`) is a kernel
+        flock, so a killed writer never wedges the table."""
+        with store.refs_lock(self.target_dir):
             doc = self.refs()
             result = mutate(doc)
             self._write_refs(doc)
@@ -1424,21 +1309,13 @@ class SnapshotUpsertSink:
         manifest = self._read_manifest(head)
         if manifest is None:
             raise ValueError(f"branch {branch!r} head {head} lost its manifest")
-        watermark = manifest.get("gc_watermark")
-        if watermark is not None:
-            batch_df = batch_df.filter(
-                F.col(self._order_key()) >= F.lit(watermark)
-            )
-        if self.checks:
-            batch_df = self._enforce_checks(spark, batch_df, batch_id)
         self._merge_into_buckets(
             spark,
-            batch_df,
+            self._admit(spark, batch_df, batch_id, manifest),
             manifest,
             head,
             commit_batch_id=batch_id,
             claim_batch_id=batch_id,
-            watermark=watermark,
             branch=branch,
         )
 
@@ -1647,20 +1524,6 @@ class SnapshotUpsertSink:
                 buckets[bk] = head_m["buckets"][bk]
             else:
                 buckets.pop(bk, None)
-        merged = {
-            "n_buckets": main_m["n_buckets"],
-            "buckets": buckets,
-            "committed_lineage": head_m.get("committed_lineage") or "",
-            "committed_batch": head_m["committed_batch"],
-            # the rebase grafts onto the CURRENT main head — that is
-            # its chain parent (not the branch head it merged in)
-            "parent": cur,
-            # marks this manifest as a rebase merge so a crashed
-            # publish is detected by marker, not recomputation (the
-            # merge may overwrite the branch-head manifest in place
-            # when the lane number is reused)
-            "rebase_of": {"branch": branch, "base": base},
-        }
         # watermark: GC only ever advances it — take the max (ISO
         # strings of one format compare lexicographically); extra
         # not-yet-GC'd tombstones in the staged buckets are harmless
@@ -1669,35 +1532,30 @@ class SnapshotUpsertSink:
             for w in (main_m.get("gc_watermark"), head_m.get("gc_watermark"))
             if w is not None
         ]
-        if wms:
-            merged["gc_watermark"] = max(wms)
-        schema = self._merge_schema_json(
-            main_m.get("schema"), head_m.get("schema")
-        )
-        if schema is not None:
-            merged["schema"] = schema
-        blooms = self._merge_bucket_stats(
-            main_m.get("blooms"), head_m.get("blooms"), ours, nested="cols"
-        )
-        if blooms is not None:
-            merged["blooms"] = blooms
-        zones = self._merge_bucket_stats(
-            main_m.get("zones"), head_m.get("zones"), ours
-        )
-        if zones is not None:
-            merged["zones"] = zones
-        mtmp = self._manifest_path(new_snap) + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump(merged, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(mtmp, self._manifest_path(new_snap))
-        self._publish_pointer(
-            merged["committed_lineage"] or None,
-            merged["committed_batch"],
+        self._commit(
             new_snap,
+            main_m,
+            head_m["committed_batch"],
+            # the pointer takes the branch head's commit record, so the
+            # staged batches' replay guard carries over
+            committed_lineage=head_m.get("committed_lineage") or "",
+            buckets=buckets,
+            gc_watermark=max(wms) if wms else None,
+            schema=self._merge_schema_json(
+                main_m.get("schema"), head_m.get("schema")
+            ),
+            blooms=self._merge_bucket_stats(
+                main_m.get("blooms"), head_m.get("blooms"), ours, bloom=True
+            ),
+            zones=self._merge_bucket_stats(
+                main_m.get("zones"), head_m.get("zones"), ours
+            ),
+            # marks this manifest as a rebase merge so a crashed
+            # publish is detected by marker, not recomputation (the
+            # merge may overwrite the branch-head manifest in place
+            # when the lane number is reused)
+            rebase_of={"branch": branch, "base": base},
         )
-        self._release_claim(new_snap)
         return new_snap
 
     @staticmethod
@@ -1713,39 +1571,37 @@ class SnapshotUpsertSink:
         return _union_schema_json(a, T.StructType.fromJson(json.loads(b)))
 
     @staticmethod
-    def _merge_bucket_stats(main_doc, head_doc, ours: set, nested=None):
-        """Per-bucket manifest statistics (blooms/zones) for a rebase:
-        main's entries for untouched buckets, the branch head's for the
-        staged buckets.  Bloom parameter mismatch drops the doc — the
-        stats are pruning hints, never correctness."""
-        if main_doc is None and head_doc is None:
+    def _merge_bucket_stats(prev, new, replaced, bloom: bool = False):
+        """Per-bucket pruning stats after a commit replaced the files of
+        the ``replaced`` buckets (str ids): ``new``'s entries for those
+        buckets, ``prev``'s for every other bucket.  Zone docs are
+        ``{col: {bucket: [lo, hi]}}``; bloom docs (``bloom=True``) wrap
+        the same map as ``{"bits", "hashes", "cols"}``, and ``prev``'s
+        filters are dropped when their parameters differ from
+        ``new``'s.  Returns None when no entry is left — the stats are
+        pruning hints, never correctness, so a dropped entry only
+        widens a lookup."""
+        if bloom:
+            if prev and new and (prev["bits"], prev["hashes"]) != (
+                new["bits"], new["hashes"]
+            ):
+                prev = None
+            params = new or prev
+            prev, new = (prev or {}).get("cols"), (new or {}).get("cols")
+        out = {
+            c: {b: v for b, v in m.items() if b not in replaced}
+            for c, m in (prev or {}).items()
+        }
+        for c, m in (new or {}).items():
+            out.setdefault(c, {}).update(
+                (b, v) for b, v in m.items() if b in replaced
+            )
+        out = {c: m for c, m in out.items() if m}
+        if not out:
             return None
-        if nested == "cols":  # blooms: {"bits","hashes","cols":{...}}
-            if main_doc is None or head_doc is None:
-                return main_doc or head_doc
-            if main_doc.get("bits") != head_doc.get("bits") or main_doc.get(
-                "hashes"
-            ) != head_doc.get("hashes"):
-                return None
-            cols = {c: dict(m) for c, m in (main_doc.get("cols") or {}).items()}
-            for c, m in (head_doc.get("cols") or {}).items():
-                tgt = cols.setdefault(c, {})
-                for bk in ours:
-                    if bk in m:
-                        tgt[bk] = m[bk]
-                    else:
-                        tgt.pop(bk, None)
-            return dict(main_doc, cols={c: m for c, m in cols.items() if m})
-        # zones: {col: {bucket: [lo, hi]}}
-        cols = {c: dict(m) for c, m in (main_doc or {}).items()}
-        for c, m in (head_doc or {}).items():
-            tgt = cols.setdefault(c, {})
-            for bk in ours:
-                if bk in m:
-                    tgt[bk] = m[bk]
-                else:
-                    tgt.pop(bk, None)
-        return {c: m for c, m in cols.items() if m} or None
+        if bloom:
+            return {"bits": params["bits"], "hashes": params["hashes"], "cols": out}
+        return out
 
     def _drop_branch_claim(
         self, branch: str, recorded: set | None = None
@@ -1755,31 +1611,14 @@ class SnapshotUpsertSink:
         before its ref update), along with any unrecorded
         data/manifest the claim protected."""
         recorded = recorded or set()
-        for fn in os.listdir(self.target_dir):
-            if not (fn.startswith("v=") and fn.endswith(".claim")):
+        for snap in store.list_claims(self.target_dir):
+            claim = store.read_claim(self.target_dir, snap)
+            if snap in recorded or claim is None:
                 continue
-            num = fn[2 : -len(".claim")]
-            if not num.isdigit() or int(num) in recorded:
+            if not claim[0].endswith(f"@wap:{branch}"):
                 continue
-            snap = int(num)
-            path = self._claim_path(snap)
-            try:
-                with open(path) as f:
-                    owner = f.read().rpartition(":")[0]
-            except FileNotFoundError:
-                continue
-            if not owner.endswith(f"@wap:{branch}"):
-                continue
-            shutil.rmtree(self._snapshot_path(snap), ignore_errors=True)
-            for p in (
-                self._manifest_path(snap),
-                path,
-                self._upgrade_marker_path(snap),
-            ):
-                try:
-                    os.unlink(p)
-                except FileNotFoundError:
-                    pass
+            self._discard_snapshot(snap)
+            self._release_claim(snap)
 
     def abort_branch(self, branch: str) -> int:
         """The no-PUBLISH arm: drop every staged snapshot (data dirs,
@@ -1833,11 +1672,7 @@ class SnapshotUpsertSink:
         self._drop_crashed_rebase(branch)
         discarded = 0
         for s in snaps:
-            shutil.rmtree(self._snapshot_path(s), ignore_errors=True)
-            try:
-                os.unlink(self._manifest_path(s))
-            except FileNotFoundError:
-                pass
+            self._discard_snapshot(s)
             self._release_claim(s)
             discarded += 1
         # the lane reservation and any stage that crashed before its
@@ -1851,65 +1686,25 @@ class SnapshotUpsertSink:
         behind (marker ``rebase_of.branch``), plus the main-lane claim
         its crashed publish held."""
         cur = self.committed_snapshot()
-        for fn in os.listdir(self.target_dir):
-            if not (fn.startswith("_MANIFEST_") and fn.endswith(".json")):
-                continue
-            num = fn[len("_MANIFEST_") : -len(".json")]
-            if not num.isdigit():
-                continue
-            snap = int(num)
+        for snap in store.list_manifests(self.target_dir):
             if cur is not None and snap <= cur:
                 continue  # committed chain: never touch
             try:
-                with open(os.path.join(self.target_dir, fn)) as f:
-                    m = json.load(f)
-            except (FileNotFoundError, json.JSONDecodeError):
+                m = self._read_manifest(snap)
+            except json.JSONDecodeError:
                 continue
-            if ((m.get("rebase_of") or {}).get("branch")) != branch:
+            if ((m or {}).get("rebase_of") or {}).get("branch") != branch:
                 continue
-            try:
-                os.unlink(os.path.join(self.target_dir, fn))
-            except FileNotFoundError:
-                pass
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(self._manifest_path(snap))
             self._release_claim(snap)
 
     def current_state(self, spark: SparkSession) -> DataFrame | None:
         """Full state incl. delete tombstones (one row per ever-seen key)
-        — one multi-path scan over every bucket's current file set."""
+        — one multi-path scan over every bucket's current file set; the
+        same read as ``state_at`` of the committed snapshot."""
         snap = self.committed_snapshot()
-        if snap is None:
-            return None
-        manifest = self._read_manifest(snap)
-        if manifest is None:
-            # same any-manifest guard as state_at: after a rollback_to
-            # onto a crashed writer's uncommitted v=N dir, serving the
-            # flat files would expose partial never-committed state
-            if self._has_any_manifest():
-                raise ValueError(
-                    f"committed snapshot {snap} has no manifest on a "
-                    "manifest-era target (crashed or rolled-back writer); "
-                    "run recover_interrupted_commit() or roll back to a "
-                    "manifest-bearing snapshot"
-                )
-            # pre-manifest layout: whole-snapshot dir
-            return spark.read.parquet(self._snapshot_path(snap))
-        deltas = manifest.get("deltas") or []
-        if not manifest["buckets"] and not deltas:
-            return None
-        paths = [
-            self._bucket_path(at_snap, int(b))
-            for b, at_snap in manifest["buckets"].items()
-        ] + [self._delta_path(s) for s in deltas]
-        # manifest-tracked union schema when available; else mergeSchema
-        # (buckets evolve independently — a batch adding a column only
-        # rewrites ITS buckets, so the state schema is the union of all
-        # live bucket schemas, footer-only cost)
-        df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        if deltas:
-            # merge-on-read: compact base+deltas on the fly (the read
-            # cost MOR trades for its O(batch) ingest commits)
-            df = latest_per_key(df, self.keys, self.order_by)
-        return df
+        return None if snap is None else self.state_at(spark, snap)
 
     def current_table(self, spark: SparkSession) -> DataFrame | None:
         """The user-visible table: tombstones filtered out."""
@@ -1978,20 +1773,29 @@ class SnapshotUpsertSink:
         falls back to the full merge-on-read scan (fold_deltas() first
         to restore pruned lookups), mirroring the read-optimized vs
         real-time query split of Hudi/Iceberg."""
-        snap = self.committed_snapshot()
-        manifest = self._read_manifest(snap)
+        return self._pruned_read(
+            spark,
+            F.col(col).cast("string") == F.lit(value).cast("string"),
+            lambda m: self.probe_buckets(spark, col, value, manifest=m),
+        )
+
+    def _pruned_read(self, spark: SparkSession, match: Column, probe):
+        """The committed table filtered on ``match``, reading only the
+        buckets ``probe(manifest)`` returns.  The manifest is read ONCE
+        so candidates and file paths come from one commit.  Pending MOR
+        deltas carry no pruning stats, so they force the full scan; an
+        empty candidate set is provably empty."""
+        manifest = self._read_manifest(self.committed_snapshot())
         if manifest is None or not manifest.get("buckets"):
             return None
-        match = F.col(col).cast("string") == F.lit(value).cast("string")
         if manifest.get("deltas"):
             return self.current_table(spark).filter(match)
-        cand = self.probe_buckets(spark, col, value, manifest=manifest)
         paths = [
             self._bucket_path(manifest["buckets"][str(b)], b)
-            for b in cand
+            for b in probe(manifest)
             if str(b) in manifest["buckets"]
         ]
-        if not paths:  # every bucket bloom-cleared: provably no match
+        if not paths:
             return self.current_table(spark).filter(F.lit(False))
         df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
         return df.filter(F.col(self.op_col) != "d").filter(match)
@@ -2027,23 +1831,11 @@ class SnapshotUpsertSink:
         table.  Pending MOR deltas carry no zones, so the lookup falls
         back to the full merge-on-read scan (fold_deltas() first to
         restore pruning), mirroring lookup()."""
-        snap = self.committed_snapshot()
-        manifest = self._read_manifest(snap)
-        if manifest is None or not manifest.get("buckets"):
-            return None
-        match = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        if manifest.get("deltas"):
-            return self.current_table(spark).filter(match)
-        cand = self.zone_probe_buckets(col, lo, hi, manifest=manifest)
-        paths = [
-            self._bucket_path(manifest["buckets"][str(b)], b)
-            for b in cand
-            if str(b) in manifest["buckets"]
-        ]
-        if not paths:  # every bucket zone-cleared: provably no match
-            return self.current_table(spark).filter(F.lit(False))
-        df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        return df.filter(F.col(self.op_col) != "d").filter(match)
+        return self._pruned_read(
+            spark,
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
+            lambda m: self.zone_probe_buckets(col, lo, hi, manifest=m),
+        )
 
     # -- the foreachBatch body ------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -2089,20 +1881,10 @@ class SnapshotUpsertSink:
             legacy_base = spark.read.parquet(self._snapshot_path(committed_snap))
         if manifest is None:
             manifest = {"n_buckets": self.n_buckets, "buckets": {}}
-
-        # late-data floor: once tombstones older than the GC watermark
-        # are gone, changes older than it MUST be dropped — otherwise a
-        # straggler update could resurrect a GC'd deleted key
-        watermark = manifest.get("gc_watermark")
-        if watermark is not None:
-            batch_df = batch_df.filter(F.col(self._order_key()) >= F.lit(watermark))
-
-        if self.checks:
-            batch_df = self._enforce_checks(spark, batch_df, batch_id)
-
+        batch_df = self._admit(spark, batch_df, batch_id, manifest)
         if self.merge_on_read and legacy_base is None:
             n_pending = self._append_delta(
-                spark, batch_df, manifest, committed_snap, batch_id, watermark
+                spark, batch_df, manifest, committed_snap, batch_id
             )
             if self.fold_deltas_every and n_pending >= self.fold_deltas_every:
                 self.fold_deltas(spark)
@@ -2121,12 +1903,22 @@ class SnapshotUpsertSink:
             committed_snap,
             commit_batch_id=batch_id,
             claim_batch_id=batch_id,
-            watermark=watermark,
             legacy_base=legacy_base,
         )
 
-    def _quarantine_dir(self) -> str:
-        return os.path.join(self.target_dir, "_quarantine")
+    def _admit(
+        self, spark: SparkSession, batch_df: DataFrame, batch_id: int, manifest: dict
+    ) -> DataFrame:
+        """The rows of a batch a commit on ``manifest`` may merge."""
+        # late-data floor: once tombstones older than the GC watermark
+        # are gone, changes older than it MUST be dropped — otherwise a
+        # straggler update could resurrect a GC'd deleted key
+        watermark = manifest.get("gc_watermark")
+        if watermark is not None:
+            batch_df = batch_df.filter(F.col(self._order_key()) >= F.lit(watermark))
+        if self.checks:
+            batch_df = self._enforce_checks(spark, batch_df, batch_id)
+        return batch_df
 
     def _enforce_checks(
         self, spark: SparkSession, batch_df: DataFrame, batch_id: int
@@ -2165,7 +1957,7 @@ class SnapshotUpsertSink:
         if not bad.isEmpty():
             bad.withColumn(
                 "__batch", F.lit(batch_id).cast("bigint")
-            ).write.mode("append").parquet(self._quarantine_dir())
+            ).write.mode("append").parquet(store.quarantine_path(self.target_dir))
         return tagged.filter(F.col("__check").isNull()).drop("__check")
 
     def quarantine_table(self, spark: SparkSession) -> DataFrame | None:
@@ -2178,7 +1970,7 @@ class SnapshotUpsertSink:
             # a single sampled footer would silently drop historical
             # violator columns from the view.
             return spark.read.option("mergeSchema", "true").parquet(
-                self._quarantine_dir()
+                store.quarantine_path(self.target_dir)
             )
         except Exception:
             return None
@@ -2191,7 +1983,6 @@ class SnapshotUpsertSink:
         committed_snap: int | None,
         commit_batch_id: int,
         claim_batch_id: int | None,
-        watermark,
         legacy_base: DataFrame | None = None,
         branch: str | None = None,
     ) -> None:
@@ -2210,22 +2001,6 @@ class SnapshotUpsertSink:
             tagged = legacy_base.withColumn("__bucket", bucket).unionByName(
                 tagged, allowMissingColumns=True
             )
-        # touched-bucket probe on the RAW batch, not the compacted
-        # pipeline: compaction keeps (at least) one row per key, so
-        # the raw batch's key-hash bucket set IS the compacted
-        # set — a narrow projection + partial-aggregated distinct
-        # costs a fraction of re-running the window compaction,
-        # which used to be a second action over the whole batch
-        # (and forced a persist).  The legacy-migration batch is
-        # the one exception: it must rewrite EVERY legacy bucket.
-        probe = (
-            legacy_base.withColumn("__bucket", bucket).unionByName(
-                batch_df.withColumn("__bucket", bucket),
-                allowMissingColumns=True,
-            )
-            if legacy_base is not None
-            else batch_df.withColumn("__bucket", bucket)
-        )
         t_setup = time.time()
         # AQE off for the sink's two fixed-shape jobs: both are
         # explicitly partitioned (repartition(n_buckets) / a 2-stage
@@ -2239,9 +2014,16 @@ class SnapshotUpsertSink:
             # distinct's final stage launches shuffle.partitions tasks
             # to return ≤ n_buckets rows — collect_set partial-aggs
             # ≤ n_buckets values per input partition into ONE reduce
-            # task (measured ~2x less probe latency per micro-batch)
+            # task (measured ~2x less probe latency per micro-batch).
+            # The probe runs on the RAW batch, not the compacted
+            # pipeline: compaction keeps (at least) one row per key, so
+            # the raw batch's key-hash bucket set IS the compacted set —
+            # a narrow projection + partial-aggregated distinct costs a
+            # fraction of re-running the window compaction.  The
+            # legacy-migration batch probes its whole legacy base too:
+            # it must rewrite EVERY legacy bucket.
             touched = sorted(
-                probe.agg(F.collect_set("__bucket")).collect()[0][0]
+                tagged.agg(F.collect_set("__bucket")).collect()[0][0]
             )
             t_probe = time.time()
             base_paths = [
@@ -2259,16 +2041,10 @@ class SnapshotUpsertSink:
                 # union schema, read with it EXPLICITLY (missing
                 # columns null-fill) instead of paying the mergeSchema
                 # footer-merge job every micro-batch.
-                if stored_schema is not None:
-                    from pyspark.sql import types as T
-
-                    reader = spark.read.schema(
-                        T.StructType.fromJson(json.loads(stored_schema))
-                    )
-                else:
-                    reader = spark.read.option("mergeSchema", "true")
-                base = reader.parquet(*base_paths).withColumn(
-                    "__bucket", bucket
+                base = (
+                    self._state_reader(spark, stored_schema)
+                    .parquet(*base_paths)
+                    .withColumn("__bucket", bucket)
                 )
                 unioned = base.unionByName(tagged, allowMissingColumns=True)
             else:
@@ -2371,11 +2147,10 @@ class SnapshotUpsertSink:
                                 # real same-branch conflict, not a lane
                                 # collision: surface it
                                 raise
-                            try:
-                                with open(self._claim_path(new_snap)) as cf:
-                                    holder = cf.read().rpartition(":")[0]
-                            except FileNotFoundError:
-                                holder = ""
+                            holder = (
+                                store.read_claim(self.target_dir, new_snap)
+                                or ("",)
+                            )[0]
                             if holder.endswith(f"@wap:{branch}"):
                                 # the colliding claim is OUR OWN
                                 # branch's: a concurrent second writer
@@ -2410,46 +2185,20 @@ class SnapshotUpsertSink:
                             f"could not allocate a staged snapshot lane "
                             f"for branch {branch!r} after 64 attempts"
                         )
-            snap_dir = self._snapshot_path(new_snap)
-            # data first (always a fresh directory — never one being
-            # read); static overwrite truncates any orphan files a
-            # crashed attempt left, regardless of the session's
-            # partitionOverwriteMode.  Committer algorithm v2 commits
-            # task files straight into the destination (no job-commit
-            # rename pass) — crash-orphans are already handled by the
-            # static overwrite + the manifest fence, so v1's rename
-            # ceremony buys nothing here.  Measured ~0.14 s/batch.
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
-            )
+            # data first (always a fresh directory — never one being read)
+            rewritten = self._write_buckets(merged, new_snap)
         t_write = time.time()
         # … then manifest (rewritten buckets point at new_snap, all
         # others keep their byte-identical files) + pointer
         new_buckets = dict(manifest["buckets"])
-        rewritten = self._written_buckets(snap_dir)
         for b in rewritten:
             new_buckets[str(b)] = new_snap
-        # bloom bookkeeping: a rewritten bucket's old filter is STALE
-        # (rows were added) — drop it, then install the fresh one when
-        # the observation computed it.  Untouched buckets keep theirs.
-        prev_bloom = manifest.get("blooms") or {}
-        if prev_bloom and (
-            prev_bloom.get("bits") != self.bloom_bits
-            or prev_bloom.get("hashes") != self.bloom_hashes
-        ):
-            prev_bloom = {}  # parameter change: carried filters unusable
-        blooms = {
-            col: dict(m) for col, m in (prev_bloom.get("cols") or {}).items()
-        }
-        for col in list(blooms):
-            for b in rewritten:
-                blooms[col].pop(str(b), None)
+        # bucket stats: a rewritten bucket's carried bloom filter / zone
+        # is STALE (rows were added) — it is replaced by the fresh one
+        # the write computed (bloom positions observed by the write job,
+        # zones folded from the written footers); untouched buckets
+        # keep theirs
+        fresh_blooms: dict[str, dict[str, str]] = {}
         if bloom_obs is not None:
             got = bloom_obs.get  # blocks until the write job finished
             for c in bloom_cols_present:
@@ -2461,57 +2210,42 @@ class SnapshotUpsertSink:
                             bkt, bytearray(self.bloom_bits // 8)
                         )
                         buf[bit >> 3] |= 1 << (bit & 7)
-                col_map = blooms.setdefault(c, {})
-                for bkt, buf in fresh.items():
-                    col_map[str(bkt)] = base64.b64encode(bytes(buf)).decode()
-        bloom_doc = (
-            {
-                "bits": self.bloom_bits,
-                "hashes": self.bloom_hashes,
-                "cols": {c: m for c, m in blooms.items() if m},
-            }
-            if any(m for m in blooms.values())
+                fresh_blooms[c] = {
+                    str(bkt): base64.b64encode(bytes(buf)).decode()
+                    for bkt, buf in fresh.items()
+                }
+        replaced = {str(b) for b in rewritten}
+        fresh_zones = (
+            _footer_zones(
+                {b: self._bucket_path(new_snap, b) for b in rewritten},
+                self.zone_cols,
+            )
+            if self.zone_cols
             else None
         )
-        # zone bookkeeping mirrors blooms: rewritten buckets' carried
-        # ranges are stale — replace them with ranges folded from the
-        # freshly written footers; untouched buckets keep theirs
-        zones_doc = None
-        if self.zone_cols or manifest.get("zones"):
-            zones = {
-                col: dict(m)
-                for col, m in (manifest.get("zones") or {}).items()
-            }
-            for col in list(zones):
-                for b in rewritten:
-                    zones[col].pop(str(b), None)
-            if self.zone_cols:
-                fresh_zones = _footer_zones(
-                    snap_dir, rewritten, self.zone_cols
-                )
-                for col, m in fresh_zones.items():
-                    zones.setdefault(col, {}).update(m)
-            zones_doc = {c: m for c, m in zones.items() if m} or None
-        if stored_schema is None and manifest["buckets"]:
-            # legacy target predating schema tracking: untouched buckets
-            # may hold columns no tracked commit ever saw — never start
-            # tracking mid-life, stay on the mergeSchema path
-            schema_json = None
-        else:
-            schema_json = _union_schema_json(stored_schema, merged.schema)
-        # deltas intentionally omitted: a bucket merge consumes any
-        # pending deltas (fold_deltas routes here), so the new manifest
-        # starts with an empty delta list
         self._commit(
             new_snap,
-            new_buckets,
-            n_buckets,
+            manifest,
             commit_batch_id,
-            watermark,
-            schema_json,
-            blooms=bloom_doc,
-            zones=zones_doc,
             branch=branch,
+            buckets=new_buckets,
+            schema=self._next_schema(manifest, merged.schema),
+            # a bucket merge consumes any pending deltas (fold_deltas
+            # routes here), so the new manifest starts with none
+            deltas=None,
+            blooms=self._merge_bucket_stats(
+                manifest.get("blooms"),
+                {
+                    "bits": self.bloom_bits,
+                    "hashes": self.bloom_hashes,
+                    "cols": fresh_blooms,
+                },
+                replaced,
+                bloom=True,
+            ),
+            zones=self._merge_bucket_stats(
+                manifest.get("zones"), fresh_zones, replaced
+            ),
         )
         # per-phase wall clock of the LAST committed batch — the sink's
         # own latency breakdown (T8 observability; tools/stream_bench.py
@@ -2523,26 +2257,43 @@ class SnapshotUpsertSink:
             "n_touched": len(touched),
         }
 
-    # -- merge-on-read deltas -------------------------------------------
-    def _delta_path(self, snapshot: int) -> str:
-        return os.path.join(self._snapshot_path(snapshot), "__delta")
+    def _write_buckets(self, df: DataFrame, snapshot: int) -> set[int]:
+        """THE bucket writer: write ``df`` (carrying ``__bucket``) as one
+        partition dir per bucket under snapshot ``snapshot``'s dir and
+        return the bucket ids that materialized (an empty bucket writes
+        no dir).  Static overwrite truncates any orphan files a crashed
+        attempt left, regardless of the session's
+        partitionOverwriteMode.  Committer algorithm v2 commits task
+        files straight into the destination (no job-commit rename
+        pass) — crash-orphans are already handled by the static
+        overwrite + the manifest fence, so v1's rename ceremony buys
+        nothing here.  Measured ~0.14 s/batch."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+            .partitionBy("__bucket")
+            .parquet(self._snapshot_path(snapshot))
+        )
+        return store.written_buckets(self.target_dir, snapshot)
 
+    @staticmethod
+    def _next_schema(manifest: dict, written_schema) -> str | None:
+        """The state schema a commit writing ``written_schema`` records:
+        the union with the tracked one — except on a legacy target
+        predating schema tracking, whose untouched buckets may hold
+        columns no tracked commit ever saw: never start tracking
+        mid-life, stay on the mergeSchema path."""
+        stored = manifest.get("schema")
+        if stored is None and manifest["buckets"]:
+            return None
+        return _union_schema_json(stored, written_schema)
+
+    # -- merge-on-read deltas -------------------------------------------
     def pending_deltas(self) -> list[int]:
         """Snapshot numbers of committed-but-unfolded MOR deltas."""
         manifest = self._read_manifest(self.committed_snapshot())
         return list((manifest or {}).get("deltas") or [])
-
-    def _state_reader(self, spark: SparkSession, stored_schema: str | None):
-        """Reader for committed state files: the manifest-carried union
-        schema when tracked (missing columns null-fill, no footer-merge
-        job), mergeSchema otherwise (legacy / post-type-conflict)."""
-        if stored_schema is not None:
-            from pyspark.sql import types as T
-
-            return spark.read.schema(
-                T.StructType.fromJson(json.loads(stored_schema))
-            )
-        return spark.read.option("mergeSchema", "true")
 
     def _append_delta(
         self,
@@ -2551,16 +2302,17 @@ class SnapshotUpsertSink:
         manifest: dict,
         committed_snap: int | None,
         batch_id: int,
-        watermark,
     ) -> int:
         """The merge-on-read fast path: write the raw change batch to
-        ``v=<snap>/__delta`` — ONE job, zero shuffle, no base read —
-        and commit a manifest whose bucket map is unchanged and whose
+        the snapshot's delta dir — ONE job, zero shuffle, no base read
+        — and commit a manifest whose bucket map is unchanged and whose
         delta list grows by this snapshot.  Crash/replay safety is the
         same claim-fence + manifest-then-pointer protocol as the
         bucketed write (a replayed batch deterministically rewrites the
-        same delta dir).  Returns the number of pending deltas after
-        this commit."""
+        same delta dir).  The bucketed BASE is untouched, so its bloom
+        filters and zone maps stay exactly valid (lookups scan the
+        un-bloomed deltas regardless).  Returns the number of pending
+        deltas after this commit."""
         t0 = time.time()
         new_snap = (committed_snap if committed_snap is not None else -1) + 1
         self._claim(new_snap, batch_id)  # writer fence, before any data
@@ -2573,27 +2325,13 @@ class SnapshotUpsertSink:
                 .parquet(self._delta_path(new_snap))
             )
         t_write = time.time()
-        stored_schema = manifest.get("schema")
-        if stored_schema is None and manifest["buckets"]:
-            schema_json = None  # legacy target: stay on mergeSchema
-        else:
-            schema_json = _union_schema_json(stored_schema, batch_df.schema)
         deltas = list(manifest.get("deltas") or []) + [new_snap]
         self._commit(
             new_snap,
-            dict(manifest["buckets"]),
-            manifest["n_buckets"],
+            manifest,
             batch_id,
-            watermark,
-            schema_json,
-            deltas,
-            # the bucketed BASE is untouched by a delta append, so its
-            # bloom filters stay exactly valid (lookup() must — and
-            # does — scan the un-bloomed deltas regardless)
-            blooms=manifest.get("blooms"),
-            # same for zone maps: lookup_range falls back to the full
-            # merge-on-read scan while deltas are outstanding
-            zones=manifest.get("zones"),
+            schema=self._next_schema(manifest, batch_df.schema),
+            deltas=deltas,
         )
         self.last_batch_timings = {
             "probe_s": 0.0,
@@ -2627,7 +2365,6 @@ class SnapshotUpsertSink:
             committed_snap,
             commit_batch_id=committed_batch,
             claim_batch_id=None,  # maintenance claim, never a live batch
-            watermark=manifest.get("gc_watermark"),
         )
         return len(deltas)
 
@@ -2651,10 +2388,7 @@ class SnapshotUpsertSink:
                 f"branch:{name}"
             )
         rows = []
-        for d in sorted(os.listdir(self.target_dir)):
-            if not (d.startswith("v=") and d.split("=", 1)[1].isdigit()):
-                continue
-            snap = int(d.split("=", 1)[1])
+        for snap in store.list_snapshots(self.target_dir):
             manifest = self._read_manifest(snap)
             rewritten = sum(
                 1 for b, s in (manifest or {}).get("buckets", {}).items() if s == snap
@@ -2722,13 +2456,7 @@ class SnapshotUpsertSink:
         rows = []
         prev_batch: int | None = None
         prev_lineage: str | None = None
-        for snap in sorted(
-            int(x[len("_MANIFEST_") : -len(".json")])
-            for x in os.listdir(self.target_dir)
-            if x.startswith("_MANIFEST_")
-            and x.endswith(".json")
-            and x[len("_MANIFEST_") : -len(".json")].isdigit()
-        ):
+        for snap in store.list_manifests(self.target_dir):
             # manifests, not v= dirs: a REBASE publish is a
             # manifest-only commit (no data dir of its own)
             if chain_floor is not None and (
@@ -2777,19 +2505,13 @@ class SnapshotUpsertSink:
         manifest = self._read_manifest(self.committed_snapshot())
         rows = []
         for b, snap in ((manifest or {}).get("buckets") or {}).items():
-            bdir = self._bucket_path(snap, int(b))
-            for fn in sorted(os.listdir(bdir)):
-                if fn.endswith(".parquet"):
-                    p = os.path.join(bdir, fn)
-                    rows.append((int(b), snap, p, os.path.getsize(p)))
+            for p in store.data_files(self._bucket_path(snap, b)):
+                rows.append((int(b), snap, p, os.path.getsize(p)))
         # merge-on-read deltas are live state too: bucket=NULL (a delta
         # file holds rows of ANY bucket until fold_deltas sorts them)
         for snap in (manifest or {}).get("deltas") or []:
-            ddir = self._delta_path(snap)
-            for fn in sorted(os.listdir(ddir)):
-                if fn.endswith(".parquet"):
-                    p = os.path.join(ddir, fn)
-                    rows.append((None, snap, p, os.path.getsize(p)))
+            for p in store.data_files(self._delta_path(snap)):
+                rows.append((None, snap, p, os.path.getsize(p)))
         return spark.createDataFrame(
             rows, "bucket int, snapshot int, path string, size_bytes long"
         )
@@ -2844,12 +2566,11 @@ class SnapshotUpsertSink:
         manifest = self._read_manifest(committed_snap)
         if manifest is None or not manifest["buckets"]:
             return []
-        todo = []
-        for b, snap in manifest["buckets"].items():
-            bdir = self._bucket_path(snap, int(b))
-            n_files = sum(1 for f in os.listdir(bdir) if f.endswith(".parquet"))
-            if n_files > min_files:
-                todo.append(int(b))
+        todo = [
+            int(b)
+            for b, snap in manifest["buckets"].items()
+            if len(store.data_files(self._bucket_path(snap, b))) > min_files
+        ]
         if not todo:
             return []
         new_snap = committed_snap + 1
@@ -2860,25 +2581,17 @@ class SnapshotUpsertSink:
         # The _commit manifest still records committed_batch so the
         # replay guard is preserved.
         self._claim(new_snap, None)  # writer fence
-        snap_dir = self._snapshot_path(new_snap)
         for b in sorted(todo):
             df = spark.read.parquet(self._bucket_path(manifest["buckets"][str(b)], b))
             df.coalesce(files_per_bucket).write.mode("overwrite").parquet(
-                os.path.join(snap_dir, f"__bucket={b}")
+                self._bucket_path(new_snap, b)
             )
-        new_buckets = dict(manifest["buckets"])
-        for b in todo:
-            new_buckets[str(b)] = new_snap
+        # same rows, fewer files: schema, blooms and zones carry over
         self._commit(
             new_snap,
-            new_buckets,
-            manifest["n_buckets"],
+            manifest,
             committed_batch,
-            manifest.get("gc_watermark"),
-            manifest.get("schema"),  # compaction never changes the schema
-            # same rows, fewer files: the carried blooms stay exact
-            blooms=manifest.get("blooms"),
-            zones=manifest.get("zones"),  # same rows: ranges unchanged
+            buckets={**manifest["buckets"], **{str(b): new_snap for b in todo}},
         )
         return sorted(todo)
 
@@ -2922,34 +2635,25 @@ class SnapshotUpsertSink:
             return committed_snap
         new_snap = committed_snap + 1
         self._claim(new_snap, None)  # maintenance claim (batch_id=None)
-        snap_dir = self._snapshot_path(new_snap)
-        os.makedirs(snap_dir, exist_ok=True)
+        os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
         bucket = self._bucket_col(n_buckets_new)
         # tombstones ride along (current_state, not current_table):
         # their late-straggler protection must survive the rewrite
         state = self.current_state(spark).withColumn("__bucket", bucket)
         with _aqe_disabled(spark):
-            (
-                state.repartition(n_buckets_new, F.col("__bucket"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
+            written = self._write_buckets(
+                state.repartition(n_buckets_new, F.col("__bucket")), new_snap
             )
-        new_buckets = {
-            str(b): new_snap for b in self._written_buckets(snap_dir)
-        }
         self._commit(
             new_snap,
-            new_buckets,
-            n_buckets_new,
+            manifest,
             committed_batch,
-            manifest.get("gc_watermark"),
-            manifest.get("schema"),  # rebucketing never changes the schema
-            # blooms intentionally absent: keyed by the old bucket map
+            n_buckets=n_buckets_new,
+            buckets={str(b): new_snap for b in written},
+            # keyed by the old bucket map: reusing them would prune
+            # the wrong buckets
+            blooms=None,
+            zones=None,
         )
         self.n_buckets = n_buckets_new
         return new_snap
@@ -2984,7 +2688,7 @@ class SnapshotUpsertSink:
             )
         if os.path.isdir(target_dir) and os.listdir(target_dir):
             # refuse ANY non-empty target, not just a published one: a
-            # clone that crashed mid-link leaves files but no _VERSION,
+            # clone that crashed mid-link leaves files but no pointer,
             # and retrying over them would hit its own hardlinks
             # (FileExistsError → copy fallback → SameFileError) — an
             # unretryable mess; an unrelated directory must never be
@@ -3005,23 +2709,17 @@ class SnapshotUpsertSink:
                 try:
                     os.link(s, t)
                 except OSError:  # cross-device / no-hardlink FS
-                    import shutil
-
                     shutil.copy2(s, t)
 
-        deltas = manifest.get("deltas") or []
         for b, at_snap in manifest["buckets"].items():
             _link_tree(
-                self._bucket_path(at_snap, int(b)),
-                os.path.join(
-                    target_dir, f"v={at_snap}", f"__bucket={int(b)}"
-                ),
+                self._bucket_path(at_snap, b),
+                store.bucket_path(target_dir, at_snap, b),
             )
-        for s in deltas:
-            _link_tree(
-                self._delta_path(s),
-                os.path.join(target_dir, f"v={s}", "__delta"),
-            )
+        for s in manifest.get("deltas") or []:
+            _link_tree(self._delta_path(s), store.delta_path(target_dir, s))
+        # every table setting carries over, so the clone enforces the
+        # same CHECK constraints and keeps the same pruning stats
         clone = SnapshotUpsertSink(
             target_dir,
             keys=self.keys,
@@ -3034,17 +2732,23 @@ class SnapshotUpsertSink:
             bloom_cols=self.bloom_cols,
             bloom_bits=self.bloom_bits,
             bloom_hashes=self.bloom_hashes,
+            checks=self.checks,
+            check_mode=self.check_mode,
+            zone_cols=self.zone_cols,
+            sort_within_bucket=self.sort_within_bucket,
         )
-        # one manifest (the committed snapshot, verbatim — bucket map,
-        # schema, watermark, blooms, deltas all carry over), then the
-        # pointer: the clone is immediately readable and writable
-        mtmp = clone._manifest_path(committed_snap) + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(mtmp, clone._manifest_path(committed_snap))
-        clone._publish_pointer(lineage, committed_batch, committed_snap)
+        # one manifest (the committed snapshot's — bucket map, schema,
+        # watermark, blooms, zones, deltas, chain links all carry over;
+        # its commit record is the source pointer's), then the pointer:
+        # the clone is immediately readable and writable
+        clone._commit(
+            committed_snap,
+            manifest,
+            committed_batch,
+            committed_lineage=lineage or "",
+            parent=manifest.get("parent"),
+            rebase_of=manifest.get("rebase_of"),
+        )
         return clone
 
     # -- tombstone retention --------------------------------------------
@@ -3118,13 +2822,12 @@ class SnapshotUpsertSink:
         # replay guard is preserved.
         self._claim(new_snap, None)  # writer fence
         new_buckets = dict(manifest["buckets"])
-        snap_dir = self._snapshot_path(new_snap)
         # the snapshot dir exists even when no bucket is rewritten (a
         # watermark-only commit) so snapshots_table sees every snapshot
-        os.makedirs(snap_dir, exist_ok=True)
+        os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
         if touched:
             keep = (
-                spark.read.option("mergeSchema", "true")
+                self._state_reader(spark, manifest.get("schema"))
                 .parquet(
                     *[self._bucket_path(manifest["buckets"][str(b)], b) for b in touched]
                 )
@@ -3136,38 +2839,27 @@ class SnapshotUpsertSink:
                 )
                 .withColumn("__bucket", bucket)
             )
-            (
-                keep.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
-            )
-            written = self._written_buckets(snap_dir)
+            written = self._write_buckets(keep, new_snap)
             for b in touched:
                 if b in written:
                     new_buckets[str(b)] = new_snap
                 else:
                     # bucket held nothing but expired tombstones
                     new_buckets.pop(str(b), None)
+        # GC only REMOVES rows: bloom filters and zones over a superset
+        # of the remaining rows can only over-approximate — the carried
+        # stats stay correct (false positives / over-scan, never a miss)
         self._commit(
             new_snap,
-            new_buckets,
-            n_buckets,
+            manifest,
             committed_batch,
-            watermark,
-            manifest.get("schema"),  # GC never changes the schema
-            # GC only REMOVES rows: a bloom filter over a superset of
-            # the remaining rows can only over-approximate — carried
-            # filters stay correct (false positives, never negatives)
-            blooms=manifest.get("blooms"),
-            zones=manifest.get("zones"),  # superset ranges: over-scan only
+            buckets=new_buckets,
+            gc_watermark=watermark,
         )
         return n_expired
 
 
-def _footer_zones(
-    snap_dir: str, buckets: set[int], zone_cols: list[str]
-) -> dict:
+def _footer_zones(bucket_dirs: dict[int, str], zone_cols: list[str]) -> dict:
     """Fold per-bucket [min, max] for ``zone_cols`` out of the parquet
     FOOTERS of freshly written bucket files — pyarrow metadata only,
     no data read, no Spark job.  v1 domain guard: integer and string
@@ -3180,14 +2872,9 @@ def _footer_zones(
     import pyarrow.types as patypes
 
     out: dict[str, dict[str, list]] = {}
-    for b in buckets:
-        bdir = os.path.join(snap_dir, f"__bucket={b}")
+    for b, bdir in bucket_dirs.items():
         try:
-            files = [
-                os.path.join(bdir, f)
-                for f in os.listdir(bdir)
-                if f.endswith(".parquet")
-            ]
+            files = store.data_files(bdir)
         except FileNotFoundError:
             continue
         per_col: dict[str, list] = {}
@@ -3306,42 +2993,6 @@ def _union_schema_json(prev_json: str | None, new_schema) -> str | None:
         seen.add(f["name"])
     out.extend(f for n, f in new_fields.items() if n not in seen)
     return json.dumps({"type": "struct", "fields": out})
-
-
-def manifest_path(target_dir: str, snapshot: int) -> str:
-    """Canonical manifest filename for a snapshot — shared with
-    maintenance.expire_snapshots so retention and the sink can never
-    disagree about the layout."""
-    return os.path.join(target_dir, f"_MANIFEST_{snapshot}.json")
-
-
-def parse_version_pointer(target_dir: str) -> tuple[str | None, int | None, int | None]:
-    """Read a sink's commit pointer without constructing the sink —
-    shared with maintenance.expire_snapshots so retention can never
-    delete the committed snapshot regardless of pointer format."""
-    sink = SnapshotUpsertSink.__new__(SnapshotUpsertSink)
-    sink.target_dir = target_dir
-    return SnapshotUpsertSink.committed(sink)
-
-
-@contextlib.contextmanager
-def refs_lock(target_dir: str):
-    """The sink's refs flock, takeable without constructing the sink —
-    shared with maintenance.expire_snapshots so retention computes its
-    keep set against a refs document no concurrent writer (a cursor
-    registering, a branch staging) can change mid-expiry.  Same
-    kernel-released flock as ``SnapshotUpsertSink._refs_lock``."""
-    fd = os.open(
-        os.path.join(target_dir, "_REFS.json.lock"), os.O_CREAT | os.O_RDWR
-    )
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-        finally:
-            os.close(fd)
 
 
 def _checkpoint_lineage(checkpoint_dir: str) -> str:

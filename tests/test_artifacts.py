@@ -8,6 +8,8 @@ be rebuilt per invocation (no cross-invocation result memo).
 
 from __future__ import annotations
 
+import uuid
+
 from lakehouse_cdc_spark.plans.artifacts import prepare_artifacts
 
 
@@ -17,11 +19,24 @@ def test_prepare_artifacts_reports_each_build(spark, sf_dir):
     assert all(isinstance(v, float) and v >= 0 for v in t.values())
 
 
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"test_artifacts_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs run by one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_prepare_artifacts_idempotent_and_cheap_second_call(spark, sf_dir):
     prepare_artifacts(spark, sf_dir)
-    t2 = prepare_artifacts(spark, sf_dir)
-    # second call must find every per-process cache hot (no rebuild)
-    assert sum(t2.values()) < 1.0
+    # second call must find every per-process cache hot: no rebuild,
+    # so it runs no Spark job at all
+    assert _jobs_run_by(spark, lambda: prepare_artifacts(spark, sf_dir)) == 0
 
 
 def test_shard_query_has_no_result_memo(spark, sf_dir):

@@ -127,3 +127,32 @@ def test_clone_refuses_nonempty_target_including_crashed_attempts(
     (tmp_path / "empty").mkdir()
     clone = src.clone_to(str(tmp_path / "empty"))
     assert _vis(clone, spark) == [(1, "a", 0)]
+
+
+def test_clone_keeps_check_constraints_and_zone_maps(spark, tmp_path):
+    """A clone carries every table setting of its source: a row that
+    violates the source's CHECK constraint is quarantined by the clone
+    too (not committed), and a zone-mapped clone records zones for the
+    buckets it rewrites."""
+    src = SnapshotUpsertSink(
+        str(tmp_path / "src"),
+        keys=["id"],
+        order_by=["seq"],
+        n_buckets=2,
+        checks={"v_set": "v IS NOT NULL"},
+        zone_cols=["id"],
+    )
+    src.process_batch(_batch(spark, [(1, "a", "c", 0), (2, "b", "c", 0)]), 0)
+    clone = src.clone_to(str(tmp_path / "dev"))
+
+    clone.process_batch(_batch(spark, [(3, None, "c", 1), (4, "d", "c", 1)]), 1)
+    assert [i for i, _, _ in _vis(clone, spark)] == [1, 2, 4]
+    bad = clone.quarantine_table(spark)
+    assert [(r["id"], r["__check"]) for r in bad.collect()] == [(3, "v_set")]
+
+    snap = clone.committed_snapshot()
+    zones = clone.stats_table(spark).filter(F.col("stat") == "zone").collect()
+    manifest = clone._read_manifest(snap)
+    rewritten = {b for b, at in manifest["buckets"].items() if at == snap}
+    assert rewritten
+    assert rewritten <= {str(r.bucket) for r in zones}

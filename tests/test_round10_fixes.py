@@ -53,21 +53,22 @@ def test_conversion_window_sweep_on_conversion_free_data(spark, tmp_path):
 
 
 def test_wap_demo_cache_replaces_stale_entry(spark):
-    """_WAP_CACHE must be assigned explicitly: a cached sink that fails
-    the health check is REPLACED by the rebuilt one (setdefault would
-    keep returning the broken object)."""
+    """The fixture memo must assign explicitly: a cached sink that
+    fails the health check is REPLACED by the rebuilt one (setdefault
+    would keep returning the broken object)."""
     from lakehouse_cdc_spark.plans import cdf_queries
 
     sf_dir = "/root/testdata/sf0.001"
+    key = ("_wap_demo_sink", sf_dir)
     fresh = cdf_queries._wap_demo_sink(spark, sf_dir)
-    assert cdf_queries._WAP_CACHE[sf_dir] is fresh
+    assert cdf_queries._FIXTURES[key] is fresh
 
     class Broken:
         def committed_snapshot(self):
             return None  # fails the ==1 health check
 
-    cdf_queries._WAP_CACHE[sf_dir] = Broken()
+    cdf_queries._FIXTURES[key] = Broken()
     rebuilt = cdf_queries._wap_demo_sink(spark, sf_dir)
     assert not isinstance(rebuilt, Broken)
-    assert cdf_queries._WAP_CACHE[sf_dir] is rebuilt
+    assert cdf_queries._FIXTURES[key] is rebuilt
     assert rebuilt.committed_snapshot() == 1

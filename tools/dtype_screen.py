@@ -29,11 +29,12 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_cdc_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_cdc_spark.session import TABLES, get_spark  # noqa: E402

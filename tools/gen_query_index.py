@@ -7,10 +7,12 @@ first docstring sentence).  Run after adding queries:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from lakehouse_cdc_spark.plans import REGISTRY  # noqa: E402
 
@@ -42,7 +44,7 @@ def main() -> None:
         lines.append(
             f"| `{name}` | {check} | {bench} | {first_sentence(spec.doc)} |"
         )
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(REGISTRY)} entries)")
 
