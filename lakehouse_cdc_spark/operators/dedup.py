@@ -51,24 +51,27 @@ def latest_per_key_bucketed(
     keys: list[str],
     order_by: list[str | Column],
     bucket_col: str,
-    n_buckets: int,
+    n_partitions: int,
 ) -> DataFrame:
     """:func:`latest_per_key` with its one shuffle ALIGNED to a
     key-derived bucket column (``bucket_col`` must be a pure function
     of ``keys``, e.g. ``pmod(hash(keys), n)``): explicitly repartition
-    into ``n_buckets`` partitions by bucket, then window over
+    into ``n_partitions`` partitions by bucket, then window over
     ``(bucket, *keys)`` — HashPartitioning(bucket) satisfies the
     window's ClusteredDistribution because bucket is one of its
-    partition keys, so NO second exchange appears.  A
-    ``partitionBy(bucket)`` write downstream then has every task
-    writing exactly one bucket directory: one file per bucket per
-    snapshot instead of |shuffle partitions| x |buckets| fragments —
-    the file-count hygiene that keeps manifest listings and compaction
-    debt flat at 100 TB."""
+    partition keys, so NO second exchange appears.  Every bucket lands
+    whole in one task, and the window's sort on ``(bucket, *keys)``
+    hands it over contiguously, so a ``partitionBy(bucket)`` write
+    downstream writes one file per bucket per snapshot however many
+    buckets share a task — the file-count hygiene that keeps manifest
+    listings and compaction debt flat at 100 TB.  Size
+    ``n_partitions`` to the buckets the data touches (capped at the
+    slot count), not to the bucket count: an empty partition still
+    costs a scheduled task."""
     ordering = [F.desc(c) if isinstance(c, str) else c for c in order_by]
     w = Window.partitionBy(bucket_col, *keys).orderBy(*ordering)
     return (
-        df.repartition(n_buckets, bucket_col)
+        df.repartition(n_partitions, bucket_col)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")

@@ -47,7 +47,7 @@ import threading
 import time
 import weakref
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_cdc_spark.operators.dedup import (
@@ -2002,29 +2002,28 @@ class SnapshotUpsertSink:
                 tagged, allowMissingColumns=True
             )
         t_setup = time.time()
-        # AQE off for the sink's two fixed-shape jobs: both are
-        # explicitly partitioned (repartition(n_buckets) / a 2-stage
-        # partial distinct), so AQE's per-stage re-optimization can
-        # only ADD driver latency — it must not coalesce a user
+        # AQE off for the sink's two fixed-shape jobs: the probe has no
+        # exchange and the merge is explicitly repartitioned to the
+        # touched buckets, so AQE's per-stage re-optimization can only
+        # ADD driver latency — it must not coalesce a user
         # repartition, and key-hash buckets are uniform by
         # construction, so there is no skew for it to split.  Measured
         # ~0.13 s/micro-batch on local[32].
         with _aqe_disabled(spark):
-            # single-reduce set aggregate, NOT distinct().collect():
-            # distinct's final stage launches shuffle.partitions tasks
-            # to return ≤ n_buckets rows — collect_set partial-aggs
-            # ≤ n_buckets values per input partition into ONE reduce
-            # task (measured ~2x less probe latency per micro-batch).
-            # The probe runs on the RAW batch, not the compacted
-            # pipeline: compaction keeps (at least) one row per key, so
-            # the raw batch's key-hash bucket set IS the compacted set —
-            # a narrow projection + partial-aggregated distinct costs a
-            # fraction of re-running the window compaction.  The
+            # touched-bucket probe: ONE stage, no reduce — a noop write
+            # of the __bucket projection whose map tasks fold their
+            # bucket ids into an observed collect_set (merged on the
+            # driver, like the bloom positions below).  The probe runs
+            # on the RAW batch, not the compacted pipeline: compaction
+            # keeps (at least) one row per key, so the raw batch's
+            # key-hash bucket set IS the compacted set.  The
             # legacy-migration batch probes its whole legacy base too:
             # it must rewrite EVERY legacy bucket.
-            touched = sorted(
-                tagged.agg(F.collect_set("__bucket")).collect()[0][0]
-            )
+            probe = Observation()
+            tagged.select("__bucket").observe(
+                probe, F.collect_set("__bucket").alias("touched")
+            ).write.format("noop").mode("overwrite").save()
+            touched = sorted(probe.get["touched"])
             t_probe = time.time()
             base_paths = [
                 self._bucket_path(manifest["buckets"][str(b)], b)
@@ -2050,12 +2049,15 @@ class SnapshotUpsertSink:
             else:
                 unioned = tagged
             # ONE bucket-aligned shuffle: compaction windows over
-            # (__bucket, keys) on data repartitioned by __bucket, and
-            # the partitionBy write then has each task producing
-            # exactly its own bucket directory (one file per bucket
-            # per snapshot)
+            # (__bucket, keys) on data repartitioned by __bucket into
+            # one partition per touched bucket, up to the slot count —
+            # an untouched bucket would only schedule an empty task.
+            # Each bucket still lands whole in one task and sorted, so
+            # the partitionBy write keeps one file per bucket per
+            # snapshot.
+            write_tasks = min(len(touched), spark.sparkContext.defaultParallelism)
             merged = latest_per_key_bucketed(
-                unioned, self.keys, self.order_by, "__bucket", n_buckets
+                unioned, self.keys, self.order_by, "__bucket", max(write_tasks, 1)
             )
             if self.sort_within_bucket:
                 # local per-partition sort on the already-bucket-aligned
@@ -2068,8 +2070,6 @@ class SnapshotUpsertSink:
             # single global collect_set carries every bucket's filter
             bloom_obs, bloom_cols_present = None, []
             if self.bloom_cols:
-                from pyspark.sql import Observation
-
                 bloom_cols_present = [
                     c for c in self.bloom_cols if c in merged.columns
                 ]
@@ -2185,8 +2185,16 @@ class SnapshotUpsertSink:
                             f"could not allocate a staged snapshot lane "
                             f"for branch {branch!r} after 64 attempts"
                         )
-            # data first (always a fresh directory — never one being read)
-            rewritten = self._write_buckets(merged, new_snap)
+            if touched:
+                # data first (always a fresh directory — never one being read)
+                rewritten = self._write_buckets(merged, new_snap)
+            else:
+                # nothing admitted (an all-poison file, a batch wholly
+                # below the GC floor): no write job — commit manifest +
+                # pointer only, so the replay guard still advances.  The
+                # dir exists so snapshots_table sees every snapshot.
+                os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
+                rewritten, bloom_obs = set(), None
         t_write = time.time()
         # … then manifest (rewritten buckets point at new_snap, all
         # others keep their byte-identical files) + pointer
@@ -2255,6 +2263,7 @@ class SnapshotUpsertSink:
             "write_s": round(t_write - t_probe, 4),
             "commit_s": round(time.time() - t_write, 4),
             "n_touched": len(touched),
+            "write_tasks": write_tasks,
         }
 
     def _write_buckets(self, df: DataFrame, snapshot: int) -> set[int]:

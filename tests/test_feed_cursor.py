@@ -2,10 +2,15 @@
 committed change exactly once across consumer crashes — replay before
 ack, never after — and drains a far-behind backlog in bounded chunks."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 from lakehouse_cdc_spark.streaming.feed import FeedCursor
+
+#: the checkout under test, for the child process's sys.path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _batch(spark, rows):
@@ -349,7 +354,7 @@ def test_multiprocess_expiry_races_cursor_registration_and_acks(
             "-c",
             f"""
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from lakehouse_cdc_spark.maintenance import expire_snapshots
 for _ in range(200):
     expired = expire_snapshots({str(tmp_path / 't')!r}, retain_last=1)

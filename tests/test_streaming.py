@@ -8,6 +8,8 @@ uses (SURVEY §5)."""
 from __future__ import annotations
 
 import os
+import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -91,31 +93,67 @@ def _bucket_files(sink: SnapshotUpsertSink) -> dict[str, tuple]:
     return out
 
 
+def _jobs_run_by(spark, fn) -> list[list[int]]:
+    """The Spark jobs ``fn()`` launches, counted under its own job
+    group: one entry per job in launch order, listing the task count
+    of each of its stages in stage order."""
+    sc = spark.sparkContext
+    group = f"test_streaming_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs run by one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        [
+            tracker.getStageInfo(st).numTasks
+            for st in sorted(tracker.getJobInfo(j).stageIds)
+        ]
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+
+
 def test_bucketed_sink_rewrites_only_touched_buckets(spark, tmp_path):
     """A micro-batch must leave every bucket it doesn't touch as
     byte-identical files at their original paths — only touched
-    buckets get new files under the new snapshot dir."""
+    buckets get new files under the new snapshot dir.  Each batch is
+    two jobs: a one-stage touched-bucket probe, then one write whose
+    final stage runs one task per touched bucket (up to the slot
+    count), still writing one file per bucket."""
     sink = SnapshotUpsertSink(
         str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=8
     )
+    slots = spark.sparkContext.defaultParallelism
+
+    def check_shape(jobs, n_touched):
+        assert len(jobs) == 2, jobs  # probe + write, nothing else
+        probe, write = jobs
+        assert len(probe) == 1, jobs  # the probe has no reduce stage
+        assert write[-1] == min(n_touched, slots), jobs
+
     # batch 0: many keys spread over (almost) all buckets
     b0 = spark.createDataFrame(
         [(i, f"v{i}", "u", 0) for i in range(64)],
         "id int, v string, operation string, seq int",
     )
-    sink.process_batch(b0, 0)
+    jobs0 = _jobs_run_by(spark, lambda: sink.process_batch(b0, 0))
     files_before = _bucket_files(sink)
     manifest0 = sink._read_manifest(0)
     assert len(manifest0["buckets"]) >= 6  # keys really spread out
+    check_shape(jobs0, len(manifest0["buckets"]))
 
     # batch 1: update a single key → exactly one bucket touched
     b1 = spark.createDataFrame(
         [(7, "v7-new", "u", 1)], "id int, v string, operation string, seq int"
     )
-    sink.process_batch(b1, 1)
+    jobs1 = _jobs_run_by(spark, lambda: sink.process_batch(b1, 1))
     manifest1 = sink._read_manifest(1)
     moved = [b for b, s in manifest1["buckets"].items() if s == 1]
     assert len(moved) == 1  # only key 7's bucket was rewritten
+    check_shape(jobs1, 1)  # one write task, not one per bucket
+    assert sink.last_batch_timings["write_tasks"] == 1
 
     # untouched buckets: same paths, same bytes
     files_after = _bucket_files(sink)
@@ -125,9 +163,63 @@ def test_bucketed_sink_rewrites_only_touched_buckets(spark, tmp_path):
     for p, h in untouched_before.items():
         assert files_after[p] == h, f"untouched bucket file changed: {p}"
 
+    # buckets sharing a write task still get one file each
+    per_dir = Counter(os.path.dirname(p) for p in files_after)
+    assert len(per_dir) == len(manifest0["buckets"]) + 1
+    assert all(n == 1 for n in per_dir.values()), per_dir
+
     # and the merged state is still correct
     state = {r.id: r.v for r in sink.current_table(spark).collect()}
     assert state[7] == "v7-new" and state[0] == "v0" and len(state) == 64
+
+
+def test_all_poison_batch_commits_without_a_write_job(spark, tmp_path):
+    """A micro-batch that admits no rows — every message is poison,
+    dropped by the decoder — runs the touched-bucket probe and no
+    write job, yet still commits: the replay guard advances and the
+    table is unchanged."""
+    from pyspark.sql import types as T
+
+    from lakehouse_cdc_spark.cdc.decode import decode_debezium
+
+    payload = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("v", T.StringType()),
+            T.StructField("operation", T.StringType()),
+            T.StructField("seq", T.IntegerType()),
+        ]
+    )
+    schema = T.StructType([T.StructField("payload", payload)])
+
+    def decoded(values):
+        raw = spark.createDataFrame([(v,) for v in values], "value string")
+        return decode_debezium(raw, schema=schema)
+
+    sink = SnapshotUpsertSink(
+        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=4
+    )
+    sink.process_batch(
+        decoded(
+            [
+                f'{{"payload": {{"id": {i}, "v": "v{i}", '
+                f'"operation": "c", "seq": 0}}}}'
+                for i in range(8)
+            ]
+        ),
+        0,
+    )
+    before = sorted(sink.current_table(spark).collect())
+    manifest0 = sink._read_manifest(sink.committed_snapshot())
+
+    poison = decoded([None, "", "empty", "{not json", '{"other": 1}'])
+    jobs = _jobs_run_by(spark, lambda: sink.process_batch(poison, 1))
+    assert len(jobs) == 1, jobs  # the probe alone
+    _lineage, batch, snap = sink.committed()
+    assert batch == 1 and snap == 1
+    assert sink._read_manifest(1)["buckets"] == manifest0["buckets"]
+    assert sorted(sink.current_table(spark).collect()) == before
+    assert sink.last_batch_timings["write_tasks"] == 0
 
 
 def test_bucketed_sink_n_buckets_fixed_at_first_commit(spark, tmp_path):

@@ -20,6 +20,9 @@ from lakehouse_cdc_spark.maintenance import expire_snapshots, expiry_safety
 from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 from lakehouse_cdc_spark.streaming.pipeline import ConcurrentCommitError
 
+#: the checkout under test, for the child processes' sys.path
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _batch(spark, rows):
     return spark.createDataFrame(
@@ -1044,7 +1047,7 @@ def test_sigkill_between_manifest_and_pointer_rolls_forward(
     target = str(tmp_path / "tbl")
     script = f"""
 import os, signal, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from lakehouse_cdc_spark.session import get_spark
 from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
@@ -1255,7 +1258,7 @@ def test_multiprocess_concurrent_staging_and_kill(spark, tmp_path):
     def child_script(name, lo, kill):
         return f"""
 import os, signal, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from lakehouse_cdc_spark.session import get_spark
 from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 from lakehouse_cdc_spark.streaming.pipeline import ConcurrentCommitError

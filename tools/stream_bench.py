@@ -219,6 +219,9 @@ def main() -> None:
                         k: round(sum(t[k] for t in timings), 3)
                         for k in ("probe_s", "write_s", "commit_s")
                     },
+                    # the merge's exchange width per batch: one task
+                    # per touched bucket, capped at the slot count
+                    "write_tasks": [t["write_tasks"] for t in timings],
                     "engine_overhead_sec": round(
                         ingest_s
                         - sum(
