@@ -42,6 +42,7 @@ import base64
 import contextlib
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -156,7 +157,7 @@ class SnapshotUpsertSink:
         order_by: list[str | Column],
         op_col: str = "operation",
         lineage: str | None = None,
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
         merge_on_read: bool = False,
         fold_deltas_every: int | None = 8,
         bloom_cols: list[str] | None = None,
@@ -189,9 +190,16 @@ class SnapshotUpsertSink:
         #: silently discarded as "already committed".
         self.lineage = lineage
         #: bucket count for NEW state (an existing target's manifest
-        #: wins — key→bucket mapping is fixed at first commit; size it
-        #: so one bucket ≈ executor-memory-sized at the target scale)
-        self.n_buckets = n_buckets
+        #: wins — key→bucket mapping is fixed at first commit).  None
+        #: (the default) sizes it to the data: new state starts at one
+        #: bucket, and after each main-line copy-on-write commit whose
+        #: largest rewritten bucket outgrows one read split
+        #: (``spark.sql.files.maxPartitionBytes``) the table doubles
+        #: through ``rebucket`` — one bucket per task stays one split
+        #: per task.  An explicit count is fixed: nothing grows it but
+        #: a hand-called ``rebucket``.
+        self.sized_to_data = n_buckets is None
+        self.n_buckets = 1 if n_buckets is None else n_buckets
         #: per-bucket bloom filters over NON-key columns (key point
         #: lookups already hash straight to their bucket): when set,
         #: every bucket rewrite computes a ``bloom_bits``-bit filter
@@ -202,7 +210,7 @@ class SnapshotUpsertSink:
         #: CAST(col AS STRING) so int32/int64 schema widening never
         #: shifts the hash.  Sizing: manifest grows by
         #: bits/8 x n_buckets x |cols| bytes (1 KiB x 16 x |cols| at
-        #: the defaults).
+        #: the default bits and 16 buckets).
         self.bloom_cols = list(bloom_cols) if bloom_cols else None
         self.bloom_bits = bloom_bits
         self.bloom_hashes = bloom_hashes
@@ -241,7 +249,7 @@ class SnapshotUpsertSink:
         #: guards against), timestamps belong in an integer epoch
         #: column.  GC'd buckets keep carried zones (row removal can
         #: only over-approximate — over-scan, never a miss); rebucket
-        #: drops them like blooms (keyed by the old bucket map).
+        #: rebuilds them, like blooms, under the new bucket map.
         self.zone_cols = list(zone_cols) if zone_cols else None
         #: sort rows by these columns WITHIN each bucket before the
         #: parquet write (Iceberg sort-order / Delta OPTIMIZE ZORDER's
@@ -1805,8 +1813,8 @@ class SnapshotUpsertSink:
         self, col: str, lo, hi, manifest: dict | None = None
     ) -> list[int]:
         """Bucket ids whose [min, max] zone MAY overlap ``[lo, hi]``;
-        buckets without a zone (tracking off, pre-zone commits,
-        rebucket drops) are always candidates — pruning is an
+        buckets without a zone (tracking off, pre-zone commits, a
+        column absent from the files) are always candidates — pruning is an
         optimization, never a filter.  Comparison happens in the
         column's own domain (int or str), the same total order parquet
         footer stats use."""
@@ -2065,31 +2073,7 @@ class SnapshotUpsertSink:
                 merged = merged.sortWithinPartitions(
                     "__bucket", *self.sort_within_bucket
                 )
-            # bloom positions ride the WRITE job as observe() metrics —
-            # no extra pass: each position is bucket * bits + hash so a
-            # single global collect_set carries every bucket's filter
-            bloom_obs, bloom_cols_present = None, []
-            if self.bloom_cols:
-                bloom_cols_present = [
-                    c for c in self.bloom_cols if c in merged.columns
-                ]
-                if bloom_cols_present:
-                    bloom_obs = Observation()
-                    aggs = [
-                        F.collect_set(
-                            F.col("__bucket").cast("bigint")
-                            * self.bloom_bits
-                            + F.pmod(
-                                F.xxhash64(
-                                    F.col(c).cast("string"), F.lit(s)
-                                ),
-                                F.lit(self.bloom_bits),
-                            )
-                        ).alias(f"{c}::{s}")
-                        for c in bloom_cols_present
-                        for s in range(self.bloom_hashes)
-                    ]
-                    merged = merged.observe(bloom_obs, *aggs)
+            merged, bloom_obs = self._observe_blooms(merged)
 
             if branch is None:
                 new_snap = (
@@ -2201,36 +2185,6 @@ class SnapshotUpsertSink:
         new_buckets = dict(manifest["buckets"])
         for b in rewritten:
             new_buckets[str(b)] = new_snap
-        # bucket stats: a rewritten bucket's carried bloom filter / zone
-        # is STALE (rows were added) — it is replaced by the fresh one
-        # the write computed (bloom positions observed by the write job,
-        # zones folded from the written footers); untouched buckets
-        # keep theirs
-        fresh_blooms: dict[str, dict[str, str]] = {}
-        if bloom_obs is not None:
-            got = bloom_obs.get  # blocks until the write job finished
-            for c in bloom_cols_present:
-                fresh: dict[int, bytearray] = {}
-                for s in range(self.bloom_hashes):
-                    for pos in got[f"{c}::{s}"] or []:
-                        bkt, bit = divmod(int(pos), self.bloom_bits)
-                        buf = fresh.setdefault(
-                            bkt, bytearray(self.bloom_bits // 8)
-                        )
-                        buf[bit >> 3] |= 1 << (bit & 7)
-                fresh_blooms[c] = {
-                    str(bkt): base64.b64encode(bytes(buf)).decode()
-                    for bkt, buf in fresh.items()
-                }
-        replaced = {str(b) for b in rewritten}
-        fresh_zones = (
-            _footer_zones(
-                {b: self._bucket_path(new_snap, b) for b in rewritten},
-                self.zone_cols,
-            )
-            if self.zone_cols
-            else None
-        )
         self._commit(
             new_snap,
             manifest,
@@ -2241,30 +2195,120 @@ class SnapshotUpsertSink:
             # a bucket merge consumes any pending deltas (fold_deltas
             # routes here), so the new manifest starts with none
             deltas=None,
-            blooms=self._merge_bucket_stats(
-                manifest.get("blooms"),
-                {
-                    "bits": self.bloom_bits,
-                    "hashes": self.bloom_hashes,
-                    "cols": fresh_blooms,
-                },
-                replaced,
-                bloom=True,
-            ),
-            zones=self._merge_bucket_stats(
-                manifest.get("zones"), fresh_zones, replaced
-            ),
+            **self._rewritten_stats(manifest, bloom_obs, new_snap, rewritten),
         )
+        n_buckets = manifest["n_buckets"]
+        if branch is None and self.sized_to_data and rewritten:
+            n_buckets = self._grow_to_split(spark, new_snap, rewritten, n_buckets)
         # per-phase wall clock of the LAST committed batch — the sink's
         # own latency breakdown (T8 observability; tools/stream_bench.py
-        # aggregates it to locate fixed per-micro-batch overhead)
+        # aggregates it to locate fixed per-micro-batch overhead);
+        # commit_s includes any growth rebucket
         self.last_batch_timings = {
             "probe_s": round(t_probe - t_setup, 4),
             "write_s": round(t_write - t_probe, 4),
             "commit_s": round(time.time() - t_write, 4),
             "n_touched": len(touched),
             "write_tasks": write_tasks,
+            "n_buckets": n_buckets,
         }
+
+    def _observe_blooms(self, df: DataFrame):
+        """Attach this sink's bloom aggregates to ``df`` as observe()
+        metrics, so the positions ride the WRITE job (no extra pass):
+        each position is bucket * bits + hash, so one global
+        collect_set per (column, hash seed) carries every bucket's
+        filter.  Returns ``(df, observed)``; ``observed`` (None when no
+        bloom column is present) goes to :meth:`_bloom_doc` once ``df``
+        has been written."""
+        cols = [c for c in self.bloom_cols or [] if c in df.columns]
+        if not cols:
+            return df, None
+        obs = Observation()
+        aggs = [
+            F.collect_set(
+                F.col("__bucket").cast("bigint") * self.bloom_bits
+                + F.pmod(
+                    F.xxhash64(F.col(c).cast("string"), F.lit(s)),
+                    F.lit(self.bloom_bits),
+                )
+            ).alias(f"{c}::{s}")
+            for c in cols
+            for s in range(self.bloom_hashes)
+        ]
+        return df.observe(obs, *aggs), (obs, cols)
+
+    def _bloom_doc(self, observed) -> dict:
+        """Decode ``_observe_blooms``' positions into a bloom doc
+        ``{"bits", "hashes", "cols": {col: {bucket: b64}}}`` (no cols
+        when nothing was observed).  Blocks until the write finished."""
+        fresh_blooms: dict[str, dict[str, str]] = {}
+        if observed is not None:
+            obs, cols = observed
+            got = obs.get
+            for c in cols:
+                fresh: dict[int, bytearray] = {}
+                for s in range(self.bloom_hashes):
+                    for pos in got[f"{c}::{s}"] or []:
+                        bkt, bit = divmod(int(pos), self.bloom_bits)
+                        buf = fresh.setdefault(bkt, bytearray(self.bloom_bits // 8))
+                        buf[bit >> 3] |= 1 << (bit & 7)
+                fresh_blooms[c] = {
+                    str(bkt): base64.b64encode(bytes(buf)).decode()
+                    for bkt, buf in fresh.items()
+                }
+        return {"bits": self.bloom_bits, "hashes": self.bloom_hashes, "cols": fresh_blooms}
+
+    def _rewritten_stats(
+        self, prev: dict | None, observed, snapshot: int, rewritten
+    ) -> dict:
+        """The ``blooms`` / ``zones`` commit fields after ``rewritten``
+        buckets were written at ``snapshot``: a rewritten bucket's
+        carried filter / zone is STALE, so it takes the fresh one the
+        write computed (bloom positions observed by the write job,
+        zones folded from the written footers); every other bucket
+        keeps ``prev``'s (pass None to drop them all)."""
+        replaced = {str(b) for b in rewritten}
+        zones = (
+            _footer_zones(
+                {b: self._bucket_path(snapshot, b) for b in rewritten},
+                self.zone_cols,
+            )
+            if self.zone_cols
+            else None
+        )
+        prev = prev or {}
+        return {
+            "blooms": self._merge_bucket_stats(
+                prev.get("blooms"), self._bloom_doc(observed), replaced, bloom=True
+            ),
+            "zones": self._merge_bucket_stats(prev.get("zones"), zones, replaced),
+        }
+
+    def _grow_to_split(
+        self, spark: SparkSession, snapshot: int, rewritten, n_buckets: int
+    ) -> int:
+        """Size-to-data growth after a main-line commit at ``snapshot``:
+        when its largest rewritten bucket holds more bytes than one read
+        split (``spark.sql.files.maxPartitionBytes``), ``rebucket`` to
+        ``n_buckets × 2^k``, the smallest doubling that brings that
+        bucket back under the split.  The check stats the rewritten
+        bucket files (no Spark job).  No growth while a branch is open:
+        its publish would refuse a bucket count changed under it.
+        Returns the bucket count after."""
+        target = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+        largest = max(
+            sum(
+                os.path.getsize(p)
+                for p in store.data_files(self._bucket_path(snapshot, b))
+            )
+            for b in rewritten
+        )
+        if largest <= target or self.refs()["branches"]:
+            return n_buckets
+        grown = n_buckets << (-(-largest // target) - 1).bit_length()
+        self.rebucket(spark, grown)
+        return grown
 
     def _write_buckets(self, df: DataFrame, snapshot: int) -> set[int]:
         """THE bucket writer: write ``df`` (carrying ``__bucket``) as one
@@ -2272,15 +2316,11 @@ class SnapshotUpsertSink:
         return the bucket ids that materialized (an empty bucket writes
         no dir).  Static overwrite truncates any orphan files a crashed
         attempt left, regardless of the session's
-        partitionOverwriteMode.  Committer algorithm v2 commits task
-        files straight into the destination (no job-commit rename
-        pass) — crash-orphans are already handled by the static
-        overwrite + the manifest fence, so v1's rename ceremony buys
-        nothing here.  Measured ~0.14 s/batch."""
+        partitionOverwriteMode.  Writes go through
+        :func:`_overwrite_writer`."""
         (
-            df.write.mode("overwrite")
+            _overwrite_writer(df)
             .option("partitionOverwriteMode", "static")
-            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
             .partitionBy("__bucket")
             .parquet(self._snapshot_path(snapshot))
         )
@@ -2326,13 +2366,7 @@ class SnapshotUpsertSink:
         new_snap = (committed_snap if committed_snap is not None else -1) + 1
         self._claim(new_snap, batch_id)  # writer fence, before any data
         with _aqe_disabled(spark):
-            (
-                batch_df.write.mode("overwrite")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .parquet(self._delta_path(new_snap))
-            )
+            _overwrite_writer(batch_df).parquet(self._delta_path(new_snap))
         t_write = time.time()
         deltas = list(manifest.get("deltas") or []) + [new_snap]
         self._commit(
@@ -2347,6 +2381,7 @@ class SnapshotUpsertSink:
             "write_s": round(t_write - t0, 4),
             "commit_s": round(time.time() - t_write, 4),
             "n_touched": 0,
+            "n_buckets": manifest["n_buckets"],
         }
         return len(deltas)
 
@@ -2533,7 +2568,7 @@ class SnapshotUpsertSink:
         which carry zone maps and with what bounds, and which are
         blind (always-scan).  The operational question it answers:
         "why did my lookup open k buckets?" — stale-after-rewrite
-        drops and rebucket resets show up here as missing rows."""
+        drops show up here as missing rows."""
         manifest = self._read_manifest(self.committed_snapshot()) or {}
         rows = []
         for b, snap in (manifest.get("buckets") or {}).items():
@@ -2608,13 +2643,17 @@ class SnapshotUpsertSink:
         """PARTITION EVOLUTION (Iceberg bucket-spec evolution parity):
         rewrite the whole state into a new bucket count under one
         manifest-fenced snapshot commit.  Needed when a table outgrows
-        its original sizing — one bucket must stay executor-memory-
-        sized, so a table bootstrapped at 16 buckets needs thousands at
-        100 TB.  The key→bucket map is pinned by the manifest, so this
-        is the ONLY way it changes; O(table) by necessity, but one
-        bucket-aligned shuffle + write, no merge logic.  Crash-safe
-        like every writer: data lands under the new snapshot dir
-        first, the manifest+pointer swap publishes it atomically.
+        its sizing — one bucket must stay one read split, so a table
+        that starts at one bucket needs thousands at 100 TB.  A sink
+        sized to its data (``n_buckets=None``) calls this itself,
+        doubling once a rewritten bucket outgrows
+        ``spark.sql.files.maxPartitionBytes``; with a fixed count it
+        runs only when called.  It never shrinks a table.  The
+        key→bucket map is pinned by the manifest, so this is the ONLY
+        way it changes; O(table) by necessity, but one bucket-aligned
+        shuffle + write, no merge logic.  Crash-safe like every
+        writer: data lands under the new snapshot dir first, the
+        manifest+pointer swap publishes it atomically.
 
         Invariants preserved across the boundary:
         - CDF continuity: rows are identical and no order-by advances,
@@ -2623,10 +2662,11 @@ class SnapshotUpsertSink:
           buckets for this commit since bucket ids changed meaning).
         - Time travel: older snapshots read their own manifests, each
           carrying its own n_buckets.
-        - Per-bucket bloom filters are DROPPED (keyed by the old map —
-          reusing them would prune wrong buckets); later merges rebuild
-          them bucket-by-bucket.  Lookups meanwhile degrade to
-          key-hash pruning, never to wrong answers.
+        - Pruning: the old map's bloom filters and zone maps are
+          dropped (reusing them would prune wrong buckets) and rebuilt
+          under the new map by the rewrite itself — blooms observed by
+          the write job, zones folded from the written footers — so
+          lookups keep their pruning across the boundary.
 
         Returns the new snapshot number (or the current one when the
         count is already ``n_buckets_new`` — no empty commit)."""
@@ -2649,20 +2689,20 @@ class SnapshotUpsertSink:
         # tombstones ride along (current_state, not current_table):
         # their late-straggler protection must survive the rewrite
         state = self.current_state(spark).withColumn("__bucket", bucket)
+        state = state.repartition(n_buckets_new, F.col("__bucket"))
+        if self.sort_within_bucket:
+            state = state.sortWithinPartitions("__bucket", *self.sort_within_bucket)
+        state, bloom_obs = self._observe_blooms(state)
         with _aqe_disabled(spark):
-            written = self._write_buckets(
-                state.repartition(n_buckets_new, F.col("__bucket")), new_snap
-            )
+            written = self._write_buckets(state, new_snap)
         self._commit(
             new_snap,
             manifest,
             committed_batch,
             n_buckets=n_buckets_new,
             buckets={str(b): new_snap for b in written},
-            # keyed by the old bucket map: reusing them would prune
-            # the wrong buckets
-            blooms=None,
-            zones=None,
+            # prev=None: the old map's stats would prune wrong buckets
+            **self._rewritten_stats(None, bloom_obs, new_snap, written),
         )
         self.n_buckets = n_buckets_new
         return new_snap
@@ -2746,6 +2786,7 @@ class SnapshotUpsertSink:
             zone_cols=self.zone_cols,
             sort_within_bucket=self.sort_within_bucket,
         )
+        clone.sized_to_data = self.sized_to_data
         # one manifest (the committed snapshot's — bucket map, schema,
         # watermark, blooms, zones, deltas, chain links all carry over;
         # its commit record is the source pointer's), then the pointer:
@@ -2866,6 +2907,38 @@ class SnapshotUpsertSink:
             gc_watermark=watermark,
         )
         return n_expired
+
+
+def _overwrite_writer(df: DataFrame):
+    """``df.write`` in overwrite mode with the sink's committer
+    settings.  Algorithm v2 commits task files straight into the
+    destination (no job-commit rename pass) — crash-orphans are already
+    handled by the static overwrite + the manifest fence, so v1's
+    rename ceremony buys nothing here; measured ~0.14 s/batch.  No
+    ``_SUCCESS`` marker: the manifest is the commit record, and each
+    marker (+ its ``.crc``) is one more local file create."""
+    return (
+        df.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    )
+
+
+#: Spark's byte-size suffixes (JavaUtils.byteStringAs), lower-cased
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def _conf_bytes(text: str) -> int:
+    """A Spark byte-size conf value (``134217728b``, ``128MB``,
+    ``4k``, ``4096``) in bytes."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", text.lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 def _footer_zones(bucket_dirs: dict[int, str], zone_cols: list[str]) -> dict:

@@ -102,9 +102,11 @@ def test_rebucket_drops_stale_blooms_and_guards_noops(spark, tmp_path):
     snap = sink.rebucket(spark, 8)
     with open(sink._manifest_path(snap)) as f:
         m = json.load(f)
-    # old-map filters would prune WRONG buckets: they must be gone...
-    assert not m.get("blooms")
-    # ...and value lookup still answers correctly without them
+    # old-map filters would prune WRONG buckets: they are replaced by
+    # filters rebuilt under the new map, one per new bucket...
+    assert m["n_buckets"] == 8
+    assert set(m["blooms"]["cols"]["v"]) == set(m["buckets"])
+    # ...and value lookup answers correctly with them
     hit = sink.lookup(spark, "v", "v17")
     assert [r.id for r in hit.filter("v = 'v17'").collect()] == [17]
     # no-op guard: same count returns the current snapshot, no commit
@@ -134,3 +136,44 @@ def test_rebucket_folds_mor_deltas_first(spark, tmp_path):
     assert got == {1: "a2", 2: "b"}
     with open(sink._manifest_path(snap)) as f:
         assert json.load(f)["n_buckets"] == 8
+
+
+def test_rebucket_rebuilds_blooms_and_zones_for_pruned_lookups(spark, tmp_path):
+    """A rebucket keeps lookup pruning: the bloom filters and zone maps
+    are rebuilt under the new map, so both probes name a strict subset
+    of the buckets, and the pruned lookups return exactly the rows an
+    unpruned read finds."""
+    sink = SnapshotUpsertSink(
+        str(tmp_path / "t"),
+        keys=["id"],
+        order_by=["seq"],
+        n_buckets=2,
+        bloom_cols=["v"],
+        zone_cols=["d"],
+    )
+    sink.process_batch(
+        spark.createDataFrame(
+            [(i, f"v{i}", i * 10, "c", 0) for i in range(80)],
+            "id int, v string, d long, operation string, seq int",
+        ),
+        0,
+    )
+    sink.rebucket(spark, 8)
+    manifest = sink._read_manifest(sink.committed_snapshot())
+    buckets = {int(b) for b in manifest["buckets"]}
+    assert len(buckets) == 8
+    full = sink.current_table(spark)
+
+    point = set(sink.probe_buckets(spark, "v", "v17"))
+    assert point < buckets
+    got = sorted((r.id, r.d) for r in sink.lookup(spark, "v", "v17").collect())
+    want = sorted((r.id, r.d) for r in full.filter(F.col("v") == "v17").collect())
+    assert got == want == [(17, 170)]
+
+    span = set(sink.zone_probe_buckets("d", 0, 0))
+    assert span < buckets
+    got = sorted((r.id, r.d) for r in sink.lookup_range(spark, "d", 0, 25).collect())
+    want = sorted(
+        (r.id, r.d) for r in full.filter(F.col("d").between(0, 25)).collect()
+    )
+    assert got == want == [(0, 0), (1, 10), (2, 20)]

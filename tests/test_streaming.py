@@ -7,6 +7,7 @@ uses (SURVEY §5)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 from collections import Counter
@@ -241,6 +242,157 @@ def test_bucketed_sink_n_buckets_fixed_at_first_commit(spark, tmp_path):
     assert s2._read_manifest(1)["n_buckets"] == 4
     state = {r.id: r.v for r in s2.current_table(spark).collect()}
     assert state[3] == "v3-new" and len(state) == 16
+
+
+_SPLIT = "spark.sql.files.maxPartitionBytes"
+
+
+@contextlib.contextmanager
+def _read_split(spark, value: str):
+    """Set the session's read-split size for the block, then restore it."""
+    prev = spark.conf.get(_SPLIT)
+    spark.conf.set(_SPLIT, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(_SPLIT, prev)
+
+
+def _payload_batch(spark, ids, seq):
+    """Upserts of ``ids`` whose payload (random hex) parquet cannot
+    shrink, so a bucket's bytes track its row count."""
+    return spark.createDataFrame(
+        [(i, uuid.uuid4().hex * 2, "u", seq) for i in ids],
+        "id int, v string, operation string, seq int",
+    )
+
+
+def _bucket_bytes(sink, snapshot: int) -> dict[str, int]:
+    """{bucket dir: data bytes} over the bucket dirs written at ``snapshot``."""
+    out: Counter = Counter()
+    for p, (size, _digest) in _bucket_files(sink).items():
+        if p.startswith(f"v={snapshot}/"):
+            out[os.path.dirname(p)] += size
+    return dict(out)
+
+
+def test_sink_sized_to_data_starts_at_one_bucket_and_doubles(spark, tmp_path):
+    """With no n_buckets the sink starts at one bucket, so a commit
+    writes one file, and grows through rebucket once a rewritten bucket
+    outgrows one read split: to n x 2^k, the smallest doubling that
+    fits its largest bucket.  Growth loses no row and emits no change."""
+    sink = SnapshotUpsertSink(str(tmp_path / "t"), keys=["id"], order_by=["seq"])
+    assert sink.n_buckets == 1
+    want: dict = {}
+
+    def commit(ids, batch_id):
+        df = _payload_batch(spark, ids, batch_id)
+        want.update((r.id, r.v) for r in df.collect())
+        sink.process_batch(df, batch_id)
+
+    commit(range(200), 0)
+    assert sink._read_manifest(0)["n_buckets"] == 1
+    assert [p for p in _bucket_files(sink)][0].startswith("v=0/__bucket=0/")
+    assert len(_bucket_files(sink)) == 1  # one file for the commit
+    assert sink.last_batch_timings["n_buckets"] == 1
+    split = _bucket_bytes(sink, 0)["v=0/__bucket=0"]
+    with _read_split(spark, str(split)):
+        # 260 rows in the one bucket: just past the split, so it doubles
+        commit(range(150, 260), 1)
+        assert sink.committed_snapshot() == 2  # batch at 1, rebucket at 2
+        assert sink._read_manifest(1)["n_buckets"] == 1
+        assert sink._read_manifest(2)["n_buckets"] == 2
+        assert sink.n_buckets == sink.last_batch_timings["n_buckets"] == 2
+        feed = sink.changes_between(spark, 1, 2)
+        assert feed is None or feed.count() == 0
+        # a far bigger batch: several doublings in one rebucket
+        commit(range(260, 1500), 2)
+        largest = max(_bucket_bytes(sink, 3).values())
+        k = (-(-largest // split) - 1).bit_length()
+        assert k >= 2
+        assert sink.committed_snapshot() == 4
+        assert sink._read_manifest(4)["n_buckets"] == 2 << k == sink.n_buckets
+        feed = sink.changes_between(spark, 3, 4)
+        assert feed is None or feed.count() == 0
+    assert {r.id: r.v for r in sink.current_table(spark).collect()} == want
+    per_dir = Counter(os.path.dirname(p) for p in _bucket_files(sink))
+    assert all(n == 1 for n in per_dir.values()), per_dir
+
+
+def test_sink_with_explicit_n_buckets_never_grows(spark, tmp_path):
+    """An explicit n_buckets is fixed: buckets past the read split do
+    not grow the table."""
+    sink = SnapshotUpsertSink(
+        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=16
+    )
+    with _read_split(spark, "1k"):
+        for b in range(2):
+            sink.process_batch(_payload_batch(spark, range(b * 300, b * 300 + 300), b), b)
+    assert max(_bucket_bytes(sink, 1).values()) > 1024  # over the split
+    assert sink.committed_snapshot() == 1  # two batches, no rebucket
+    assert sink._read_manifest(1)["n_buckets"] == 16 == sink.n_buckets
+    assert sink.last_batch_timings["n_buckets"] == 16
+
+
+def test_sink_does_not_grow_while_a_branch_is_open(spark, tmp_path):
+    """Growth waits while any write-audit-publish branch is open (its
+    publish refuses a bucket count changed under it) and never runs on
+    a staged commit; the branch still publishes, and the next main
+    commit grows."""
+    sink = SnapshotUpsertSink(str(tmp_path / "t"), keys=["id"], order_by=["seq"])
+    sink.process_batch(_payload_batch(spark, range(200), 0), 0)
+    split = _bucket_bytes(sink, 0)["v=0/__bucket=0"]
+    with _read_split(spark, str(split)):
+        sink.process_batch(_payload_batch(spark, range(150, 260), 1), 1)
+        n = sink.n_buckets
+        assert n == 2
+        ids = spark.createDataFrame([(i,) for i in range(1000, 3000)], "id int")
+        by_bucket: dict[int, list[int]] = {}
+        for r in ids.select("id", sink._bucket_col(n).alias("b")).collect():
+            by_bucket.setdefault(r.b, []).append(r.id)
+        staged_ids, main_ids = by_bucket[0][:300], by_bucket[1][:300]
+        base = sink.committed_snapshot()
+        sink.create_branch("idle")  # reserves base + 1
+        sink.create_branch("audit")  # reserves base + 2
+        sink.stage_batch("audit", _payload_batch(spark, staged_ids, 3), 3)
+        head = sink.refs()["branches"]["audit"]["snapshot"]
+        assert max(_bucket_bytes(sink, head).values()) > split
+        assert sink._read_manifest(head)["n_buckets"] == n  # staging never grows
+        sink.publish_branch("idle")  # nothing staged: frees base + 1
+        sink.process_batch(_payload_batch(spark, main_ids, 2), 2)
+        assert sink.committed_snapshot() == base + 1  # no rebucket commit
+        assert max(_bucket_bytes(sink, base + 1).values()) > split
+        assert sink._read_manifest(base + 1)["n_buckets"] == n == sink.n_buckets
+        # the rebase publish accepts the unchanged bucket count
+        assert sink.publish_branch("audit") == base + 2
+        assert not sink.refs()["branches"]
+        sink.process_batch(_payload_batch(spark, main_ids[:5], 4), 4)
+        assert sink.n_buckets > n
+        assert sink._read_manifest(sink.committed_snapshot())["n_buckets"] == sink.n_buckets
+    assert sink.current_table(spark).count() == 260 + 600
+
+
+def test_sink_commits_leave_no_success_marker(spark, tmp_path):
+    """The manifest is the commit record: bucket, delta and rebucket
+    writes leave no ``_SUCCESS`` marker (nor its ``.crc``)."""
+    cow = SnapshotUpsertSink(
+        str(tmp_path / "cow"), keys=["id"], order_by=["seq"], n_buckets=2
+    )
+    mor = SnapshotUpsertSink(
+        str(tmp_path / "mor"), keys=["id"], order_by=["seq"], merge_on_read=True
+    )
+    for sink in (cow, mor):
+        sink.process_batch(_payload_batch(spark, range(20), 0), 0)
+    cow.rebucket(spark, 4)
+    for sink in (cow, mor):
+        assert os.path.isdir(os.path.join(sink.target_dir, "v=0"))
+        markers = [
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(sink.target_dir)
+            for f in files
+            if "_SUCCESS" in f
+        ]
+        assert not markers, markers
 
 
 def test_metadata_tables_snapshots_and_files(spark, tmp_path):
@@ -1337,7 +1489,7 @@ def test_sink_sort_within_bucket_tightens_row_groups(spark, tmp_path):
     """sort_within_bucket must leave the committed STATE identical to
     the unsorted sink while making each file's rows monotone in the
     sort column — the property row-group stats pruning and run-length
-    compression feed on."""
+    compression feed on — and a rebucket must keep the files sorted."""
     import pyarrow.parquet as pq
 
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
@@ -1361,29 +1513,34 @@ def test_sink_sort_within_bucket_tightens_row_groups(spark, tmp_path):
     a = sorted((r.id, r.d) for r in plain.current_table(spark).collect())
     b = sorted((r.id, r.d) for r in srt.current_table(spark).collect())
     assert a == b
-    # every sorted-sink file is monotone in d
-    snap = srt._snapshot_path(srt.committed_snapshot())
     import os as _os
 
-    checked = 0
-    for bdir in _os.listdir(snap):
-        if not bdir.startswith("__bucket="):
-            continue
-        for fn in _os.listdir(_os.path.join(snap, bdir)):
-            if not fn.endswith(".parquet"):
+    def sorted_files() -> int:
+        """Assert every committed-snapshot file is monotone in d; count them."""
+        snap = srt._snapshot_path(srt.committed_snapshot())
+        checked = 0
+        for bdir in _os.listdir(snap):
+            if not bdir.startswith("__bucket="):
                 continue
-            t = pq.read_table(_os.path.join(snap, bdir, fn), columns=["d"])
-            vals = t.column("d").to_pylist()
-            assert vals == sorted(vals)
-            checked += 1
-    assert checked >= 2
+            for fn in _os.listdir(_os.path.join(snap, bdir)):
+                if not fn.endswith(".parquet"):
+                    continue
+                t = pq.read_table(_os.path.join(snap, bdir, fn), columns=["d"])
+                vals = t.column("d").to_pylist()
+                assert vals == sorted(vals)
+                checked += 1
+        return checked
+
+    assert sorted_files() >= 2
+    srt.rebucket(spark, 4)
+    assert sorted_files() >= 4
 
 
 def test_sink_zone_map_losslessness_random_ranges(spark, tmp_path):
     """Zone-pruned range lookups must equal the full-scan filter for
     ANY range — including ranges straddling bucket zone boundaries,
     empty ranges, and point ranges — and must survive a rebucket
-    (zones dropped -> always-scan, never a wrong prune).  Mirrors the
+    (zones rebuilt under the new map, never a wrong prune).  Mirrors the
     cdclog writer's 25-random-predicate losslessness test."""
     import random
 
@@ -1430,12 +1587,11 @@ def test_sink_zone_map_losslessness_random_ranges(spark, tmp_path):
             assert got == want, (lo, hi)
     finally:
         full.unpersist()
-    # rebucket drops zones: probe returns every bucket, lookups stay
-    # correct through the always-scan path
+    # rebucket rebuilds zones under the new map: one per new bucket,
+    # and lookups stay exact through the rebuilt pruning
     sink.rebucket(spark, 8)
     man = sink._read_manifest(sink.committed_snapshot())
-    assert "zones" not in man
-    assert len(sink.zone_probe_buckets("d", 0, 1)) == len(man["buckets"])
+    assert set(man["zones"]["d"]) == set(man["buckets"])
     got = sorted(
         (r.id, r.d)
         for r in sink.lookup_range(spark, "d", 1000, 2000).collect()
@@ -1452,7 +1608,8 @@ def test_sink_zone_map_losslessness_random_ranges(spark, tmp_path):
 def test_sink_stats_table_reflects_pruning_metadata(spark, tmp_path):
     """stats_table must census the committed manifest's pruning state:
     every bucket row, zone rows with stringified bounds, and bloom
-    rows per tracked column — and show drops after a rebucket."""
+    rows per tracked column — and keep them through a rebucket, which
+    rebuilds them under the new bucket map."""
     from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
 
     sink = SnapshotUpsertSink(
@@ -1475,7 +1632,10 @@ def test_sink_stats_table_reflects_pruning_metadata(spark, tmp_path):
     assert kinds == {"bucket", "zone", "bloom"}
     zrows = [r for r in st.collect() if r.stat == "zone"]
     assert all(r.col == "d" and int(r.zone_min) <= int(r.zone_max) for r in zrows)
-    # rebucket drops blooms + zones: only bucket rows remain
+    # rebucket rebuilds blooms + zones for every new bucket
     sink.rebucket(spark, 4)
-    kinds = {r.stat for r in sink.stats_table(spark).collect()}
-    assert kinds == {"bucket"}
+    st = sink.stats_table(spark).collect()
+    buckets = {r.bucket for r in st if r.stat == "bucket"}
+    assert {r.stat for r in st} == {"bucket", "zone", "bloom"}
+    assert {r.bucket for r in st if r.stat == "zone"} == buckets
+    assert {r.bucket for r in st if r.stat == "bloom"} == buckets

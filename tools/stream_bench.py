@@ -222,6 +222,9 @@ def main() -> None:
                     # the merge's exchange width per batch: one task
                     # per touched bucket, capped at the slot count
                     "write_tasks": [t["write_tasks"] for t in timings],
+                    # bucket count after each commit (grows by doubling
+                    # once a bucket outgrows one read split)
+                    "n_buckets": [t["n_buckets"] for t in timings],
                     "engine_overhead_sec": round(
                         ingest_s
                         - sum(
