@@ -97,6 +97,15 @@ _EMB_COUNT_CACHE: dict[str, int] = {}
 _FIT_BLOCK_CACHE: dict[tuple[str, int], tuple] = {}
 
 
+#: the ``min_k`` of each ``_auto_fit`` configuration the declared
+#: queries use: "probe" for the IVF probe queries
+#: (contamination_embedding_overlap, emb_ivf_auto_k), "dedup" for the
+#: bucketed near-dup scans (emb_neardup_bucketed, emb_semantic_dedup).
+#: Their oracles read the same values, and
+#: ``plans.artifacts.prepare_artifacts`` builds exactly these fits.
+AUTO_FIT_MIN_K = {"probe": 8, "dedup": 32}
+
+
 def _auto_fit(spark, sf_dir, min_k, with_block=False):
     """(embeddings, centroids, k[, block]) — the shared scale-aware
     IVF fit, with the corpus count (and, for the blocked kernels, the
@@ -759,110 +768,6 @@ def emb_ann_query_ivf(spark, sf_dir):
 
 
 @register(
-    "emb_hard_negative_mining",
-    oracle=f"""
-    WITH n AS (SELECT vec_id, embedding, {_NORM_SQ} AS norm_sq FROM embeddings),
-    c AS (SELECT vec_id AS cid, embedding AS cemb, norm_sq AS cnorm
-          FROM n WHERE vec_id < 8),
-    assign AS (
-      SELECT vec_id, cluster FROM (
-        SELECT e.vec_id, c.cid AS cluster,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 round({_DOT_EQ.format(a='e.embedding', b='c.cemb')}
-                       / (sqrt(e.norm_sq) * sqrt(c.cnorm)), 6) DESC,
-                 c.cid ASC) AS rn
-        FROM n e, c) WHERE rn = 1
-    ),
-    anchors AS (SELECT vec_id AS anchor_id, embedding AS aemb,
-                       norm_sq AS anorm
-                FROM n WHERE vec_id % 100 = 7),
-    aprobe AS (
-      SELECT anchor_id, cluster FROM (
-        SELECT a.anchor_id, c.cid AS cluster,
-               ROW_NUMBER() OVER (PARTITION BY a.anchor_id ORDER BY
-                 round({_DOT_EQ.format(a='a.aemb', b='c.cemb')}
-                       / (sqrt(a.anorm) * sqrt(c.cnorm)), 6) DESC,
-                 c.cid ASC) AS rn
-        FROM anchors a, c) WHERE rn <= 2
-    ),
-    cand AS (SELECT DISTINCT p.anchor_id, s.vec_id
-             FROM aprobe p JOIN assign s USING (cluster)
-             WHERE s.vec_id <> p.anchor_id),
-    scored AS (
-      SELECT d.anchor_id, d.vec_id AS negative_id,
-             round({_DOT_EQ.format(a='e.embedding', b='a.aemb')}
-                   / (sqrt(e.norm_sq) * sqrt(a.anorm)), 6) AS cos_sim
-      FROM cand d
-      JOIN n e ON e.vec_id = d.vec_id
-      JOIN anchors a ON a.anchor_id = d.anchor_id
-    )
-    SELECT anchor_id, negative_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
-                                   ORDER BY cos_sim DESC,
-                                            negative_id ASC) AS rn
-      FROM scored WHERE cos_sim < 0.95
-    ) WHERE rn <= 3
-    """,
-    tags=("llm", "similarity", "ann", "ivf", "contrastive", "training"),
-)
-def emb_hard_negative_mining(spark, sf_dir):
-    """HARD-NEGATIVE MINING for contrastive embedding training: for
-    each anchor (``vec_id % 100 = 7``), the top-3 most-similar vectors
-    that are NOT near-duplicates (cos < 0.95 — above that they are
-    presumed positives/dups, useless as negatives), searched ONLY in
-    the anchor's 2 probed IVF buckets.  The standard in-batch-negatives
-    upgrade every embedding-model pipeline runs at scale: candidate
-    space is probes/K of the corpus (bucket-keyed join, broadcast
-    centroids and anchors — no all-pairs), the per-anchor window is
-    anchor-partitioned.  Deterministic approximation, so the oracle
-    composes the identical probe pipeline and must agree
-    bit-for-bit."""
-    emb = table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    assign = ivf_assign(emb, centroids).select("vec_id", "cluster")
-    anchor_rows = emb.filter(F.col("vec_id") % 100 == 7)
-    anchors = anchor_rows.select(
-        F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("aemb")
-    )
-    aprobe = ivf_assign(anchor_rows, centroids, probes=2).select(
-        F.col("vec_id").alias("anchor_id"), "cluster"
-    )
-    cand = (
-        F.broadcast(aprobe)
-        .join(assign, on="cluster")
-        .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select("anchor_id", "vec_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(emb.select("vec_id", "embedding"), on="vec_id")
-        .join(F.broadcast(anchors), on="anchor_id")
-        .select(
-            "anchor_id",
-            F.col("vec_id").alias("negative_id"),
-            F.round(
-                cosine_sim(
-                    F.col("embedding").cast("array<double>"),
-                    F.col("aemb").cast("array<double>"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") < 0.95)
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos_sim"), F.asc("negative_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("anchor_id", "negative_id", "cos_sim")
-    )
-
-
-@register(
     "text_rrf_fusion",
     oracle="""
     WITH d AS (
@@ -1006,7 +911,7 @@ def emb_late_interaction_maxsim(spark, sf_dir):
     bench=True,
     oracle=f"""
     WITH n AS (SELECT vec_id, embedding, {_NORM_SQ} AS norm_sq FROM embeddings),
-    kk AS (SELECT {_AUTO_K_SQL.format(min_k=8)} AS k FROM n),
+    kk AS (SELECT {_AUTO_K_SQL.format(min_k=AUTO_FIT_MIN_K['probe'])} AS k FROM n),
     c AS (SELECT vec_id AS cid, embedding AS cemb, norm_sq AS cnorm
           FROM n WHERE vec_id < (SELECT k FROM kk)),
     train AS (SELECT * FROM n WHERE vec_id % 97 <> 0),
@@ -1070,7 +975,9 @@ def contamination_embedding_overlap(spark, sf_dir):
     keeps buckets constant-size (SCALE.md "The K lever, measured").
     The oracle recomputes the same K from COUNT(*) — exact at every
     scale factor."""
-    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=8, with_block=True)
+    emb, centroids, _, blk = _auto_fit(
+        spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"], with_block=True
+    )
     train = emb.filter(F.col("vec_id") % 97 != 0)
     eval_rows = emb.filter(F.col("vec_id") % 97 == 0)
     # map-side blocked assignment (round 12): the crossJoin+window
@@ -1122,7 +1029,7 @@ def contamination_embedding_overlap(spark, sf_dir):
     "emb_ivf_auto_k",
     oracle=f"""
     WITH n AS (SELECT vec_id, embedding, {_NORM_SQ} AS norm_sq FROM embeddings),
-    kk AS (SELECT {_AUTO_K_SQL.format(min_k=8)} AS k FROM n),
+    kk AS (SELECT {_AUTO_K_SQL.format(min_k=AUTO_FIT_MIN_K['probe'])} AS k FROM n),
     q AS (SELECT vec_id AS qid, embedding AS qemb, norm_sq AS qnorm
           FROM n WHERE vec_id % 101 = 3),
     truth AS (
@@ -1216,7 +1123,7 @@ def emb_ivf_auto_k(spark, sf_dir):
     the evaluation cost any ANN recall probe pays on a sampled Q);
     both candidate pipelines are broadcast-assign + cluster-keyed
     joins — probes/K of the corpus each, never all-pairs."""
-    emb, cen_auto, k_auto_val = _auto_fit(spark, sf_dir, min_k=8)
+    emb, cen_auto, k_auto_val = _auto_fit(spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"])
     cen_fixed = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
     )
@@ -1283,7 +1190,7 @@ def emb_ivf_auto_k(spark, sf_dir):
     bench=True,
     oracle=f"""
     WITH n AS (SELECT vec_id, embedding, {_NORM_SQ} AS norm_sq FROM embeddings),
-    kk AS (SELECT {_AUTO_K_SQL.format(min_k=32)} AS k FROM n),
+    kk AS (SELECT {_AUTO_K_SQL.format(min_k=AUTO_FIT_MIN_K['dedup'])} AS k FROM n),
     c AS (SELECT vec_id AS cid, embedding AS cemb, norm_sq AS cnorm
           FROM n WHERE vec_id < (SELECT k FROM kk)),
     scored AS (
@@ -1328,7 +1235,9 @@ def emb_neardup_bucketed(spark, sf_dir):
     Same output contract as emb_neardup_pairs restricted to
     bucket-cohabiting pairs — on clustered near-dups recall ≈ 1 (see
     tests/test_llm.py recall test)."""
-    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=32, with_block=True)
+    emb, centroids, _, blk = _auto_fit(
+        spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"], with_block=True
+    )
     return bucketed_cosine_pairs_blocked(
         emb, centroids, threshold=0.4, probes=2, block=blk
     )
@@ -3076,7 +2985,7 @@ def dedup_lsh_parameter_sweep(spark, sf_dir):
     oracle=f"""
     WITH RECURSIVE
     n AS (SELECT vec_id, embedding, {_NORM_SQ} AS norm_sq FROM embeddings),
-    kk AS (SELECT {_AUTO_K_SQL.format(min_k=32)} AS k FROM n),
+    kk AS (SELECT {_AUTO_K_SQL.format(min_k=AUTO_FIT_MIN_K['dedup'])} AS k FROM n),
     c AS (SELECT vec_id AS cid, embedding AS cemb, norm_sq AS cnorm
           FROM n WHERE vec_id < (SELECT k FROM kk)),
     scored AS (
@@ -3145,7 +3054,9 @@ def emb_semantic_dedup(spark, sf_dir):
     demo floor keeps the sf0.01 result identical): fixed K=32 was
     9.3× wall for 10× data at sf1; K ∝ √N keeps buckets constant-size
     and the oracle recomputes the same K from COUNT(*)."""
-    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=32, with_block=True)
+    emb, centroids, _, blk = _auto_fit(
+        spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"], with_block=True
+    )
     pairs = bucketed_cosine_pairs_blocked(
         emb, centroids, threshold=0.4, probes=2, block=blk
     )

@@ -43,9 +43,13 @@ def register(
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ):
-    """Decorator: add ``fn(spark, sf_dir) -> DataFrame`` to REGISTRY."""
+    """Decorator: add ``fn(spark, sf_dir) -> DataFrame`` to REGISTRY.
+    A name already registered raises: a second definition would
+    silently replace the first."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         REGISTRY[name] = QuerySpec(
             name=name,
             fn=fn,

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import base64
 import contextlib
+import copy
 import json
 import os
 import re
@@ -247,9 +248,9 @@ class SnapshotUpsertSink:
         #: columns are refused (parquet NaN row-group stats are the
         #: PARQUET-1222 silent-drop class the cdclog writer already
         #: guards against), timestamps belong in an integer epoch
-        #: column.  GC'd buckets keep carried zones (row removal can
-        #: only over-approximate — over-scan, never a miss); rebucket
-        #: rebuilds them, like blooms, under the new bucket map.
+        #: column.  Every bucket rewrite (merge, GC, compaction,
+        #: rebucket) rebuilds the zones and blooms of the buckets it
+        #: writes.
         self.zone_cols = list(zone_cols) if zone_cols else None
         #: sort rows by these columns WITHIN each bucket before the
         #: parquet write (Iceberg sort-order / Delta OPTIMIZE ZORDER's
@@ -748,16 +749,9 @@ class SnapshotUpsertSink:
         expired."""
         manifest = self._read_manifest(snapshot)
         if manifest is None:
-            # the flat fallback is ONLY for true pre-manifest legacy
-            # targets (no manifest anywhere).  A manifest-era target
-            # with a bare snapshot dir is an uncommitted/crashed attempt
-            # (or a pointer rolled onto one) — reading it would return
-            # partial, never-committed state.
-            if not store.has_any_manifest(self.target_dir) and os.path.isdir(
-                self._snapshot_path(snapshot)
-            ):
-                # pre-manifest flat snapshot (legacy layout)
-                return spark.read.parquet(self._snapshot_path(snapshot))
+            # a bare snapshot dir is an uncommitted/crashed attempt (or
+            # a pointer rolled onto one) — reading it would return
+            # partial, never-committed state
             raise ValueError(
                 f"snapshot {snapshot} has no manifest (expired, never "
                 "committed, or a crashed writer's data); run "
@@ -1029,29 +1023,28 @@ class SnapshotUpsertSink:
         expire_snapshots fodder.  Batch-id numbering is preserved so
         the replay guard keeps rejecting already-seen batches."""
         manifest = self._read_manifest(snapshot)
-        if manifest is None and not os.path.isdir(self._snapshot_path(snapshot)):
-            raise ValueError(f"cannot roll back to unknown snapshot {snapshot}")
-        if manifest is None and store.has_any_manifest(self.target_dir):
-            # a bare v=N dir on a manifest-era target is a crashed
-            # writer's uncommitted attempt — rolling the pointer onto it
-            # would make current_state serve partial state
+        if manifest is None:
+            if not os.path.isdir(self._snapshot_path(snapshot)):
+                raise ValueError(f"cannot roll back to unknown snapshot {snapshot}")
+            # a bare v=N dir is a crashed writer's uncommitted attempt —
+            # rolling the pointer onto it would make current_state serve
+            # partial state
             raise ValueError(
                 f"cannot roll back to snapshot {snapshot}: no manifest "
                 "(uncommitted/crashed writer data, not a committed snapshot)"
             )
-        if manifest is not None:
-            for b, at_snap in manifest["buckets"].items():
-                if not os.path.isdir(self._bucket_path(at_snap, int(b))):
-                    raise ValueError(
-                        f"snapshot {snapshot} is not fully retained "
-                        f"(bucket {b} expired)"
-                    )
-            for s in manifest.get("deltas") or []:
-                if not os.path.isdir(self._delta_path(s)):
-                    raise ValueError(
-                        f"snapshot {snapshot} is not fully retained "
-                        f"(delta {s} expired)"
-                    )
+        for b, at_snap in manifest["buckets"].items():
+            if not os.path.isdir(self._bucket_path(at_snap, int(b))):
+                raise ValueError(
+                    f"snapshot {snapshot} is not fully retained "
+                    f"(bucket {b} expired)"
+                )
+        for s in manifest.get("deltas") or []:
+            if not os.path.isdir(self._delta_path(s)):
+                raise ValueError(
+                    f"snapshot {snapshot} is not fully retained "
+                    f"(delta {s} expired)"
+                )
         cur_lineage, committed_batch, cur_snap = self.committed()
         if cur_snap is None:
             # no committed pointer: there is nothing to roll back FROM,
@@ -1880,17 +1873,18 @@ class SnapshotUpsertSink:
             return
         spark = batch_df.sparkSession
         manifest = self._read_manifest(committed_snap)
-        legacy_base = None
-        if manifest is None and committed_snap is not None:
-            # pre-manifest (flat v=<snap>) layout: seed the merge with
-            # the ENTIRE legacy snapshot — silently treating it as
-            # empty state would drop every committed key.  This batch
-            # migrates the whole state into the bucketed layout.
-            legacy_base = spark.read.parquet(self._snapshot_path(committed_snap))
         if manifest is None:
+            if committed_snap is not None:
+                # merging onto empty state would drop every committed key
+                raise ValueError(
+                    f"committed snapshot {committed_snap} has no manifest "
+                    "(expired, never committed, or a crashed writer's "
+                    "data); run recover_interrupted_commit() or roll back "
+                    "to a manifest-bearing snapshot"
+                )
             manifest = {"n_buckets": self.n_buckets, "buckets": {}}
         batch_df = self._admit(spark, batch_df, batch_id, manifest)
-        if self.merge_on_read and legacy_base is None:
+        if self.merge_on_read:
             n_pending = self._append_delta(
                 spark, batch_df, manifest, committed_snap, batch_id
             )
@@ -1899,8 +1893,8 @@ class SnapshotUpsertSink:
             return
         if manifest.get("deltas"):
             # a copy-on-write batch over pending deltas (sink reopened
-            # with merge_on_read=False, or the legacy-migration path):
-            # fold first so the merge below sees a fully-bucketed base
+            # with merge_on_read=False): fold first so the merge below
+            # sees a fully-bucketed base
             self.fold_deltas(spark)
             lineage, committed_batch, committed_snap = self.committed()
             manifest = self._read_manifest(committed_snap)
@@ -1911,7 +1905,6 @@ class SnapshotUpsertSink:
             committed_snap,
             commit_batch_id=batch_id,
             claim_batch_id=batch_id,
-            legacy_base=legacy_base,
         )
 
     def _admit(
@@ -1991,7 +1984,6 @@ class SnapshotUpsertSink:
         committed_snap: int | None,
         commit_batch_id: int,
         claim_batch_id: int | None,
-        legacy_base: DataFrame | None = None,
         branch: str | None = None,
     ) -> None:
         """The copy-on-write merge body, shared by process_batch (live
@@ -1999,16 +1991,11 @@ class SnapshotUpsertSink:
         claim, batch_id=None, commit preserves the last batch id), and
         stage_batch (``branch`` set: commit targets the branch ref,
         main pointer untouched)."""
-        n_buckets = manifest["n_buckets"]
-        bucket = self._bucket_col(n_buckets)
+        bucket = self._bucket_col(manifest["n_buckets"])
         # no batch pre-compaction: the merge below window-compacts the
         # union anyway, so compacting the batch first would pay a whole
         # extra shuffle+sort for rows the final window re-examines
         tagged = batch_df.withColumn("__bucket", bucket)
-        if legacy_base is not None:
-            tagged = legacy_base.withColumn("__bucket", bucket).unionByName(
-                tagged, allowMissingColumns=True
-            )
         t_setup = time.time()
         # AQE off for the sink's two fixed-shape jobs: the probe has no
         # exchange and the merge is explicitly repartitioned to the
@@ -2021,12 +2008,10 @@ class SnapshotUpsertSink:
             # touched-bucket probe: ONE stage, no reduce — a noop write
             # of the __bucket projection whose map tasks fold their
             # bucket ids into an observed collect_set (merged on the
-            # driver, like the bloom positions below).  The probe runs
-            # on the RAW batch, not the compacted pipeline: compaction
-            # keeps (at least) one row per key, so the raw batch's
-            # key-hash bucket set IS the compacted set.  The
-            # legacy-migration batch probes its whole legacy base too:
-            # it must rewrite EVERY legacy bucket.
+            # driver, like the bloom positions of the write).  The
+            # probe runs on the RAW batch, not the compacted pipeline:
+            # compaction keeps (at least) one row per key, so the raw
+            # batch's key-hash bucket set IS the compacted set.
             probe = Observation()
             tagged.select("__bucket").observe(
                 probe, F.collect_set("__bucket").alias("touched")
@@ -2038,7 +2023,6 @@ class SnapshotUpsertSink:
                 for b in touched
                 if str(b) in manifest["buckets"]
             ]
-            stored_schema = manifest.get("schema")
             if base_paths:
                 # allowMissingColumns = schema evolution: a batch may
                 # ADD columns (old state rows read NULL there) or
@@ -2049,7 +2033,7 @@ class SnapshotUpsertSink:
                 # columns null-fill) instead of paying the mergeSchema
                 # footer-merge job every micro-batch.
                 base = (
-                    self._state_reader(spark, stored_schema)
+                    self._state_reader(spark, manifest.get("schema"))
                     .parquet(*base_paths)
                     .withColumn("__bucket", bucket)
                 )
@@ -2058,148 +2042,33 @@ class SnapshotUpsertSink:
                 unioned = tagged
             # ONE bucket-aligned shuffle: compaction windows over
             # (__bucket, keys) on data repartitioned by __bucket into
-            # one partition per touched bucket, up to the slot count —
-            # an untouched bucket would only schedule an empty task.
-            # Each bucket still lands whole in one task and sorted, so
-            # the partitionBy write keeps one file per bucket per
-            # snapshot.
-            write_tasks = min(len(touched), spark.sparkContext.defaultParallelism)
+            # one partition per touched bucket, up to the slot count.
+            write_tasks = _bucket_tasks(spark, len(touched))
             merged = latest_per_key_bucketed(
                 unioned, self.keys, self.order_by, "__bucket", max(write_tasks, 1)
             )
-            if self.sort_within_bucket:
-                # local per-partition sort on the already-bucket-aligned
-                # data: tightens row-group stats, adds no exchange
-                merged = merged.sortWithinPartitions(
-                    "__bucket", *self.sort_within_bucket
-                )
-            merged, bloom_obs = self._observe_blooms(merged)
-
-            if branch is None:
-                new_snap = (
-                    committed_snap if committed_snap is not None else -1
-                ) + 1
-                # writer fence, before data
-                self._claim(new_snap, claim_batch_id)
-            else:
-                # staged snapshots take interleaved lane numbers: the
-                # first stage consumes the branch's reservation (claim
-                # upgraded in place below); later stages take the next
-                # free number from the deterministic allocator.  Two
-                # branches staging CONCURRENTLY can read the same refs
-                # state and compute the same candidate — the O_EXCL
-                # claim makes exactly one proceed, and the loser's
-                # correct move is to RE-ALLOCATE on the refreshed refs
-                # (the winner's claim is durable even before its ref
-                # update lands, so the allocator must skip past it by
-                # probing, Iceberg's commit-retry loop), not to
-                # surface a spurious conflict for a legal concurrent
-                # stage.  Only allocator-chosen numbers retry; a
-                # conflict on the branch's own RESERVATION is a real
-                # double-writer on one branch and still raises.
-                b_ref = self.refs()["branches"][branch]
-                use_reservation = (
-                    not b_ref.get("snaps")
-                    and b_ref.get("reserved") is not None
-                )
-                if use_reservation:
-                    new_snap = int(b_ref["reserved"])
-                    self._claim(
-                        new_snap,
-                        claim_batch_id,
-                        branch=branch,
-                        expected_head=committed_snap,
-                    )
-                else:
-                    new_snap = self._next_lane_number(self.refs())
-                    for _ in range(64):
-                        try:
-                            self._claim(
-                                new_snap,
-                                claim_batch_id,
-                                branch=branch,
-                                expected_head=committed_snap,
-                            )
-                            break
-                        except ConcurrentCommitError:
-                            b_now = self.refs()["branches"].get(branch)
-                            if (
-                                b_now is None
-                                or b_now.get("snapshot") != committed_snap
-                            ):
-                                # OUR branch moved (or vanished) — a
-                                # real same-branch conflict, not a lane
-                                # collision: surface it
-                                raise
-                            holder = (
-                                store.read_claim(self.target_dir, new_snap)
-                                or ("",)
-                            )[0]
-                            if holder.endswith(f"@wap:{branch}"):
-                                # the colliding claim is OUR OWN
-                                # branch's: a concurrent second writer
-                                # on this branch (its ref update just
-                                # hasn't landed yet).  Probing past it
-                                # would let both batches stage against
-                                # the SAME head — two diverging diffs
-                                # recorded as one chain.  Per-branch
-                                # single-writer is the contract: raise.
-                                raise ConcurrentCommitError(
-                                    f"branch {branch!r} has a concurrent "
-                                    f"staged writer (claim at {new_snap}); "
-                                    "one writer per branch — if it is "
-                                    "live, wait and retry on the new "
-                                    "head; if it died, "
-                                    "recover_interrupted_commit() sweeps "
-                                    "its unrecorded claim"
-                                ) from None
-                            # a concurrent OTHER branch holds this
-                            # number: probe upward past every durable
-                            # claim — refs alone can lag a winner's
-                            # ref update
-                            probe = max(
-                                new_snap + 1,
-                                self._next_lane_number(self.refs()),
-                            )
-                            while os.path.exists(self._claim_path(probe)):
-                                probe += 1
-                            new_snap = probe
-                    else:
-                        raise ConcurrentCommitError(
-                            f"could not allocate a staged snapshot lane "
-                            f"for branch {branch!r} after 64 attempts"
-                        )
-            if touched:
-                # data first (always a fresh directory — never one being read)
-                rewritten = self._write_buckets(merged, new_snap)
-            else:
-                # nothing admitted (an all-poison file, a batch wholly
-                # below the GC floor): no write job — commit manifest +
-                # pointer only, so the replay guard still advances.  The
-                # dir exists so snapshots_table sees every snapshot.
-                os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
-                rewritten, bloom_obs = set(), None
+            new_snap = self._claim_merge(committed_snap, claim_batch_id, branch)
+            # data first (always a fresh directory — never one being
+            # read).  Nothing admitted (an all-poison file, a batch
+            # wholly below the GC floor) touches no bucket: no write
+            # job, and the commit still advances the replay guard.
+            fields = self._write_buckets(merged, new_snap, manifest, touched)
         t_write = time.time()
         # … then manifest (rewritten buckets point at new_snap, all
         # others keep their byte-identical files) + pointer
-        new_buckets = dict(manifest["buckets"])
-        for b in rewritten:
-            new_buckets[str(b)] = new_snap
         self._commit(
             new_snap,
             manifest,
             commit_batch_id,
             branch=branch,
-            buckets=new_buckets,
-            schema=self._next_schema(manifest, merged.schema),
             # a bucket merge consumes any pending deltas (fold_deltas
             # routes here), so the new manifest starts with none
             deltas=None,
-            **self._rewritten_stats(manifest, bloom_obs, new_snap, rewritten),
+            **fields,
         )
         n_buckets = manifest["n_buckets"]
-        if branch is None and self.sized_to_data and rewritten:
-            n_buckets = self._grow_to_split(spark, new_snap, rewritten, n_buckets)
+        if branch is None and self.sized_to_data and touched:
+            n_buckets = self._grow_to_split(spark, new_snap, touched, n_buckets)
         # per-phase wall clock of the LAST committed batch — the sink's
         # own latency breakdown (T8 observability; tools/stream_bench.py
         # aggregates it to locate fixed per-micro-batch overhead);
@@ -2213,74 +2082,169 @@ class SnapshotUpsertSink:
             "n_buckets": n_buckets,
         }
 
-    def _observe_blooms(self, df: DataFrame):
-        """Attach this sink's bloom aggregates to ``df`` as observe()
-        metrics, so the positions ride the WRITE job (no extra pass):
-        each position is bucket * bits + hash, so one global
-        collect_set per (column, hash seed) carries every bucket's
-        filter.  Returns ``(df, observed)``; ``observed`` (None when no
-        bloom column is present) goes to :meth:`_bloom_doc` once ``df``
-        has been written."""
-        cols = [c for c in self.bloom_cols or [] if c in df.columns]
-        if not cols:
-            return df, None
-        obs = Observation()
-        aggs = [
-            F.collect_set(
-                F.col("__bucket").cast("bigint") * self.bloom_bits
-                + F.pmod(
-                    F.xxhash64(F.col(c).cast("string"), F.lit(s)),
-                    F.lit(self.bloom_bits),
+    def _claim_merge(
+        self, committed_snap: int | None, claim_batch_id: int | None, branch: str | None
+    ) -> int:
+        """Claim the snapshot a merge on ``committed_snap`` writes and
+        return its number: ``committed_snap + 1`` on main, a staged lane
+        number on a branch."""
+        if branch is None:
+            new_snap = (committed_snap if committed_snap is not None else -1) + 1
+            # writer fence, before data
+            self._claim(new_snap, claim_batch_id)
+            return new_snap
+        # staged snapshots take interleaved lane numbers: the first
+        # stage consumes the branch's reservation (claim upgraded in
+        # place below); later stages take the next free number from the
+        # deterministic allocator.  Two branches staging CONCURRENTLY
+        # can read the same refs state and compute the same candidate —
+        # the O_EXCL claim makes exactly one proceed, and the loser's
+        # correct move is to RE-ALLOCATE on the refreshed refs (the
+        # winner's claim is durable even before its ref update lands, so
+        # the allocator must skip past it by probing, Iceberg's
+        # commit-retry loop), not to surface a spurious conflict for a
+        # legal concurrent stage.  Only allocator-chosen numbers retry;
+        # a conflict on the branch's own RESERVATION is a real
+        # double-writer on one branch and still raises.
+        b_ref = self.refs()["branches"][branch]
+        if not b_ref.get("snaps") and b_ref.get("reserved") is not None:
+            new_snap = int(b_ref["reserved"])
+            self._claim(
+                new_snap, claim_batch_id, branch=branch, expected_head=committed_snap
+            )
+            return new_snap
+        new_snap = self._next_lane_number(self.refs())
+        for _ in range(64):
+            try:
+                self._claim(
+                    new_snap,
+                    claim_batch_id,
+                    branch=branch,
+                    expected_head=committed_snap,
                 )
-            ).alias(f"{c}::{s}")
-            for c in cols
-            for s in range(self.bloom_hashes)
-        ]
-        return df.observe(obs, *aggs), (obs, cols)
+                return new_snap
+            except ConcurrentCommitError:
+                b_now = self.refs()["branches"].get(branch)
+                if b_now is None or b_now.get("snapshot") != committed_snap:
+                    # OUR branch moved (or vanished) — a real
+                    # same-branch conflict, not a lane collision:
+                    # surface it
+                    raise
+                holder = (store.read_claim(self.target_dir, new_snap) or ("",))[0]
+                if holder.endswith(f"@wap:{branch}"):
+                    # the colliding claim is OUR OWN branch's: a
+                    # concurrent second writer on this branch (its ref
+                    # update just hasn't landed yet).  Probing past it
+                    # would let both batches stage against the SAME
+                    # head — two diverging diffs recorded as one chain.
+                    # Per-branch single-writer is the contract: raise.
+                    raise ConcurrentCommitError(
+                        f"branch {branch!r} has a concurrent "
+                        f"staged writer (claim at {new_snap}); "
+                        "one writer per branch — if it is "
+                        "live, wait and retry on the new "
+                        "head; if it died, "
+                        "recover_interrupted_commit() sweeps "
+                        "its unrecorded claim"
+                    ) from None
+                # a concurrent OTHER branch holds this number: probe
+                # upward past every durable claim — refs alone can lag
+                # a winner's ref update
+                probe = max(new_snap + 1, self._next_lane_number(self.refs()))
+                while os.path.exists(self._claim_path(probe)):
+                    probe += 1
+                new_snap = probe
+        raise ConcurrentCommitError(
+            f"could not allocate a staged snapshot lane "
+            f"for branch {branch!r} after 64 attempts"
+        )
 
-    def _bloom_doc(self, observed) -> dict:
-        """Decode ``_observe_blooms``' positions into a bloom doc
-        ``{"bits", "hashes", "cols": {col: {bucket: b64}}}`` (no cols
-        when nothing was observed).  Blocks until the write finished."""
-        fresh_blooms: dict[str, dict[str, str]] = {}
-        if observed is not None:
-            obs, cols = observed
-            got = obs.get
-            for c in cols:
-                fresh: dict[int, bytearray] = {}
-                for s in range(self.bloom_hashes):
-                    for pos in got[f"{c}::{s}"] or []:
-                        bkt, bit = divmod(int(pos), self.bloom_bits)
-                        buf = fresh.setdefault(bkt, bytearray(self.bloom_bits // 8))
-                        buf[bit >> 3] |= 1 << (bit & 7)
-                fresh_blooms[c] = {
-                    str(bkt): base64.b64encode(bytes(buf)).decode()
-                    for bkt, buf in fresh.items()
-                }
-        return {"bits": self.bloom_bits, "hashes": self.bloom_hashes, "cols": fresh_blooms}
-
-    def _rewritten_stats(
-        self, prev: dict | None, observed, snapshot: int, rewritten
+    def _write_buckets(
+        self, df: DataFrame | None, snapshot: int, prev: dict, replaced
     ) -> dict:
-        """The ``blooms`` / ``zones`` commit fields after ``rewritten``
-        buckets were written at ``snapshot``: a rewritten bucket's
-        carried filter / zone is STALE, so it takes the fresh one the
-        write computed (bloom positions observed by the write job,
-        zones folded from the written footers); every other bucket
-        keeps ``prev``'s (pass None to drop them all)."""
-        replaced = {str(b) for b in rewritten}
+        """THE bucket writer: every commit that writes bucket files —
+        the merge, rebucket, GC and compaction — writes through here.
+
+        ``df`` carries ``__bucket`` and is bucket-aligned (every bucket
+        whole in one task); it replaces the buckets ``replaced`` of the
+        manifest ``prev``.  Rows are sorted by ``sort_within_bucket``
+        inside each bucket, the bloom positions ride the write job as
+        observed aggregates (each position is bucket * bits + hash, so
+        one collect_set per (column, hash seed) carries every bucket's
+        filter), and the write runs with AQE off through
+        :func:`_overwrite_writer`, one partition dir per bucket under
+        snapshot ``snapshot``'s dir.  Static overwrite truncates any
+        orphan files a crashed attempt left, whatever the session's
+        partitionOverwriteMode.  Zones fold from the written footers.
+
+        Returns the commit fields: the bucket map with each replaced
+        bucket pointing at ``snapshot`` (dropped when it wrote no rows),
+        the schema, and blooms / zones whose replaced entries are the
+        fresh ones.  With nothing to replace there is no write job and
+        only the bucket map returns; the snapshot dir exists either way,
+        so snapshots_table sees every snapshot."""
+        replaced = {str(b) for b in replaced}
+        buckets = {b: s for b, s in prev["buckets"].items() if b not in replaced}
+        if not replaced:
+            os.makedirs(self._snapshot_path(snapshot), exist_ok=True)
+            return {"buckets": buckets}
+        if self.sort_within_bucket:
+            # a local per-partition sort on the bucket-aligned data:
+            # tightens row-group stats, adds no exchange
+            df = df.sortWithinPartitions("__bucket", *self.sort_within_bucket)
+        bloom_cols = [c for c in self.bloom_cols or [] if c in df.columns]
+        if bloom_cols:
+            observed = Observation()
+            df = df.observe(
+                observed,
+                *[
+                    F.collect_set(
+                        F.col("__bucket").cast("bigint") * self.bloom_bits
+                        + F.pmod(
+                            F.xxhash64(F.col(c).cast("string"), F.lit(s)),
+                            F.lit(self.bloom_bits),
+                        )
+                    ).alias(f"{c}::{s}")
+                    for c in bloom_cols
+                    for s in range(self.bloom_hashes)
+                ],
+            )
+        with _aqe_disabled(df.sparkSession):
+            (
+                _overwrite_writer(df)
+                .option("partitionOverwriteMode", "static")
+                .partitionBy("__bucket")
+                .parquet(self._snapshot_path(snapshot))
+            )
+        written = store.written_buckets(self.target_dir, snapshot)
+        buckets.update((str(b), snapshot) for b in written)
+        blooms: dict[str, dict[str, str]] = {}
+        for c in bloom_cols:
+            fresh: dict[int, bytearray] = {}
+            for s in range(self.bloom_hashes):
+                for pos in observed.get[f"{c}::{s}"] or []:
+                    bkt, bit = divmod(int(pos), self.bloom_bits)
+                    buf = fresh.setdefault(bkt, bytearray(self.bloom_bits // 8))
+                    buf[bit >> 3] |= 1 << (bit & 7)
+            blooms[c] = {
+                str(bkt): base64.b64encode(bytes(buf)).decode()
+                for bkt, buf in fresh.items()
+            }
         zones = (
             _footer_zones(
-                {b: self._bucket_path(snapshot, b) for b in rewritten},
-                self.zone_cols,
+                {b: self._bucket_path(snapshot, b) for b in written}, self.zone_cols
             )
             if self.zone_cols
             else None
         )
-        prev = prev or {}
         return {
+            "buckets": buckets,
+            "schema": self._next_schema(prev, df.schema),
             "blooms": self._merge_bucket_stats(
-                prev.get("blooms"), self._bloom_doc(observed), replaced, bloom=True
+                prev.get("blooms"),
+                {"bits": self.bloom_bits, "hashes": self.bloom_hashes, "cols": blooms},
+                replaced,
+                bloom=True,
             ),
             "zones": self._merge_bucket_stats(prev.get("zones"), zones, replaced),
         }
@@ -2309,22 +2273,6 @@ class SnapshotUpsertSink:
         grown = n_buckets << (-(-largest // target) - 1).bit_length()
         self.rebucket(spark, grown)
         return grown
-
-    def _write_buckets(self, df: DataFrame, snapshot: int) -> set[int]:
-        """THE bucket writer: write ``df`` (carrying ``__bucket``) as one
-        partition dir per bucket under snapshot ``snapshot``'s dir and
-        return the bucket ids that materialized (an empty bucket writes
-        no dir).  Static overwrite truncates any orphan files a crashed
-        attempt left, regardless of the session's
-        partitionOverwriteMode.  Writes go through
-        :func:`_overwrite_writer`."""
-        (
-            _overwrite_writer(df)
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("__bucket")
-            .parquet(self._snapshot_path(snapshot))
-        )
-        return store.written_buckets(self.target_dir, snapshot)
 
     @staticmethod
     def _next_schema(manifest: dict, written_schema) -> str | None:
@@ -2587,36 +2535,37 @@ class SnapshotUpsertSink:
             " zone_min string, zone_max string",
         )
 
-    # -- bucket compaction (M1 on the bucketed layout) ------------------
-    def compact_buckets(
-        self, spark: SparkSession, files_per_bucket: int = 1, min_files: int = 2
-    ) -> list[int]:
-        """Small-file compaction: rewrite buckets whose file count
-        exceeds ``min_files`` down to ``files_per_bucket`` files each,
-        under a fresh snapshot with the usual manifest+pointer commit
-        (crash-safe; readers never see a half-compacted state).
-        Buckets already compact keep their existing files untouched.
-        Returns the bucket ids rewritten.
-
-        The rewrite preserves rows bit-for-bit (coalesce, no merge
-        logic) — state equality is asserted by tests, and
-        expire_snapshots later reclaims the superseded files."""
+    # -- bucket maintenance: compaction, partition evolution ------------
+    def _maintenance_base(self, spark: SparkSession):
+        """The prologue compaction, GC and rebucket share: fold pending
+        MOR deltas first — each rewrites buckets by the manifest's
+        bucket map alone, and a row still sitting in a delta file (a
+        tombstone above all) would outlive the rewrite — then return
+        the committed ``(batch_id, snapshot, manifest)``; manifest is
+        None when there is no bucketed state."""
         if self.pending_deltas():
-            # fold MOR deltas first: compaction reasons over the bucket
-            # map alone, and folding is itself the best "compaction" of
-            # delta files
             self.fold_deltas(spark)
-        lineage, committed_batch, committed_snap = self.committed()
+        _, committed_batch, committed_snap = self.committed()
         manifest = self._read_manifest(committed_snap)
-        if manifest is None or not manifest["buckets"]:
-            return []
-        todo = [
-            int(b)
-            for b, snap in manifest["buckets"].items()
-            if len(store.data_files(self._bucket_path(snap, b))) > min_files
-        ]
-        if not todo:
-            return []
+        if manifest is not None and not manifest["buckets"]:
+            manifest = None
+        return committed_batch, committed_snap, manifest
+
+    def _maintenance_commit(
+        self,
+        df: DataFrame | None,
+        committed_batch: int | None,
+        committed_snap: int,
+        prev: dict,
+        replaced,
+        **changes,
+    ) -> int:
+        """Commit one maintenance rewrite on ``prev``, the manifest of
+        ``committed_snap``: claim the next snapshot, realign ``df``
+        (carrying ``__bucket``; None when ``replaced`` is empty) with
+        the one bucket-aligned shuffle into ``min(len(replaced),
+        defaultParallelism)`` tasks, write it through the bucket writer
+        and commit with ``changes``.  Returns the new snapshot."""
         new_snap = committed_snap + 1
         # maintenance claims carry batch_id=None (the documented
         # invariant): a live stream batch always claims with its int
@@ -2625,19 +2574,42 @@ class SnapshotUpsertSink:
         # The _commit manifest still records committed_batch so the
         # replay guard is preserved.
         self._claim(new_snap, None)  # writer fence
-        for b in sorted(todo):
-            df = spark.read.parquet(self._bucket_path(manifest["buckets"][str(b)], b))
-            df.coalesce(files_per_bucket).write.mode("overwrite").parquet(
-                self._bucket_path(new_snap, b)
+        if replaced:
+            df = df.repartition(
+                _bucket_tasks(df.sparkSession, len(replaced)), "__bucket"
             )
-        # same rows, fewer files: schema, blooms and zones carry over
-        self._commit(
-            new_snap,
-            manifest,
-            committed_batch,
-            buckets={**manifest["buckets"], **{str(b): new_snap for b in todo}},
+        fields = self._write_buckets(df, new_snap, prev, replaced)
+        self._commit(new_snap, prev, committed_batch, **fields, **changes)
+        return new_snap
+
+    def compact_buckets(self, spark: SparkSession, min_files: int = 2) -> list[int]:
+        """Small-file compaction: rewrite every bucket holding more than
+        ``min_files`` files as one file, all in one write job under a
+        fresh snapshot with the usual manifest+pointer commit
+        (crash-safe; readers never see a half-compacted state).
+        Buckets already compact keep their existing files untouched.
+        Returns the bucket ids rewritten.
+
+        The rewrite preserves rows (no merge logic) — state equality is
+        asserted by tests, and expire_snapshots later reclaims the
+        superseded files."""
+        committed_batch, committed_snap, manifest = self._maintenance_base(spark)
+        if manifest is None:
+            return []
+        todo = sorted(
+            int(b)
+            for b, snap in manifest["buckets"].items()
+            if len(store.data_files(self._bucket_path(snap, b))) > min_files
         )
-        return sorted(todo)
+        if not todo:
+            return []
+        rows = (
+            self._state_reader(spark, manifest.get("schema"))
+            .parquet(*[self._bucket_path(manifest["buckets"][str(b)], b) for b in todo])
+            .withColumn("__bucket", self._bucket_col(manifest["n_buckets"]))
+        )
+        self._maintenance_commit(rows, committed_batch, committed_snap, manifest, todo)
+        return todo
 
     def rebucket(self, spark: SparkSession, n_buckets_new: int) -> int:
         """PARTITION EVOLUTION (Iceberg bucket-spec evolution parity):
@@ -2672,37 +2644,29 @@ class SnapshotUpsertSink:
         count is already ``n_buckets_new`` — no empty commit)."""
         if n_buckets_new < 1:
             raise ValueError(f"n_buckets_new must be >= 1, got {n_buckets_new}")
-        if self.pending_deltas():
-            # fold first: delta files are bucket-agnostic, but the fold
-            # machinery reasons over ONE manifest bucket map at a time
-            self.fold_deltas(spark)
-        lineage, committed_batch, committed_snap = self.committed()
-        manifest = self._read_manifest(committed_snap)
-        if manifest is None or not manifest["buckets"]:
-            raise ValueError("nothing to rebucket: empty or legacy target")
+        committed_batch, committed_snap, manifest = self._maintenance_base(spark)
+        if manifest is None:
+            raise ValueError("nothing to rebucket: empty target")
         if manifest["n_buckets"] == n_buckets_new:
             return committed_snap
-        new_snap = committed_snap + 1
-        self._claim(new_snap, None)  # maintenance claim (batch_id=None)
-        os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
-        bucket = self._bucket_col(n_buckets_new)
         # tombstones ride along (current_state, not current_table):
         # their late-straggler protection must survive the rewrite
-        state = self.current_state(spark).withColumn("__bucket", bucket)
-        state = state.repartition(n_buckets_new, F.col("__bucket"))
-        if self.sort_within_bucket:
-            state = state.sortWithinPartitions("__bucket", *self.sort_within_bucket)
-        state, bloom_obs = self._observe_blooms(state)
-        with _aqe_disabled(spark):
-            written = self._write_buckets(state, new_snap)
-        self._commit(
-            new_snap,
-            manifest,
+        state = self.current_state(spark).withColumn(
+            "__bucket", self._bucket_col(n_buckets_new)
+        )
+        new_snap = self._maintenance_commit(
+            state,
             committed_batch,
-            n_buckets=n_buckets_new,
-            buckets={str(b): new_snap for b in written},
-            # prev=None: the old map's stats would prune wrong buckets
-            **self._rewritten_stats(None, bloom_obs, new_snap, written),
+            committed_snap,
+            # a new bucket map: no old bucket or stat carries over
+            {
+                **manifest,
+                "n_buckets": n_buckets_new,
+                "buckets": {},
+                "blooms": None,
+                "zones": None,
+            },
+            range(n_buckets_new),
         )
         self.n_buckets = n_buckets_new
         return new_snap
@@ -2769,24 +2733,10 @@ class SnapshotUpsertSink:
             _link_tree(self._delta_path(s), store.delta_path(target_dir, s))
         # every table setting carries over, so the clone enforces the
         # same CHECK constraints and keeps the same pruning stats
-        clone = SnapshotUpsertSink(
-            target_dir,
-            keys=self.keys,
-            order_by=self.order_by,
-            op_col=self.op_col,
-            lineage=self.lineage,
-            n_buckets=manifest["n_buckets"],
-            merge_on_read=self.merge_on_read,
-            fold_deltas_every=self.fold_deltas_every,
-            bloom_cols=self.bloom_cols,
-            bloom_bits=self.bloom_bits,
-            bloom_hashes=self.bloom_hashes,
-            checks=self.checks,
-            check_mode=self.check_mode,
-            zone_cols=self.zone_cols,
-            sort_within_bucket=self.sort_within_bucket,
-        )
-        clone.sized_to_data = self.sized_to_data
+        clone = copy.copy(self)
+        clone.target_dir = target_dir
+        clone.n_buckets = manifest["n_buckets"]
+        vars(clone).pop("last_batch_timings", None)  # the source's batch
         # one manifest (the committed snapshot's — bucket map, schema,
         # watermark, blooms, zones, deltas, chain links all carry over;
         # its commit record is the source pointer's), then the pointer:
@@ -2833,80 +2783,58 @@ class SnapshotUpsertSink:
         # TypeError.  ISO timestamps compare correctly lexicographically,
         # so all monotonicity checks run string-vs-string.
         watermark = _iso_watermark(watermark)
-        if self.pending_deltas():
-            # fold MOR deltas first: GC rewrites buckets, and a
-            # tombstone still sitting in a delta file would survive a
-            # bucket rewrite and resurrect on the compacted read path
-            self.fold_deltas(spark)
-        lineage, committed_batch, committed_snap = self.committed()
-        manifest = self._read_manifest(committed_snap)
-        if manifest is None or not manifest["buckets"]:
+        committed_batch, committed_snap, manifest = self._maintenance_base(spark)
+        if manifest is None:
             return 0
         prev = manifest.get("gc_watermark")
         if prev is not None and watermark < prev:
             raise ValueError(f"GC watermark must be monotone: {watermark} < {prev}")
-        ord_col = self._order_key()
-        n_buckets = manifest["n_buckets"]
-        bucket = self._bucket_col(n_buckets)
-
-        state = self.current_state(spark)
-        expirable = state.filter(
-            (F.col(self.op_col) == "d") & (F.col(ord_col) < F.lit(watermark))
+        expired = (F.col(self.op_col) == "d") & (
+            F.col(self._order_key()) < F.lit(watermark)
         )
+        bucket = self._bucket_col(manifest["n_buckets"])
         # count + touched-bucket set in ONE single-reduce aggregate
         # over one state scan (no persist needed for a single action)
-        n_expired, touched_set = expirable.agg(
-            F.count(F.lit(1)), F.collect_set(bucket)
-        ).collect()[0]
+        n_expired, touched_set = (
+            self.current_state(spark)
+            .filter(expired)
+            .agg(F.count(F.lit(1)), F.collect_set(bucket))
+            .collect()[0]
+        )
         touched = sorted(touched_set)
         if not touched and prev is not None and not (prev < watermark):
             # nothing to expire and the floor is already at this level —
             # a commit would advance the snapshot number for no change
             return 0
-        new_snap = committed_snap + 1
-        # maintenance claims carry batch_id=None (the documented
-        # invariant): a live stream batch always claims with its int
-        # batch id, so a concurrent gc/compact on the same sink object
-        # can never alias (and silently retake) a live batch's claim.
-        # The _commit manifest still records committed_batch so the
-        # replay guard is preserved.
-        self._claim(new_snap, None)  # writer fence
-        new_buckets = dict(manifest["buckets"])
-        # the snapshot dir exists even when no bucket is rewritten (a
-        # watermark-only commit) so snapshots_table sees every snapshot
-        os.makedirs(self._snapshot_path(new_snap), exist_ok=True)
+        keep = None
         if touched:
             keep = (
                 self._state_reader(spark, manifest.get("schema"))
                 .parquet(
                     *[self._bucket_path(manifest["buckets"][str(b)], b) for b in touched]
                 )
-                .filter(
-                    ~(
-                        (F.col(self.op_col) == "d")
-                        & (F.col(ord_col) < F.lit(watermark))
-                    )
-                )
+                .filter(~expired)
                 .withColumn("__bucket", bucket)
             )
-            written = self._write_buckets(keep, new_snap)
-            for b in touched:
-                if b in written:
-                    new_buckets[str(b)] = new_snap
-                else:
-                    # bucket held nothing but expired tombstones
-                    new_buckets.pop(str(b), None)
-        # GC only REMOVES rows: bloom filters and zones over a superset
-        # of the remaining rows can only over-approximate — the carried
-        # stats stay correct (false positives / over-scan, never a miss)
-        self._commit(
-            new_snap,
-            manifest,
+        # a bucket that held nothing but expired tombstones writes no
+        # rows and leaves the map; with nothing touched this is a
+        # watermark-only commit
+        self._maintenance_commit(
+            keep,
             committed_batch,
-            buckets=new_buckets,
+            committed_snap,
+            manifest,
+            touched,
             gc_watermark=watermark,
         )
         return n_expired
+
+
+def _bucket_tasks(spark: SparkSession, n_buckets: int) -> int:
+    """Tasks of a bucket-aligned shuffle over ``n_buckets`` buckets: one
+    per bucket, up to the slot count — an extra task would only be an
+    empty one, and each bucket still lands whole in one task."""
+    return min(n_buckets, spark.sparkContext.defaultParallelism)
 
 
 def _overwrite_writer(df: DataFrame):

@@ -130,14 +130,6 @@ def list_upgrade_markers(target_dir: str) -> list[int]:
     return _numbered(target_dir, _UPGRADE)
 
 
-def has_any_manifest(target_dir: str) -> bool:
-    """True iff the target has EVER committed a manifest — the
-    discriminator between a true pre-manifest legacy layout (flat
-    ``v=N`` dirs are committed state) and a manifest-era target (a bare
-    ``v=N`` dir is a crashed writer's uncommitted data)."""
-    return bool(list_manifests(target_dir))
-
-
 def written_buckets(target_dir: str, snapshot: int) -> set[int]:
     """Bucket ids whose partition dirs materialized in a snapshot write
     (an empty merged bucket writes no dir)."""

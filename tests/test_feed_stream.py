@@ -135,7 +135,7 @@ def test_feed_stream_skips_silent_ranges_and_chunks_backlog(
                            for j in range(4)]),
             i,
         )
-    base.compact_buckets(spark, files_per_bucket=1, min_files=0)
+    base.compact_buckets(spark, min_files=0)
     base.process_batch(_batch(spark, [(9, "z", "c", 4)]), 4)
 
     q = (

@@ -297,6 +297,18 @@ def test_registry_head_is_the_family_showcase():
     assert all(REGISTRY[n].oracle for n in head)
 
 
+def test_register_refuses_a_name_already_registered():
+    """A second ``register`` of a name raises instead of silently
+    replacing the first definition, and the first one stays."""
+    from lakehouse_cdc_spark.plans import REGISTRY, register
+
+    name = next(iter(REGISTRY))
+    first = REGISTRY[name]
+    with pytest.raises(ValueError, match=name):
+        register(name)(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is first
+
+
 def test_runtime_sized_sides_get_aqe_broadcast_at_small_scale(spark, sf_dir):
     """operators/hints.py's contract, proven empirically: a
     vocabulary-sized side marked runtime_sized (NO forced hint) is

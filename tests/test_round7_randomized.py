@@ -96,7 +96,7 @@ def test_random_stream_keeps_index_and_expiry_predictions_exact(
         # random maintenance between data commits
         r = rng.random()
         if r < 0.25:
-            base.compact_buckets(spark, files_per_bucket=1, min_files=1)
+            base.compact_buckets(spark, min_files=1)
         elif r < 0.4:
             base.rebucket(spark, rng.choice([2, 3, 4]))
         advance()
@@ -204,7 +204,7 @@ def test_random_stream_keeps_lsh_index_exact(spark, tmp_path, seed):
         )
         r = rng.random()
         if r < 0.25:
-            base.compact_buckets(spark, files_per_bucket=1, min_files=1)
+            base.compact_buckets(spark, min_files=1)
         elif r < 0.4:
             base.rebucket(spark, rng.choice([2, 3, 4]))
         advance()

@@ -372,9 +372,37 @@ def test_sink_does_not_grow_while_a_branch_is_open(spark, tmp_path):
     assert sink.current_table(spark).count() == 260 + 600
 
 
+def _fragment_buckets(sink: SnapshotUpsertSink, buckets, parts: int = 3) -> None:
+    """Rewrite each committed bucket dir in ``buckets`` as ``parts``
+    files holding its rows in reverse order — the layout an external
+    backfill tool may leave behind (the sink writes one sorted file per
+    bucket) — with pyarrow, so no ``_SUCCESS`` marker appears."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakehouse_cdc_spark.streaming import store
+
+    manifest = sink._read_manifest(sink.committed_snapshot())
+    for b in buckets:
+        bdir = sink._bucket_path(int(manifest["buckets"][str(b)]), b)
+        rows = pa.concat_tables(pq.read_table(f) for f in store.data_files(bdir))
+        rows = rows.take(list(range(rows.num_rows - 1, -1, -1)))
+        shutil.rmtree(bdir)
+        os.makedirs(bdir)
+        step = -(-rows.num_rows // parts)
+        for k in range(parts):
+            pq.write_table(
+                rows.slice(k * step, step),
+                os.path.join(bdir, f"part-{k:05d}-fragment.parquet"),
+            )
+
+
 def test_sink_commits_leave_no_success_marker(spark, tmp_path):
-    """The manifest is the commit record: bucket, delta and rebucket
-    writes leave no ``_SUCCESS`` marker (nor its ``.crc``)."""
+    """The manifest is the commit record: bucket, delta, rebucket,
+    compaction and GC writes leave no ``_SUCCESS`` marker (nor its
+    ``.crc``)."""
     cow = SnapshotUpsertSink(
         str(tmp_path / "cow"), keys=["id"], order_by=["seq"], n_buckets=2
     )
@@ -384,6 +412,18 @@ def test_sink_commits_leave_no_success_marker(spark, tmp_path):
     for sink in (cow, mor):
         sink.process_batch(_payload_batch(spark, range(20), 0), 0)
     cow.rebucket(spark, 4)
+    live = sorted(
+        int(b) for b in cow._read_manifest(cow.committed_snapshot())["buckets"]
+    )
+    _fragment_buckets(cow, live)
+    assert cow.compact_buckets(spark) == live
+    cow.process_batch(
+        spark.createDataFrame(
+            [(3, None, "d", 1)], "id int, v string, operation string, seq int"
+        ),
+        1,
+    )
+    assert cow.gc_tombstones(spark, watermark=5) == 1
     for sink in (cow, mor):
         assert os.path.isdir(os.path.join(sink.target_dir, "v=0"))
         markers = [
@@ -429,11 +469,11 @@ def test_metadata_tables_snapshots_and_files(spark, tmp_path):
 
 def test_compact_buckets_preserves_state(spark, tmp_path):
     """M1 on the bucketed sink: many-file buckets collapse to one file
-    per bucket under a fresh committed snapshot; state is identical,
-    already-compact buckets keep their old files, and expiry later
-    reclaims the superseded snapshot dirs."""
+    per bucket under a fresh committed snapshot, all in ONE Spark job
+    (one bucket-aligned shuffle into min(k, slots) write tasks); state
+    is identical, already-compact buckets keep their old files."""
     sink = SnapshotUpsertSink(
-        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=2
+        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=4
     )
     schema = "id int, v string, operation string, seq int"
     big = spark.createDataFrame(
@@ -441,33 +481,26 @@ def test_compact_buckets_preserves_state(spark, tmp_path):
     )
     sink.process_batch(big, 0)
     # the bucket-aligned write produces ONE file per bucket per
-    # snapshot, so fragmentation must be simulated: rewrite bucket 0's
-    # dir as 4 part files, the layout a pre-alignment writer (or an
-    # external backfill tool) leaves behind
-    snap = sink.committed_snapshot()
-    manifest = sink._read_manifest(snap)
-    b0 = sink._bucket_path(int(manifest["buckets"]["0"]), 0)
-    frag_rows = spark.read.parquet(b0).collect()
-    frag_schema = spark.read.parquet(b0).schema
-    import shutil
-
-    shutil.rmtree(b0)
-    spark.createDataFrame(frag_rows, frag_schema).repartition(4).write.parquet(
-        b0
-    )
+    # snapshot, so fragmentation must be simulated
+    _fragment_buckets(sink, [0, 1])
     before = {r.id: r.v for r in sink.current_table(spark).collect()}
     files0 = sink.files_table(spark).groupBy("bucket").count().collect()
     assert any(r["count"] > 2 for r in files0)
 
-    rewritten = sink.compact_buckets(spark, files_per_bucket=1)
-    assert rewritten  # something was compacted
+    rewritten = []
+    jobs = _jobs_run_by(spark, lambda: rewritten.extend(sink.compact_buckets(spark)))
+    assert rewritten == [0, 1]
+    assert len(jobs) == 1, jobs
+    assert jobs[0][-1] == min(2, spark.sparkContext.defaultParallelism), jobs
     after = {r.id: r.v for r in sink.current_table(spark).collect()}
     assert after == before
     files1 = {r.bucket: r["count"] for r in
               sink.files_table(spark).groupBy("bucket").count().collect()}
     assert all(files1[b] == 1 for b in rewritten)
+    manifest = sink._read_manifest(sink.committed_snapshot())
+    assert manifest["buckets"]["2"] == manifest["buckets"]["3"] == 0
     # idempotent: nothing left to compact
-    assert sink.compact_buckets(spark, files_per_bucket=1) == []
+    assert sink.compact_buckets(spark) == []
 
 
 def test_sink_schema_evolution_adds_column(spark, tmp_path):
@@ -535,32 +568,28 @@ def test_time_travel_and_rollback(spark, tmp_path):
     assert after[6] == "d6" and after[5] == "a5"
 
 
-def test_legacy_flat_layout_migrates_without_data_loss(spark, tmp_path):
-    """A sink committed under the round-1 flat layout (v=<snap> dir,
-    no manifest) must carry ALL its state into the bucketed layout on
-    the next batch — not silently start from empty."""
-    d = str(tmp_path / "t")
-    sink = SnapshotUpsertSink(d, keys=["id"], order_by=["seq"], n_buckets=4)
-    # hand-build the legacy layout: flat snapshot dir + pointer
-    legacy = spark.createDataFrame(
-        [(i, f"v{i}", "u", 0) for i in range(10)],
-        "id int, v string, operation string, seq int",
-    )
-    legacy.write.parquet(os.path.join(d, "v=0"))
-    with open(os.path.join(d, "_VERSION"), "w") as f:
-        f.write(":0:0")
-    assert sink.current_table(spark).count() == 10  # legacy read works
-
-    sink.process_batch(
+def test_process_batch_refuses_a_pointer_without_manifest(spark, tmp_path):
+    """A pointer at a snapshot with no manifest (a flat ``v=<snap>``
+    dir, or a crashed writer's data) must make process_batch raise and
+    leave the pointer where it is — merging onto empty state would
+    silently drop every committed key."""
+    schema = "id int, v string, operation string, seq int"
+    for mor in (False, True):
+        d = str(tmp_path / f"t{int(mor)}")
+        sink = SnapshotUpsertSink(
+            d, keys=["id"], order_by=["seq"], n_buckets=4, merge_on_read=mor
+        )
         spark.createDataFrame(
-            [(3, "v3-new", "u", 1)], "id int, v string, operation string, seq int"
-        ),
-        1,
-    )
-    state = {r.id: r.v for r in sink.current_table(spark).collect()}
-    assert len(state) == 10 and state[3] == "v3-new" and state[0] == "v0"
-    # and the new commit is manifest-backed (fully migrated)
-    assert sink._read_manifest(sink.committed_snapshot()) is not None
+            [(i, f"v{i}", "u", 0) for i in range(10)], schema
+        ).write.parquet(sink._snapshot_path(0))
+        sink._publish_pointer(None, 0, 0)
+        with pytest.raises(ValueError, match="no manifest"):
+            sink.process_batch(
+                spark.createDataFrame([(3, "v3-new", "u", 1)], schema), 1
+            )
+        assert sink.committed() == (None, 0, 0)
+        assert not os.path.exists(sink._snapshot_path(1))
+        assert not os.path.exists(sink._manifest_path(1))
 
 
 def test_gc_watermark_only_commit_and_noop(spark, tmp_path):
@@ -1534,6 +1563,27 @@ def test_sink_sort_within_bucket_tightens_row_groups(spark, tmp_path):
     assert sorted_files() >= 2
     srt.rebucket(spark, 4)
     assert sorted_files() >= 4
+    # compaction of fragmented, unsorted buckets writes them sorted
+    srt.process_batch(
+        spark.createDataFrame(
+            [(i, (i * 7919) % 1000, "d", 1) for i in range(0, 400, 10)],
+            "id int, d long, operation string, seq int",
+        ),
+        1,
+    )
+    live = sorted(
+        int(b) for b in srt._read_manifest(srt.committed_snapshot())["buckets"]
+    )
+    _fragment_buckets(srt, live)
+    assert srt.compact_buckets(spark) == live
+    assert sorted_files() == len(live)
+    # … and so does GC over them
+    _fragment_buckets(srt, live)
+    assert srt.gc_tombstones(spark, watermark=5) == 40
+    assert sorted_files() == len(live)
+    assert sorted(r.id for r in srt.current_table(spark).collect()) == [
+        i for i in range(400) if i % 10
+    ]
 
 
 def test_sink_zone_map_losslessness_random_ranges(spark, tmp_path):
