@@ -78,6 +78,20 @@ def get_spark(
         # dynamic partition overwrite, as the reference sets for its
         # Iceberg writes (src/processor/spark_session.py:168-169)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # streaming checkpoints commit through FileSystem, not the
+        # default FileContext manager: its rename stats source and
+        # destination with getFileLinkStatus, which a local filesystem
+        # without the native Hadoop library (pip PySpark ships none)
+        # answers by forking a `readlink` process — 24 forks per
+        # micro-batch.  FileSystem.rename is atomic on a local disk
+        # (rename(2)) and on HDFS, and the manager keeps the
+        # no-overwrite contract by checking `exists` first, under
+        # Spark's one-writer-per-checkpoint rule.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )

@@ -1852,7 +1852,10 @@ class SnapshotUpsertSink:
            then pointer, atomically.
 
         Per-batch cost is O(touched buckets × bucket size); untouched
-        bucket files are untouched bytes on disk.
+        bucket files are untouched bytes on disk.  Step 1's bucket set
+        comes from a one-stage probe job, skipped on a one-bucket sink
+        (the default sized-to-data sink below one read split), so such
+        a batch is ONE Spark job.
 
         Merge-on-read (``merge_on_read=True``): append the raw batch as
         a DELTA file set under ``v=<snap>/__delta`` — zero shuffle, no
@@ -1990,7 +1993,16 @@ class SnapshotUpsertSink:
         batches claim with their batch id), fold_deltas (maintenance
         claim, batch_id=None, commit preserves the last batch id), and
         stage_batch (``branch`` set: commit targets the branch ref,
-        main pointer untouched)."""
+        main pointer untouched).
+
+        On a multi-bucket manifest a one-stage probe job finds the
+        buckets the batch touches, then one write job rewrites them; a
+        batch that admits no rows touches none and runs no write job.
+        On a one-bucket manifest (every sink sized to its data until it
+        outgrows one read split) the probe could only answer bucket 0,
+        so it is skipped and the merge is the one write job — also for
+        a batch that admits no rows: it rewrites bucket 0 with the same
+        rows, or, on a sink with no state yet, writes no bucket dir."""
         bucket = self._bucket_col(manifest["n_buckets"])
         # no batch pre-compaction: the merge below window-compacts the
         # union anyway, so compacting the batch first would pay a whole
@@ -2005,19 +2017,22 @@ class SnapshotUpsertSink:
         # construction, so there is no skew for it to split.  Measured
         # ~0.13 s/micro-batch on local[32].
         with _aqe_disabled(spark):
-            # touched-bucket probe: ONE stage, no reduce — a noop write
-            # of the __bucket projection whose map tasks fold their
-            # bucket ids into an observed collect_set (merged on the
-            # driver, like the bloom positions of the write).  The
-            # probe runs on the RAW batch, not the compacted pipeline:
-            # compaction keeps (at least) one row per key, so the raw
-            # batch's key-hash bucket set IS the compacted set.
-            probe = Observation()
-            tagged.select("__bucket").observe(
-                probe, F.collect_set("__bucket").alias("touched")
-            ).write.format("noop").mode("overwrite").save()
-            touched = sorted(probe.get["touched"])
-            t_probe = time.time()
+            if manifest["n_buckets"] == 1:
+                # one bucket: the probe could only answer [0], so run
+                # no job for it
+                touched, t_probe = [0], t_setup
+            else:
+                # touched-bucket probe: ONE stage, no reduce.  It runs
+                # on the RAW batch, not the compacted pipeline:
+                # compaction keeps (at least) one row per key, so the
+                # raw batch's key-hash bucket set IS the compacted set.
+                touched = sorted(
+                    _observed_scan(
+                        tagged.select("__bucket"),
+                        F.collect_set("__bucket").alias("touched"),
+                    )["touched"]
+                )
+                t_probe = time.time()
             base_paths = [
                 self._bucket_path(manifest["buckets"][str(b)], b)
                 for b in touched
@@ -2050,8 +2065,9 @@ class SnapshotUpsertSink:
             new_snap = self._claim_merge(committed_snap, claim_batch_id, branch)
             # data first (always a fresh directory — never one being
             # read).  Nothing admitted (an all-poison file, a batch
-            # wholly below the GC floor) touches no bucket: no write
-            # job, and the commit still advances the replay guard.
+            # wholly below the GC floor) touches no bucket of a
+            # multi-bucket sink: no write job, and the commit still
+            # advances the replay guard.
             fields = self._write_buckets(merged, new_snap, manifest, touched)
         t_write = time.time()
         # … then manifest (rewritten buckets point at new_snap, all
@@ -2067,8 +2083,8 @@ class SnapshotUpsertSink:
             **fields,
         )
         n_buckets = manifest["n_buckets"]
-        if branch is None and self.sized_to_data and touched:
-            n_buckets = self._grow_to_split(spark, new_snap, touched, n_buckets)
+        if branch is None and self.sized_to_data:
+            n_buckets = self._grow_to_split(spark, new_snap, n_buckets)
         # per-phase wall clock of the LAST committed batch — the sink's
         # own latency breakdown (T8 observability; tools/stream_bench.py
         # aggregates it to locate fixed per-micro-batch overhead);
@@ -2249,24 +2265,26 @@ class SnapshotUpsertSink:
             "zones": self._merge_bucket_stats(prev.get("zones"), zones, replaced),
         }
 
-    def _grow_to_split(
-        self, spark: SparkSession, snapshot: int, rewritten, n_buckets: int
-    ) -> int:
+    def _grow_to_split(self, spark: SparkSession, snapshot: int, n_buckets: int) -> int:
         """Size-to-data growth after a main-line commit at ``snapshot``:
-        when its largest rewritten bucket holds more bytes than one read
+        when the largest bucket it wrote holds more bytes than one read
         split (``spark.sql.files.maxPartitionBytes``), ``rebucket`` to
         ``n_buckets × 2^k``, the smallest doubling that brings that
-        bucket back under the split.  The check stats the rewritten
-        bucket files (no Spark job).  No growth while a branch is open:
-        its publish would refuse a bucket count changed under it.
-        Returns the bucket count after."""
+        bucket back under the split.  The check stats the written
+        bucket files (no Spark job); a commit that wrote none never
+        grows.  No growth while a branch is open: its publish would
+        refuse a bucket count changed under it.  Returns the bucket
+        count after."""
         target = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         largest = max(
-            sum(
-                os.path.getsize(p)
-                for p in store.data_files(self._bucket_path(snapshot, b))
-            )
-            for b in rewritten
+            (
+                sum(
+                    os.path.getsize(p)
+                    for p in store.data_files(self._bucket_path(snapshot, b))
+                )
+                for b in store.written_buckets(self.target_dir, snapshot)
+            ),
+            default=0,
         )
         if largest <= target or self.refs()["branches"]:
             return n_buckets
@@ -2793,15 +2811,13 @@ class SnapshotUpsertSink:
             F.col(self._order_key()) < F.lit(watermark)
         )
         bucket = self._bucket_col(manifest["n_buckets"])
-        # count + touched-bucket set in ONE single-reduce aggregate
-        # over one state scan (no persist needed for a single action)
-        n_expired, touched_set = (
-            self.current_state(spark)
-            .filter(expired)
-            .agg(F.count(F.lit(1)), F.collect_set(bucket))
-            .collect()[0]
+        # count + touched-bucket set in one observed scan of the state
+        census = _observed_scan(
+            self.current_state(spark).filter(expired).select(bucket.alias("__bucket")),
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("__bucket").alias("touched"),
         )
-        touched = sorted(touched_set)
+        n_expired, touched = census["n"], sorted(census["touched"])
         if not touched and prev is not None and not (prev < watermark):
             # nothing to expire and the floor is already at this level —
             # a commit would advance the snapshot number for no change
@@ -2828,6 +2844,16 @@ class SnapshotUpsertSink:
             gc_watermark=watermark,
         )
         return n_expired
+
+
+def _observed_scan(df: DataFrame, *aggs: Column) -> dict:
+    """Evaluate the aggregates ``aggs`` over ``df`` in ONE stage: a
+    ``noop`` write whose map tasks fold their rows into observed
+    metrics, merged on the driver — no reduce stage and, with nothing to
+    re-plan, no job of AQE's own."""
+    observed = Observation()
+    df.observe(observed, *aggs).write.format("noop").mode("overwrite").save()
+    return observed.get
 
 
 def _bucket_tasks(spark: SparkSession, n_buckets: int) -> int:

@@ -22,6 +22,7 @@ from lakehouse_cdc_spark.streaming import (
     cdc_pipeline,
     file_cdc_source,
     session_window_agg,
+    store,
     tumbling_window_agg,
     watermark_dedup,
     with_retry,
@@ -221,6 +222,102 @@ def test_all_poison_batch_commits_without_a_write_job(spark, tmp_path):
     assert sink._read_manifest(1)["buckets"] == manifest0["buckets"]
     assert sorted(sink.current_table(spark).collect()) == before
     assert sink.last_batch_timings["write_tasks"] == 0
+
+
+def _poison_batch(spark):
+    """A decoded Debezium batch every message of which is poison: it
+    admits no rows."""
+    from pyspark.sql import types as T
+
+    from lakehouse_cdc_spark.cdc.decode import decode_debezium
+
+    payload = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("v", T.StringType()),
+            T.StructField("operation", T.StringType()),
+            T.StructField("seq", T.IntegerType()),
+        ]
+    )
+    raw = spark.createDataFrame(
+        [(v,) for v in (None, "", "empty", "{not json", '{"other": 1}')], "value string"
+    )
+    return decode_debezium(raw, schema=T.StructType([T.StructField("payload", payload)]))
+
+
+def test_one_bucket_sink_runs_one_job_per_batch(spark, tmp_path):
+    """A sink sized to its data stays at one bucket below one read
+    split, where the touched-bucket probe could only answer bucket 0:
+    each batch is the merge's write job alone, one task in its final
+    stage, and the probe phase reads zero."""
+    sink = SnapshotUpsertSink(str(tmp_path / "t"), keys=["id"], order_by=["seq"])
+    schema = "id int, v string, operation string, seq int"
+    want: dict = {}
+    for batch_id in range(3):
+        rows = [(i, f"v{i}-{batch_id}", "u", batch_id) for i in range(batch_id, 40, 3)]
+        want.update((r[0], r[1]) for r in rows)
+        batch = spark.createDataFrame(rows, schema)
+        jobs = _jobs_run_by(spark, lambda: sink.process_batch(batch, batch_id))
+        assert len(jobs) == 1 and jobs[0][-1] == 1, jobs
+        assert sink.last_batch_timings["probe_s"] == 0
+        assert sink.last_batch_timings["n_touched"] == 1
+    assert sink._read_manifest(2)["n_buckets"] == 1
+    assert {r.id: r.v for r in sink.current_table(spark).collect()} == want
+
+
+def test_all_poison_batch_on_a_fresh_one_bucket_sink_commits(spark, tmp_path):
+    """On a one-bucket sink with no state, a batch that admits no rows
+    runs the (empty) merge write, writes no bucket dir and still
+    commits; the next batch merges onto that commit."""
+    sink = SnapshotUpsertSink(str(tmp_path / "t"), keys=["id"], order_by=["seq"])
+    jobs = _jobs_run_by(spark, lambda: sink.process_batch(_poison_batch(spark), 0))
+    assert len(jobs) == 1, jobs
+    _lineage, batch, snap = sink.committed()
+    assert batch == 0 and snap == 0
+    assert sink._read_manifest(0)["buckets"] == {}
+    assert not store.written_buckets(sink.target_dir, 0)
+    # the one job is the merge's write: no probe ran
+    assert sink.last_batch_timings["probe_s"] == 0
+    assert sink.last_batch_timings["n_buckets"] == 1
+    sink.process_batch(
+        spark.createDataFrame(
+            [(1, "a", "c", 1), (2, "b", "c", 1), (1, "a2", "u", 2)],
+            "id int, v string, operation string, seq int",
+        ),
+        1,
+    )
+    assert sink.committed()[1:] == (1, 1)
+    assert {r.id: r.v for r in sink.current_table(spark).collect()} == {1: "a2", 2: "b"}
+
+
+def test_all_poison_batch_on_a_one_bucket_sink_keeps_the_table(spark, tmp_path):
+    """On a one-bucket sink holding state, a batch that admits no rows
+    is one write job that rewrites bucket 0 with the same rows."""
+    sink = SnapshotUpsertSink(str(tmp_path / "t"), keys=["id"], order_by=["seq"])
+    sink.process_batch(
+        spark.createDataFrame(
+            [(i, f"v{i}", "c", 0) for i in range(8)] + [(3, None, "d", 1)],
+            "id int, v string, operation string, seq int",
+        ),
+        0,
+    )
+    before = sorted(sink.current_table(spark).collect())
+    state_before = sorted(sink.current_state(spark).collect())
+    jobs = _jobs_run_by(spark, lambda: sink.process_batch(_poison_batch(spark), 1))
+    assert len(jobs) == 1, jobs
+    assert sink.committed()[1:] == (1, 1)
+    assert sink._read_manifest(1)["buckets"] == {"0": 1}
+    assert sorted(sink.current_table(spark).collect()) == before
+    assert sorted(sink.current_state(spark).collect()) == state_before
+
+
+def test_get_spark_commits_checkpoints_through_filesystem(spark):
+    """Streaming checkpoints commit through Hadoop FileSystem, whose
+    local rename forks no `readlink` process (FileContext's does)."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_bucketed_sink_n_buckets_fixed_at_first_commit(spark, tmp_path):
@@ -605,13 +702,23 @@ def test_gc_watermark_only_commit_and_noop(spark, tmp_path):
         ),
         0,
     )
-    assert sink.gc_tombstones(spark, watermark=50) == 0
+    expired = []
+
+    def gc(watermark):
+        jobs = _jobs_run_by(
+            spark, lambda: expired.append(sink.gc_tombstones(spark, watermark))
+        )
+        return [len(stages) for stages in jobs]
+
+    # the census is one single-stage job; nothing to expire writes nothing
+    assert gc(50) == [1]
     snap_after_first = sink.committed_snapshot()
     # same watermark again → pure no-op
-    assert sink.gc_tombstones(spark, watermark=50) == 0
+    assert gc(50) == [1]
     assert sink.committed_snapshot() == snap_after_first
     # higher watermark → commits even with nothing to expire
-    assert sink.gc_tombstones(spark, watermark=60) == 0
+    assert gc(60) == [1]
+    assert expired == [0, 0, 0]
     assert sink.committed_snapshot() == snap_after_first + 1
     snaps = {r.snapshot: r for r in sink.snapshots_table(spark).collect()}
     committed = [r for r in snaps.values() if r.is_committed]
@@ -646,9 +753,14 @@ def test_tombstone_gc_and_no_resurrection(spark, tmp_path):
     assert {r.id for r in sink.current_table(spark).collect()} == set(range(16)) - {3, 5}
 
     # GC everything deleted before seq=100: key 3's tombstone goes,
-    # key 5's stays
-    expired = sink.gc_tombstones(spark, watermark=100)
-    assert expired == 1
+    # key 5's stays.  Two jobs: the one-stage census, then the write of
+    # the one bucket holding the tombstone.
+    expired = []
+    jobs = _jobs_run_by(
+        spark, lambda: expired.append(sink.gc_tombstones(spark, watermark=100))
+    )
+    assert expired == [1]
+    assert len(jobs) == 2 and len(jobs[0]) == 1, jobs
     state_ops = {
         r.id: r.operation for r in sink.current_state(spark).collect()
     }
