@@ -2,14 +2,16 @@
 
 Per-row vector math uses native higher-order functions (``zip_with``
 + ``aggregate``) — JVM-side, no Python serialization.  Where the work
-is a PAIR BLOCK rather than a row (within-bucket all-pairs scoring),
-:func:`bucketed_cosine_pairs_blocked` switches to Arrow-batched numpy
+is a BLOCK rather than a row — every vector against every centroid
+(:func:`ivf_assign`), or every pair inside a bucket
+(:func:`bucketed_cosine_pairs`) — it switches to Arrow-batched numpy
 with a fold-order contract that keeps results bit-identical to the
-expression path — HOFs don't enter whole-stage codegen, so per-pair
-interpreted folds lose to C loops once the pair space is O(bucket²).
+expression path: HOFs don't enter whole-stage codegen, so per-pair
+interpreted folds lose to C loops once the block is O(N·K) or
+O(bucket²).
 
 Scale path: brute-force top-k is O(N·Q); for large N use
-:func:`bucketed_topk` (coarse quantization / IVF-style: probe only the
+:func:`ivf_topk` (coarse quantization / IVF-style: probe only the
 nearest centroid buckets).
 """
 
@@ -18,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: max centroid-matrix size (float64 ELEMENTS = K x dim) that
-#: bucketed_cosine_pairs_blocked will broadcast — 32M elements
-#: (256 MB), a comfortable TorrentBroadcast; beyond it the "tiny by
-#: contract" K ≈ √N sizing has been violated and the fit must coarsen.
+#: max centroid-matrix size (float64 ELEMENTS = K x dim) that the IVF
+#: kernel will broadcast — 32M elements (256 MB), a comfortable
+#: TorrentBroadcast; beyond it the "tiny by contract" K ≈ √N sizing
+#: has been violated and the fit must coarsen.
 _CENTROID_ELEM_BUDGET = 32 * 1024 * 1024
 
 
@@ -52,39 +54,6 @@ def auto_k(n: int, dim: int, c: float = 1.0, min_k: int = 8) -> int:
     return min(k, _CENTROID_ELEM_BUDGET // max(1, dim))
 
 
-def ivf_auto_centroids(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "cid",
-    centroid_vec_col: str = "cemb",
-    dim: int = 64,
-    min_k: int = 8,
-    c: float = 1.0,
-) -> tuple[DataFrame, int]:
-    """Scale-aware IVF index fit: pick ``K = auto_k(N)`` and seed the
-    centroid table with the first K vectors by id — the deterministic,
-    oracle-replicable seeding every declared row uses (ids are assumed
-    dense from 0, true of any row-numbered corpus; ``kmeans_refine``
-    upgrades seeds to true Lloyd centroids when quality matters more
-    than oracle determinism).  Returns ``(centroids, K)``.
-
-    This is the DEFAULT entry point for building an IVF index: callers
-    that pin K explicitly are demo/oracle parameterizations, not the
-    scale path."""
-    # one column-pruned count job (O(1) RESULT, not O(1) cost — Spark
-    # still scans row-group counts); callers fitting many indexes over
-    # the same corpus should count once and pass explicit centroids
-    k = auto_k(embeddings.count(), dim, c=c, min_k=min_k)
-    return (
-        embeddings.filter(F.col(id_col) < k).select(
-            F.col(id_col).alias(centroid_id_col),
-            F.col(vec_col).alias(centroid_vec_col),
-        ),
-        k,
-    )
-
-
 def _fold_sum(arr: Column) -> Column:
     """Left-fold sum of an array<double> — deterministic order."""
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
@@ -102,8 +71,8 @@ def _round_half_up(arr, digits: int):
     (rare: requires the value to sit on a near-half-ulp-of-decimal
     point, e.g. 1/128 at 6 digits) are re-rounded exactly through
     ``decimal`` on ``repr(x)``, which is the same shortest round-trip
-    string java produces.  Keeps blocked numpy assignment bit-identical
-    to the ``ivf_assign`` / DuckDB-oracle rounding."""
+    string java produces.  Keeps the numpy kernels' rounding
+    bit-identical to ``F.round`` and the DuckDB oracles."""
     import numpy as np
 
     scale = 10.0**digits
@@ -179,121 +148,14 @@ def cosine_pairs(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "cid",
-    centroid_vec_col: str = "cemb",
-    round_digits: int = 6,
-    probes: int = 1,
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its
-    most-similar centroid (broadcast the centroid table, rank with a
-    per-vector window, deterministic centroid-id tie-break).
-
-    This is the ANN scale path: search probes only the top buckets,
-    turning brute-force O(N) per query into O(N/k · probes).
-
-    ``probes > 1`` emits one row per (vector, nearest-i-th centroid)
-    for i ≤ probes — multi-probe assignment, the standard recall fix
-    for pairs that straddle a Voronoi boundary."""
-    from pyspark.sql import Window
-
-    scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(centroid_id_col),
-        F.round(
-            cosine_sim(
-                F.col(vec_col).cast("array<double>"),
-                F.col(centroid_vec_col).cast("array<double>"),
-            ),
-            round_digits,
-        ).alias("cs"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cs"), F.asc(centroid_id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= probes)
-        .select(id_col, F.col(centroid_id_col).alias("cluster"), "cs")
-    )
-
-
-def bucketed_cosine_pairs(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.4,
-    probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "cid",
-    centroid_vec_col: str = "cemb",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Near-duplicate pairs via IVF buckets — the 100 TB replacement
-    for :func:`cosine_pairs`' all-pairs self-join.
-
-    Plan shape: broadcast-assign every vector to its ``probes``
-    nearest centroids (no shuffle), tag vectors with their cluster,
-    then self-join *on the cluster key* — the shuffle is keyed by
-    cluster, and the pair space collapses from O(N²) to
-    O(Σ bucket²) ≈ O(N²·probes²/K) for K balanced centroids.
-    Multi-probe duplicates (a pair sharing two buckets) are folded by
-    a final ``distinct`` on the (ia, ib, cos_sim) triple.
-
-    Approximate by construction: a pair is found iff the two vectors
-    share ≥1 of their ``probes`` nearest centroids.  High-similarity
-    pairs (the near-dups this exists for) almost always do; recall is
-    tunable via ``probes`` / K.
-    """
-    assign = ivf_assign(
-        embeddings,
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroid_id_col=centroid_id_col,
-        centroid_vec_col=centroid_vec_col,
-        round_digits=round_digits,
-        probes=probes,
-    ).select(id_col, "cluster")
-    n = with_norm(embeddings, vec_col).select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
-        F.col("__norm_sq"),
-    )
-    tagged = assign.join(n, id_col)
-    a = tagged.select(
-        F.col("cluster"),
-        F.col(id_col).alias("ia"),
-        F.col("__vec").alias("va"),
-        F.col("__norm_sq").alias("na"),
-    )
-    b = tagged.select(
-        F.col("cluster"),
-        F.col(id_col).alias("ib"),
-        F.col("__vec").alias("vb"),
-        F.col("__norm_sq").alias("nb"),
-    )
-    pairs = a.join(b, ["cluster"]).filter(F.col("ia") < F.col("ib"))
-    sim = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.sqrt("na") * F.sqrt("nb")), round_digits
-    )
-    return (
-        pairs.select("ia", "ib", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
-
-
 def _centroid_block(centroids, centroid_id_col="cid", centroid_vec_col="cemb"):
     """MLlib-style "fit" materialization shared by every blocked ANN
     path: collect the centroid table ONCE on the driver (tiny by
     contract, K ≈ √N — budget-ENFORCED below, not assumed: at N=1e12,
     K≈1e6 × 512 dims × 8 B ≈ 4 GB stops being an executor-friendly
-    broadcast and the caller must coarsen K or switch to a join-based
-    assignment) as ``(cids asc, float64 matrix, fold-left norms)``
-    ready for TorrentBroadcast."""
+    broadcast) as ``(cids asc, float64 matrix, fold-left norms)``
+    ready for TorrentBroadcast.  An empty table gives an empty block,
+    which scores nothing."""
     import numpy as np
 
     cen_rows = sorted(
@@ -306,21 +168,20 @@ def _centroid_block(centroids, centroid_id_col="cid", centroid_vec_col="cemb"):
         ),
         key=lambda t: t[0],
     )
-    if not cen_rows:
-        raise ValueError(
-            "centroid table is empty — fit centroids first "
-            "(ivf_centroids / ivf_auto_centroids / kmeans_refine)"
-        )
     cids = np.array([t[0] for t in cen_rows], dtype=np.int64)
-    cmat = np.vstack([t[1] for t in cen_rows]).astype(np.float64, copy=False)
+    cmat = (
+        np.vstack([t[1] for t in cen_rows]).astype(np.float64, copy=False)
+        if cen_rows
+        else np.empty((0, 0))
+    )
     n_cen, dim = cmat.shape
     if n_cen * dim > _CENTROID_ELEM_BUDGET:
         raise ValueError(
             f"centroid table too large to broadcast: K={n_cen} x "
             f"dim={dim} = {n_cen * dim} float64 elements exceeds the "
             f"{_CENTROID_ELEM_BUDGET}-element budget (~"
-            f"{_CENTROID_ELEM_BUDGET * 8 >> 20} MB). Coarsen K toward "
-            "sqrt(N) or assign clusters with a broadcast JOIN instead."
+            f"{_CENTROID_ELEM_BUDGET * 8 >> 20} MB). Coarsen K toward √N "
+            "(auto_k)."
         )
     cnrm = np.zeros(n_cen)
     for k in range(dim):  # fold-left, matches l2_norm_sq exactly
@@ -328,7 +189,58 @@ def _centroid_block(centroids, centroid_id_col="cid", centroid_vec_col="cemb"):
     return cids, cmat, cnrm
 
 
-def ivf_assign_blocked(
+def _nearest(vecs, block, probes, round_digits):
+    """The IVF kernel: score one Arrow batch of vectors against the
+    centroid block and keep each vector's ``probes`` best centroids.
+    Returns ``(row, cluster, cs)`` arrays — ``probes`` entries per
+    vector in rank order, ``row`` indexing into ``vecs``.
+
+    Bit-identical to the SQL form the oracles replay: dimension-at-a-
+    time fold-left accumulation (the exact ``aggregate(zip_with(...))``
+    order), the cosine as ``acc / (sqrt(na)·sqrt(nc))`` — the same
+    three IEEE ops — and HALF_UP rounding via ``_round_half_up``; the
+    rounded ``cs`` ranks, desc, ties by cid asc (``ROW_NUMBER() OVER
+    (PARTITION BY id ORDER BY cs DESC, cid ASC)``)."""
+    import numpy as np
+
+    cids, cmat, cnrm = block
+    mat = np.vstack(vecs).astype(np.float64, copy=False)
+    n, (n_cen, dim) = len(mat), cmat.shape
+    nrm = np.zeros(n)
+    for k in range(dim):  # fold-left, matches l2_norm_sq
+        nrm += mat[:, k] * mat[:, k]
+    acc = np.zeros((n, n_cen))
+    for k in range(dim):  # fold-left per (vector, centroid)
+        acc += mat[:, k, None] * cmat[None, :, k]
+    cs = _round_half_up(
+        acc / (np.sqrt(nrm)[:, None] * np.sqrt(cnrm)[None, :]), round_digits
+    )
+    # the block's cids ascend, so a stable sort on -cs breaks ties by cid
+    top = np.argsort(-cs, axis=1, kind="stable")[:, :probes]
+    return (
+        np.repeat(np.arange(n), top.shape[1]),
+        cids[top].ravel(),
+        np.take_along_axis(cs, top, axis=1).ravel(),
+    )
+
+
+def _broadcast_fit(
+    embeddings, centroids, id_col, vec_col, centroid_id_col, centroid_vec_col, block
+):
+    """``(vectors, broadcast block)`` for a :func:`_nearest` pass:
+    ``block`` (a :func:`_centroid_block` result) or the collected
+    centroid table, shipped once per executor via TorrentBroadcast
+    rather than once per task in the pickled closure."""
+    if block is None:
+        block = _centroid_block(centroids, centroid_id_col, centroid_vec_col)
+    bc = embeddings.sparkSession.sparkContext.broadcast(block)
+    vecs = embeddings.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__vec")
+    )
+    return vecs, bc
+
+
+def ivf_assign(
     embeddings: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
@@ -339,75 +251,44 @@ def ivf_assign_blocked(
     probes: int = 1,
     block: tuple | None = None,
 ) -> DataFrame:
-    """:func:`ivf_assign` as MAP-SIDE blocked numpy (``mapInPandas``)
-    instead of crossJoin + window: the N×K scored-candidate
-    materialization and the per-vector window shuffle disappear —
-    each Arrow batch is scored against the broadcast centroid block
-    with vectorized C loops and emits its ``probes`` best cluster ids
-    directly.  Returns ``(id_col, cluster)`` — one row per (vector,
-    probe), zero exchanges.
+    """IVF coarse quantization: assign every vector to its ``probes``
+    most-similar centroids (rounded cosine desc, centroid id asc).
+    Returns ``(id_col, cluster, cs)`` — one row per (vector, probe).
 
-    Same decision, bit-identical: dimension-at-a-time fold-left
-    accumulation (the exact ``aggregate(zip_with(...))`` order),
-    HALF_UP rounding via ``_round_half_up``, then (cs desc, cid asc)
-    lexsort — the tuple ``ivf_assign``'s window ranks by.  The K ≈ √N
-    broadcast-budget contract is enforced by :func:`_centroid_block`.
+    This is the ANN scale path: search probes only the top buckets,
+    turning brute-force O(N) per query into O(N/k · probes).
+    ``probes > 1`` is multi-probe assignment, the standard recall fix
+    for pairs that straddle a Voronoi boundary.
 
-    This is the assignment shape that survives 100 TB: at K=√N the
-    crossJoin form materializes N·√N rows and shuffles them through a
-    window; this form streams N rows through an Arrow kernel with an
-    O(K·dim) per-executor broadcast.
+    Map-side (``mapInPandas``): each Arrow batch is scored against the
+    broadcast centroid block by :func:`_nearest` and emits its
+    ``probes`` best clusters directly — zero exchanges.  A crossJoin +
+    per-vector window would materialize N·K scored rows and shuffle
+    them; at K ≈ √N that is N^1.5 rows.
 
-    ``block`` accepts a pre-collected ``_centroid_block`` result so a
-    query assigning several sides against the SAME fit (train +
-    probes), or a process fitting the same corpus repeatedly, pays
-    the centroid-materialization job once — the stored-index shape of
-    a production ANN service."""
-    import numpy as np
+    The centroid table is collected when the plan is built (one Spark
+    job); ``block`` takes a pre-collected :func:`_centroid_block`
+    result instead, so several assignments against one fit pay that
+    job once.  An empty centroid table assigns nothing."""
     import pandas as pd
 
-    cids, cmat, cnrm = block if block is not None else _centroid_block(
-        centroids, centroid_id_col, centroid_vec_col
+    vecs, bc = _broadcast_fit(
+        embeddings, centroids, id_col, vec_col, centroid_id_col, centroid_vec_col, block
     )
-    n_cen, dim = cmat.shape
-    bc = embeddings.sparkSession.sparkContext.broadcast((cids, cmat, cnrm))
-    n_probe = min(probes, n_cen)
 
     def _assign(batches):
-        cids, cmat, cnrm = bc.value
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf["__vec"].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            nrm = np.zeros(n)
-            for k in range(dim):  # fold-left, matches l2_norm_sq
-                nrm += mat[:, k] * mat[:, k]
-            acc = np.zeros((n, n_cen))
-            for k in range(dim):  # fold-left per (vector, centroid)
-                acc += mat[:, k, None] * cmat[None, :, k]
-            cs = _round_half_up(
-                acc / (np.sqrt(nrm)[:, None] * np.sqrt(cnrm)[None, :]),
-                round_digits,
-            )
-            out_id = np.empty(n * n_probe, dtype=np.int64)
-            out_cluster = np.empty(n * n_probe, dtype=np.int64)
-            for i in range(n):
-                top = np.lexsort((cids, -cs[i]))[:n_probe]  # desc, cid asc
-                out_id[i * n_probe : (i + 1) * n_probe] = ids[i]
-                out_cluster[i * n_probe : (i + 1) * n_probe] = cids[top]
-            yield pd.DataFrame({id_col: out_id, "cluster": out_cluster})
+            if len(pdf):
+                row, cluster, cs = _nearest(
+                    pdf["__vec"].to_numpy(), bc.value, probes, round_digits
+                )
+                ids = pdf[id_col].to_numpy()
+                yield pd.DataFrame({id_col: ids[row], "cluster": cluster, "cs": cs})
 
-    vecs = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__vec")
-    )
-    return vecs.mapInPandas(_assign, f"{id_col} bigint, cluster bigint")
+    return vecs.mapInPandas(_assign, f"{id_col} bigint, cluster bigint, cs double")
 
 
-def bucketed_cosine_pairs_blocked(
+def bucketed_cosine_pairs(
     embeddings: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.4,
@@ -419,87 +300,55 @@ def bucketed_cosine_pairs_blocked(
     round_digits: int = 6,
     block: tuple | None = None,
 ) -> DataFrame:
-    """:func:`bucketed_cosine_pairs` with the within-bucket scoring
-    done as BLOCKED numpy arithmetic per cluster (``applyInPandas``)
-    instead of a per-pair expression fold.
+    """Near-duplicate pairs via IVF buckets — the 100 TB replacement
+    for :func:`cosine_pairs`' all-pairs self-join.
 
-    Why: the pair space is O(Σ bucket²) rows, and evaluating a 64-dim
-    higher-order-function dot per pair is interpreted (HOFs don't
-    enter whole-stage codegen).  Shipping each cluster's vectors ONCE
-    over Arrow (O(N·probes) rows) and scoring all of its pairs with
-    vectorized C loops turns ~6M interpreted folds into ~64 SIMD
-    passes — the FAISS-style "gather the cell, score the block"
-    layout.  At 100 TB the Arrow batch per task is one bucket
-    (~N·probes/K vectors), bounded by the same K ≈ √N sizing rule.
+    Plan shape: map-side multi-probe assignment (the :func:`ivf_assign`
+    kernel, the vector riding along) → ONE exchange keyed by cluster →
+    per-cluster blocked numpy scoring (``applyInPandas``).  The pair
+    space collapses from O(N²) to O(Σ bucket²) ≈ O(N²·probes²/K) for K
+    balanced centroids; multi-probe duplicates (a pair sharing two
+    buckets) are folded by a final ``distinct``.
+
+    Why blocked: evaluating a 64-dim higher-order-function dot per pair
+    is interpreted (HOFs don't enter whole-stage codegen).  Shipping
+    each cluster's vectors ONCE over Arrow (O(N·probes) rows) and
+    scoring all of its pairs with vectorized C loops turns ~6M
+    interpreted folds into ~64 SIMD passes — the FAISS-style "gather
+    the cell, score the block" layout.
 
     Bit-compatibility contract (what keeps the oracle hash green):
-    the accumulation loops run dimension-at-a-time, reproducing the
-    exact fold-left order ``((0+x₀d₀)+x₁d₁)+…`` of
-    ``aggregate(zip_with(a, b, *), 0.0, +)``; the cosine is
-    ``acc / (sqrt(na)·sqrt(nb))`` — the same three IEEE ops; rounding
-    and thresholding stay in Spark (same ``F.round`` as the
-    expression path).  numpy float64 ≡ JVM double, so every emitted
-    cos_sim is bit-identical to the unblocked plan's.
+    dimension-at-a-time accumulation reproduces the fold-left order
+    ``((0+x₀d₀)+x₁d₁)+…`` of ``aggregate(zip_with(a, b, *), 0.0, +)``;
+    the cosine is ``acc / (sqrt(na)·sqrt(nb))``; rounding and
+    thresholding stay in Spark (``F.round``), so every emitted cos_sim
+    equals :func:`cosine_pairs`'.
 
-    ``block`` accepts a pre-collected ``_centroid_block`` result (the
-    cached stored-index shape — see ivf_assign_blocked).
+    Approximate by construction: a pair is found iff the two vectors
+    share ≥1 of their ``probes`` nearest centroids.  High-similarity
+    pairs (the near-dups this exists for) almost always do; recall is
+    tunable via ``probes`` / K.  ``block`` as in :func:`ivf_assign`.
     """
     import numpy as np
     import pandas as pd
 
-    cids, cmat, cnrm = block if block is not None else _centroid_block(
-        centroids, centroid_id_col, centroid_vec_col
+    vecs, bc = _broadcast_fit(
+        embeddings, centroids, id_col, vec_col, centroid_id_col, centroid_vec_col, block
     )
-    n_cen, dim = cmat.shape
 
-    # one copy per EXECUTOR via TorrentBroadcast, not one per task in
-    # the pickled UDF closure (round-5 verdict nit: closure shipping
-    # multiplies the centroid block by the task count)
-    bc = embeddings.sparkSession.sparkContext.broadcast((cids, cmat, cnrm))
-
-    # a query can't probe more cells than exist
-    n_probe = min(probes, n_cen)
-
-    def _assign(batches):
-        # map-side multi-probe assignment: emit (cluster, id, vec)
-        # per probe; the vector rides along so scoring needs no join.
-        cids, cmat, cnrm = bc.value
+    def _tag(batches):
+        # the vector rides along with its clusters, so scoring needs no join
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf["__vec"].to_numpy()).astype(np.float64, copy=False)
-            nrm = np.zeros(n)
-            for k in range(dim):  # fold-left
-                nrm += mat[:, k] * mat[:, k]
-            acc = np.zeros((n, n_cen))
-            for k in range(dim):  # fold-left per (vector, centroid)
-                acc += mat[:, k, None] * cmat[None, :, k]
-            cs = _round_half_up(
-                acc / (np.sqrt(nrm)[:, None] * np.sqrt(cnrm)[None, :]), round_digits
-            )
-            out_cluster = np.empty(n * n_probe, dtype=np.int64)
-            out_id = np.empty(n * n_probe, dtype=np.int64)
-            for i in range(n):
-                top = np.lexsort((cids, -cs[i]))[:n_probe]  # cs desc, cid asc
-                out_cluster[i * n_probe : (i + 1) * n_probe] = cids[top]
-                out_id[i * n_probe : (i + 1) * n_probe] = ids[i]
-            yield pd.DataFrame(
-                {
-                    "cluster": out_cluster,
-                    id_col: out_id,
-                    "__vec": [
-                        v for v in pdf["__vec"].to_numpy() for _ in range(n_probe)
-                    ],
-                }
-            )
+            if len(pdf):
+                v = pdf["__vec"].to_numpy()
+                row, cluster, _ = _nearest(v, bc.value, probes, round_digits)
+                ids = pdf[id_col].to_numpy()
+                yield pd.DataFrame(
+                    {"cluster": cluster, id_col: ids[row], "__vec": v[row]}
+                )
 
-    vecs = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__vec")
-    )
     tagged = vecs.mapInPandas(
-        _assign, f"cluster bigint, {id_col} bigint, __vec array<double>"
+        _tag, f"cluster bigint, {id_col} bigint, __vec array<double>"
     )
     # pandas pre-filter margin: any pair whose ROUNDED sim can reach the
     # threshold survives; the exact post-round filter runs in Spark.
@@ -570,7 +419,7 @@ def maxsim_partials_blocked(
     (group, qid) maxima before anything leaves the task — the exchange
     then carries O(|groups|·|q|) rows instead of O(|cand|·|q|).
 
-    Bit-compatibility contract (same as :func:`ivf_assign_blocked`):
+    Bit-compatibility contract (same as :func:`_nearest`):
     fold-left accumulation reproduces ``aggregate(zip_with(a, b, *),
     0.0, +)`` exactly; the cosine is ``acc / (sqrt(nq)·sqrt(nc))`` —
     the same three IEEE ops; ``round(cos · micro)`` uses
@@ -642,8 +491,9 @@ def kmeans_refine(
 ) -> DataFrame:
     """Lloyd's k-means refinement of IVF centroids: assign → per-
     cluster mean → repeat.  The iterative-algorithm pattern on pure
-    DataFrames: each iteration is one broadcast-assign (no shuffle) +
-    one (cluster, dim) aggregation (one shuffle, map-side partials).
+    DataFrames: each iteration collects the previous centroids for a
+    map-side :func:`ivf_assign` (no shuffle) + one (cluster, dim)
+    aggregation (one shuffle, map-side partials).
 
     Deterministic BY CONSTRUCTION, unlike textbook float k-means: the
     per-dimension mean is an exact bigint fixed-point sum divided as

@@ -42,23 +42,10 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 1) -> None
     shutil.rmtree(back)
 
 
-def _ref_roots(target_dir: str, versions: list[int]) -> set[int]:
+def _named_ref_roots(refs: dict) -> set[int]:
     """Snapshots pinned by the sink's named refs: every tag, plus a
     WAP branch's whole base..head chain (staged history must stay
-    time-travelable until published or aborted), plus — for every
-    REGISTERED feed cursor — every snapshot at or above its acked
-    floor: the cursor's next ``changes_between(acked, head)`` needs
-    the base manifest AND every manifest in the range, so retention
-    must never delete above a lagging consumer's acknowledgement
-    (a cursor that never consumed, acked = -1, pins everything).
-    Ref roots join the keep set of expire_snapshots/expiry_safety
-    before the manifest reference closure."""
-    refs = store.read_refs(target_dir)
-    return _named_ref_roots(refs) | _cursor_pins(refs, versions)
-
-
-def _named_ref_roots(refs: dict) -> set[int]:
-    """Tag + branch pins only (no cursor floors)."""
+    time-travelable until published or aborted)."""
     roots: set[int] = {int(s) for s in refs["tags"].values()}
     for b in refs["branches"].values():
         roots.update(range(int(b["base"]), int(b["snapshot"]) + 1))
@@ -67,8 +54,10 @@ def _named_ref_roots(refs: dict) -> set[int]:
 
 def _cursor_pins(refs: dict, versions: list[int]) -> set[int]:
     """Snapshots pinned by registered feed cursors: everything at or
-    above the minimum acked floor (a never-acked cursor, acked=-1,
-    pins all of ``versions``)."""
+    above the minimum acked floor — a cursor's next
+    ``changes_between(acked, head)`` needs the base manifest AND every
+    manifest in the range (a never-acked cursor, acked=-1, pins all of
+    ``versions``)."""
     cursors = refs["cursors"]
     if not cursors:
         return set()
@@ -93,6 +82,43 @@ def _manifest_closure(target_dir: str, seed: set[int]) -> set[int]:
         if referenced <= keep:
             return keep
         keep |= referenced
+
+
+def _claimed(target_dir: str, versions: list[int]) -> set[int]:
+    """The snapshot dirs in ``versions`` a writer claim file fences."""
+    return set(versions) & set(store.list_claims(target_dir))
+
+
+def _retention(target_dir: str, refs: dict, retain_last: int) -> tuple:
+    """The one retention keep set, shared by :func:`expire_snapshots`,
+    its dry run :func:`expiry_safety` and :func:`retention_report`, so
+    the dry run cannot drift from the real run.
+
+    Returns ``(versions, committed, baseline, pins, keep)``:
+
+    - ``baseline`` — the policy alone: the ``retain_last`` newest
+      snapshots plus the committed one;
+    - ``pins`` — the snapshots each pin kind holds: ``"ref"`` (tags,
+      branch chains), ``"claim"`` (a live claim marks an IN-FLIGHT
+      writer's directory — data lands before its manifest/ref record
+      exists anywhere expiry can see; a CRASHED writer's claim is
+      recover_interrupted_commit's to resolve, not expiry's) and
+      ``"cursor"`` (registered feed cursors' acked floors);
+    - ``keep`` — baseline and every pin, closed over manifest
+      references: every retained snapshot must stay fully readable
+      (time travel), not just the committed one."""
+    versions = store.list_snapshots(target_dir)
+    committed = store.read_pointer(target_dir)[2]
+    baseline = set(versions[-retain_last:])
+    if committed is not None:
+        baseline.add(committed)
+    pins = {
+        "ref": _named_ref_roots(refs),
+        "claim": _claimed(target_dir, versions),
+        "cursor": _cursor_pins(refs, versions),
+    }
+    keep = _manifest_closure(target_dir, baseline.union(*pins.values()))
+    return versions, committed, baseline, pins, keep
 
 
 def _evict_stale_cursors(
@@ -169,8 +195,6 @@ def expire_snapshots(
     under the lock, registration orders strictly before or after the
     deletion."""
     with store.refs_lock(target_dir):
-        versions = store.list_snapshots(target_dir)
-        committed_snap = store.read_pointer(target_dir)[2]
         refs = store.read_refs(target_dir)
         if cursor_ttl_seconds is not None and _evict_stale_cursors(
             target_dir, refs, cursor_ttl_seconds
@@ -179,27 +203,8 @@ def expire_snapshots(
             # inside the same critical section — a crash between
             # eviction and deletion just re-evicts next run
             store.write_refs(target_dir, refs)
-        base = set(versions[-retain_last:])
-        if committed_snap is not None:
-            base.add(committed_snap)
-        base |= _named_ref_roots(refs)
-        # a live claim marks an IN-FLIGHT writer's directory (data
-        # lands before its manifest/ref record exists anywhere expiry
-        # can see) — never delete under it; a CRASHED writer's claim
-        # is recover_interrupted_commit's to resolve, not expiry's
-        base |= _claimed(target_dir, versions)
-        # every RETAINED snapshot must stay fully readable (time
-        # travel): close over manifest references — keeping only the
-        # committed manifest's references would leave retained history
-        # pointing at deleted directories
-        # close the NO-CURSOR base first, then seed the full keep set
-        # with it (closure is monotone, so this is the same fixed
-        # point) — the binding-cursor diagnostic below gets its
-        # baseline for free instead of a second full closure pass
-        # while holding the refs lock
-        closed_base = _manifest_closure(target_dir, base)
-        keep = _manifest_closure(
-            target_dir, closed_base | _cursor_pins(refs, versions)
+        versions, _, baseline, pins, keep = _retention(
+            target_dir, refs, retain_last
         )
         # observability: when a cursor's acked floor is the BINDING
         # constraint (snapshots survive that every other rule would
@@ -207,7 +212,8 @@ def expire_snapshots(
         # consumer that never acks (acked=-1) silently disables
         # retention otherwise (retention_report gives the full view)
         if refs["cursors"]:
-            only_cursor = sorted(keep - closed_base)
+            no_cursor = baseline | pins["ref"] | pins["claim"]
+            only_cursor = sorted(keep - _manifest_closure(target_dir, no_cursor))
             if only_cursor:
                 floor = min(int(a) for a in refs["cursors"].values())
                 binding = sorted(
@@ -255,11 +261,6 @@ def expire_snapshots(
     return expired
 
 
-def _claimed(target_dir: str, versions: list[int]) -> set[int]:
-    """The snapshot dirs in ``versions`` a writer claim file fences."""
-    return set(versions) & set(store.list_claims(target_dir))
-
-
 def expiry_safety(target_dir: str, retain_last: int = 5) -> list[dict]:
     """DRY-RUN of :func:`expire_snapshots` — the operational dual of
     ``changes_between``'s expired-base refusal: BEFORE running an
@@ -291,15 +292,10 @@ def expiry_safety(target_dir: str, retain_last: int = 5) -> list[dict]:
     ``cdf_base_usable_after`` snapshot.  :func:`retention_report` is
     the per-PIN dual of this per-SNAPSHOT view: it names which
     tag/branch/cursor/claim is holding each survivor."""
-    versions = store.list_snapshots(target_dir)
-    committed_snap = store.read_pointer(target_dir)[2]
-    base_keep = set(versions[-retain_last:])
-    if committed_snap is not None:
-        base_keep.add(committed_snap)
-    base_keep |= _ref_roots(target_dir, versions)
-    # same in-flight-writer keep as expire_snapshots
-    base_keep |= _claimed(target_dir, versions)
-    keep = _manifest_closure(target_dir, base_keep)
+    versions, committed_snap, baseline, pins, keep = _retention(
+        target_dir, store.read_refs(target_dir), retain_last
+    )
+    base_keep = baseline.union(*pins.values())
     return [
         {
             "snapshot": v,
@@ -349,12 +345,10 @@ def retention_report(target_dir: str, retain_last: int = 5) -> list[dict]:
       signal)."""
     import time
 
-    versions = store.list_snapshots(target_dir)
-    committed_snap = store.read_pointer(target_dir)[2]
     refs = store.read_refs(target_dir)
-    baseline = set(versions[-retain_last:])
-    if committed_snap is not None:
-        baseline.add(committed_snap)
+    versions, committed_snap, baseline, _, _ = _retention(
+        target_dir, refs, retain_last
+    )
     baseline_closed = _manifest_closure(target_dir, baseline)
     now = time.time()
 

@@ -48,7 +48,6 @@ def connected_components(
     src: str,
     dst: str,
     max_iter: int = 25,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Label each node of the undirected graph ``edges`` with the
     minimum node id reachable from it (= a canonical component id).
@@ -74,8 +73,7 @@ def connected_components(
         .union(edges.select(F.col(dst).alias("u"), F.col(dst).alias("v")))
         .distinct()
     )
-    if checkpoint:
-        sym = sym.repartition(F.col("v")).localCheckpoint(eager=True)
+    sym = sym.repartition(F.col("v")).localCheckpoint(eager=True)
     # The initial label table derives from the CHECKPOINTED edge list
     # (the self-loop rows ARE the node set — no distinct needed):
     # deriving it from the pre-checkpoint lineage re-runs the whole
@@ -94,9 +92,8 @@ def connected_components(
             sym.join(labels, sym.v == labels.node, "inner")
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("component").alias("component"))
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
         cur = labels.agg(
             F.sum("component").alias("s"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
@@ -221,7 +218,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, int]:
     """Extract the k-CORE of the undirected graph ``edges`` by
     iterative peeling run to the FIXED POINT: each round drops every
@@ -247,19 +243,10 @@ def kcore(
     detected by an O(1)-row count probe riding each round's
     ``localCheckpoint`` (the loop is unbounded, so lineage must be
     truncated eagerly — same discipline as
-    :func:`connected_components`).
-
-    ``checkpoint=False`` is a DEBUG/AUDIT mode (same contract as
-    :func:`connected_components`): rounds keep full lineage so the
-    converged result's single physical plan exhibits every round's
-    shape — used to capture the per-round exchange/broadcast counts in
-    plans/r12.  Never use it on real graphs (each count probe replays
-    all prior rounds)."""
+    :func:`connected_components`)."""
     cur = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    )
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     n_prev = cur.count()
     rounds = 0
     while n_prev > 0 and rounds < max_iter:
@@ -294,9 +281,8 @@ def kcore(
             .drop("__alive")
             .join(alive, F.col("dst") == F.col("__alive"))
             .select("src", "dst")
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=False)
         n = nxt.count()
         rounds += 1
         cur = nxt

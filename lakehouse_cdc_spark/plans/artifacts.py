@@ -47,7 +47,7 @@ def prepare_artifacts(spark, sf_dir: str) -> dict[str, float]:
     t0 = time.perf_counter()
     for min_k in llm_queries.AUTO_FIT_MIN_K.values():
         if not llm_queries._auto_fit_cached(sf_dir, min_k):
-            llm_queries._auto_fit(spark, sf_dir, min_k=min_k, with_block=True)
+            llm_queries._auto_fit(spark, sf_dir, min_k=min_k)
     timings["ivf_auto_fit"] = round(time.perf_counter() - t0, 4)
 
     t0 = time.perf_counter()

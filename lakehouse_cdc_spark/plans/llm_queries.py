@@ -24,14 +24,14 @@ from lakehouse_cdc_spark.llm.dedup import (
 from lakehouse_cdc_spark.llm.multimodal import attach_binary
 from lakehouse_cdc_spark.llm.similarity import (
     _CENTROID_ELEM_BUDGET,
+    _centroid_block,
+    auto_k,
     bucketed_cosine_pairs,
-    bucketed_cosine_pairs_blocked,
     cosine_pairs,
     cosine_sim,
     cosine_topk,
     dot,
     ivf_assign,
-    ivf_assign_blocked,
     ivf_topk,
     with_norm,
 )
@@ -79,7 +79,7 @@ _AUTO_K_SQL = (
     f"+ 0.5) AS BIGINT)), {_CENTROID_ELEM_BUDGET // 64})"
 )
 
-#: corpus-size cache for the auto-K fit: ``ivf_auto_centroids`` runs
+#: corpus-size cache for the auto-K fit: ``_auto_fit`` runs
 #: one count job per fit, and several declared queries fit the SAME
 #: embeddings corpus — within a process (bench run, driver gate) the
 #: count is a constant of sf_dir, so pay it once (the round-11 bench
@@ -89,8 +89,8 @@ _AUTO_K_SQL = (
 _EMB_COUNT_CACHE: dict[str, int] = {}
 
 #: collected centroid blocks per (sf_dir, K): the fit is a pure
-#: function of the corpus (first K vectors by id), so the blocked
-#: Arrow kernels can reuse one driver-side materialization across the
+#: function of the corpus (first K vectors by id), so the IVF
+#: kernel can reuse one driver-side materialization across the
 #: queries (and bench iterations) that share it — the stored-index
 #: shape of a production ANN service, where the fit is an artifact
 #: read back, not recomputed per query
@@ -106,14 +106,13 @@ _FIT_BLOCK_CACHE: dict[tuple[str, int], tuple] = {}
 AUTO_FIT_MIN_K = {"probe": 8, "dedup": 32}
 
 
-def _auto_fit(spark, sf_dir, min_k, with_block=False):
-    """(embeddings, centroids, k[, block]) — the shared scale-aware
-    IVF fit, with the corpus count (and, for the blocked kernels, the
-    collected centroid block) cached per sf_dir.  Seeding is identical
-    to ``ivf_auto_centroids`` (first K vectors by id), so every caller
-    stays exactly oracle-replicable via ``_AUTO_K_SQL``."""
-    from lakehouse_cdc_spark.llm.similarity import _centroid_block, auto_k
-
+def _auto_fit(spark, sf_dir, min_k):
+    """(embeddings, centroids, k, block) — the shared scale-aware IVF
+    fit: ``K = auto_k(N)`` centroids seeded with the first K vectors by
+    id (ids are dense from 0), with the corpus count and the collected
+    centroid block cached per sf_dir.  Pass ``block`` to the IVF
+    functions so they do not collect the centroids again.  Every
+    caller stays exactly oracle-replicable via ``_AUTO_K_SQL``."""
     emb = table(spark, sf_dir, "embeddings")
     n = _EMB_COUNT_CACHE.get(sf_dir)
     if n is None:
@@ -123,8 +122,6 @@ def _auto_fit(spark, sf_dir, min_k, with_block=False):
     centroids = emb.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
     )
-    if not with_block:
-        return emb, centroids, k
     block = _FIT_BLOCK_CACHE.get((sf_dir, k))
     if block is None:
         block = _centroid_block(centroids)
@@ -133,10 +130,8 @@ def _auto_fit(spark, sf_dir, min_k, with_block=False):
 
 
 def _auto_fit_cached(sf_dir, min_k) -> bool:
-    """True once ``_auto_fit(.., min_k, with_block=True)`` for
+    """True once ``_auto_fit(.., min_k)`` for
     ``sf_dir`` is served from the caches (count and block)."""
-    from lakehouse_cdc_spark.llm.similarity import auto_k
-
     n = _EMB_COUNT_CACHE.get(sf_dir)
     return n is not None and (sf_dir, auto_k(n, 64, min_k=min_k)) in _FIT_BLOCK_CACHE
 
@@ -693,7 +688,10 @@ def emb_neardup_pairs(spark, sf_dir):
 def emb_ivf_assign(spark, sf_dir):
     """IVF coarse quantization: every vector assigned to its nearest
     of 8 centroid vectors (vec_id < 8) — the bucketing that turns
-    brute-force ANN into bucket-local search.  Output: bucket sizes."""
+    brute-force ANN into bucket-local search.  Output: bucket sizes.
+    The assignment is the map-side IVF kernel (``ivf_assign``): one
+    Arrow pass against the broadcast centroids, no cross join, no
+    window; the only exchange is the bucket-size aggregate's."""
     emb = table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
@@ -975,17 +973,12 @@ def contamination_embedding_overlap(spark, sf_dir):
     keeps buckets constant-size (SCALE.md "The K lever, measured").
     The oracle recomputes the same K from COUNT(*) — exact at every
     scale factor."""
-    emb, centroids, _, blk = _auto_fit(
-        spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"], with_block=True
-    )
+    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"])
     train = emb.filter(F.col("vec_id") % 97 != 0)
     eval_rows = emb.filter(F.col("vec_id") % 97 == 0)
-    # map-side blocked assignment (round 12): the crossJoin+window
-    # ivf_assign materializes N×K scored rows and shuffles them per
-    # vector — at K ≈ √N that became the query's dominant cost; the
-    # Arrow kernel streams N rows with zero exchanges, bit-identical
-    assign = ivf_assign_blocked(train, centroids, block=blk)
-    eprobe = ivf_assign_blocked(eval_rows, centroids, probes=2, block=blk).select(
+    # both sides assign against the one cached fit: no centroid collect
+    assign = ivf_assign(train, centroids, block=blk)
+    eprobe = ivf_assign(eval_rows, centroids, probes=2, block=blk).select(
         F.col("vec_id").alias("eval_id"), "cluster"
     )
     evecs = eval_rows.select(
@@ -1123,7 +1116,9 @@ def emb_ivf_auto_k(spark, sf_dir):
     the evaluation cost any ANN recall probe pays on a sampled Q);
     both candidate pipelines are broadcast-assign + cluster-keyed
     joins — probes/K of the corpus each, never all-pairs."""
-    emb, cen_auto, k_auto_val = _auto_fit(spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"])
+    emb, cen_auto, k_auto_val, blk_auto = _auto_fit(
+        spark, sf_dir, min_k=AUTO_FIT_MIN_K["probe"]
+    )
     cen_fixed = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
     )
@@ -1148,14 +1143,15 @@ def emb_ivf_auto_k(spark, sf_dir):
         .select("qid", "vec_id")
     )
 
-    def cand_for(cen):
-        assign = ivf_assign(emb, cen).select("vec_id", "cluster")
+    def cand_for(cen, blk):
+        assign = ivf_assign(emb, cen, block=blk).select("vec_id", "cluster")
         qprobe = ivf_assign(
             probes_df.select(
                 F.col("qid").alias("vec_id"), F.col("qemb").alias("embedding")
             ),
             cen,
             probes=2,
+            block=blk,
         ).select(F.col("vec_id").alias("qid"), "cluster")
         return (
             F.broadcast(qprobe)
@@ -1171,10 +1167,11 @@ def emb_ivf_auto_k(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias(name))
         )
 
+    cand_fixed = cand_for(cen_fixed, _centroid_block(cen_fixed))
     return (
         probes_df.select("qid")
-        .join(hits(cand_for(cen_fixed), "hf"), on="qid", how="left")
-        .join(hits(cand_for(cen_auto), "ha"), on="qid", how="left")
+        .join(hits(cand_fixed, "hf"), on="qid", how="left")
+        .join(hits(cand_for(cen_auto, blk_auto), "ha"), on="qid", how="left")
         .select(
             "qid",
             F.lit(k_auto_val).cast("bigint").alias("k_auto"),
@@ -1235,10 +1232,8 @@ def emb_neardup_bucketed(spark, sf_dir):
     Same output contract as emb_neardup_pairs restricted to
     bucket-cohabiting pairs — on clustered near-dups recall ≈ 1 (see
     tests/test_llm.py recall test)."""
-    emb, centroids, _, blk = _auto_fit(
-        spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"], with_block=True
-    )
-    return bucketed_cosine_pairs_blocked(
+    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"])
+    return bucketed_cosine_pairs(
         emb, centroids, threshold=0.4, probes=2, block=blk
     )
 
@@ -3054,10 +3049,8 @@ def emb_semantic_dedup(spark, sf_dir):
     demo floor keeps the sf0.01 result identical): fixed K=32 was
     9.3× wall for 10× data at sf1; K ∝ √N keeps buckets constant-size
     and the oracle recomputes the same K from COUNT(*)."""
-    emb, centroids, _, blk = _auto_fit(
-        spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"], with_block=True
-    )
-    pairs = bucketed_cosine_pairs_blocked(
+    emb, centroids, _, blk = _auto_fit(spark, sf_dir, min_k=AUTO_FIT_MIN_K["dedup"])
+    pairs = bucketed_cosine_pairs(
         emb, centroids, threshold=0.4, probes=2, block=blk
     )
     from lakehouse_cdc_spark.operators.graph import connected_components

@@ -146,83 +146,6 @@ def seen_dedup(changes: DataFrame, key_col: str = "user_id") -> DataFrame:
     )
 
 
-def seen_dedup_v2(
-    changes: DataFrame, key_col: str = "user_id", ttl_ms: int = 60 * 60 * 1000
-) -> DataFrame:
-    """:func:`seen_dedup` rebuilt on the arbitrary-stateful **v2** API
-    (``transformWithStateInPandas``, Spark 4.x): the per-key seen-set
-    lives in a ``ListState`` with NATIVE state TTL (``ttlDurationMs``)
-    instead of hand-rolled processing-time timers.
-
-    Why this matters operationally: v1's ``ProcessingTimeTimeout``
-    registers a pending timer per key, and Spark keeps scheduling
-    no-data micro-batches to service those timers — the exact hazard
-    that hung round 2's test suite.  v2 TTL is enforced lazily inside
-    the state store (RocksDB provider required), so a bounded
-    ``availableNow`` replay terminates as soon as the sources drain:
-    same semantics, none of the timer side-effects.  State layout,
-    eviction policy, and emitted schema match :func:`seen_dedup`, so
-    the two operators are drop-in interchangeable.
-
-    Environment gate (same class as the Kafka broker / JDBC DB): the
-    v2 runtime speaks protobuf to the JVM
-    (``pyspark.sql.streaming.proto``), and ``google.protobuf`` is not
-    installed in this container — the operator raises ImportError at
-    plan-build time with a clear message, and its e2e test skips.
-    Everything engine-side (processor class, state schemas, TTL
-    wiring) is complete and exercised up to that boundary."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark's v2 stateful runtime serializes state requests "
-            "with it); install protobuf or use seen_dedup (v1)"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _SeenDedupV2(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getListState(
-                "seen_ids", "id BIGINT", ttlDurationMs=ttl_ms
-            )
-            self._batch = handle.getValueState("batch_no", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen = {t[0] for t in self._seen.get()}
-            batch = (self._batch.get()[0] if self._batch.exists() else -1) + 1
-            fresh = []
-            for pdf in rows:
-                for eid in pdf["event_id"]:
-                    e = int(eid)
-                    if e not in seen:
-                        seen.add(e)
-                        fresh.append(e)
-            if fresh:
-                self._seen.appendList([(e,) for e in fresh])
-            self._batch.update((batch,))
-            yield pd.DataFrame(
-                {
-                    "event_id": fresh,
-                    "user_id": [key[0]] * len(fresh),
-                    "first_seen_batch": [batch] * len(fresh),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return changes.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_SeenDedupV2(),
-        outputStructType=SEEN_DEDUP_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
 # ----------------------------------------------------- session totals
 
 SESSION_SCHEMA = (

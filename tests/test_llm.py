@@ -320,10 +320,8 @@ def test_round_half_up_matches_spark_round(spark):
 
 def test_bucketed_neardup_probe_guard(spark):
     """probes > K must degrade to K probes, and an empty centroid
-    table must fail fast at driver time (ADVICE r2)."""
-    import pytest as _pytest
-
-    from lakehouse_cdc_spark.llm.similarity import bucketed_cosine_pairs_blocked
+    table finds no pairs (DuckDB's answer for an empty fit)."""
+    from lakehouse_cdc_spark.llm.similarity import bucketed_cosine_pairs
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
@@ -332,12 +330,46 @@ def test_bucketed_neardup_probe_guard(spark):
     cen = spark.createDataFrame(
         [(0, [1.0, 0.0])], "cid bigint, cemb array<double>"
     )
-    pairs = bucketed_cosine_pairs_blocked(emb, cen, threshold=0.9, probes=5)
+    pairs = bucketed_cosine_pairs(emb, cen, threshold=0.9, probes=5)
     got = {(r.ia, r.ib) for r in pairs.collect()}
     assert got == {(1, 2)}
     empty = spark.createDataFrame([], "cid bigint, cemb array<double>")
-    with _pytest.raises(ValueError, match="centroid table is empty"):
-        bucketed_cosine_pairs_blocked(emb, empty)
+    assert bucketed_cosine_pairs(emb, empty).collect() == []
+
+
+@pytest.mark.parametrize("probes", [1, 2])
+def test_empty_centroid_table_gives_empty_results(spark, probes):
+    """An empty fit — collected here or passed as a pre-collected
+    block — is a valid index that assigns nothing: both IVF functions
+    return an empty frame with their declared schema, never raise."""
+    from lakehouse_cdc_spark.llm.similarity import (
+        _centroid_block,
+        bucketed_cosine_pairs,
+        ivf_assign,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    empty = spark.createDataFrame([], "cid bigint, cemb array<double>")
+    block = _centroid_block(empty)
+    for df in (
+        ivf_assign(emb, empty, probes=probes),
+        ivf_assign(emb, empty, probes=probes, block=block),
+    ):
+        assert df.schema.simpleString() == (
+            "struct<vec_id:bigint,cluster:bigint,cs:double>"
+        )
+        assert df.collect() == []
+    for df in (
+        bucketed_cosine_pairs(emb, empty, probes=probes),
+        bucketed_cosine_pairs(emb, empty, probes=probes, block=block),
+    ):
+        assert df.schema.simpleString() == (
+            "struct<ia:bigint,ib:bigint,cos_sim:double>"
+        )
+        assert df.collect() == []
 
 
 def test_centroid_broadcast_budget_is_enforced(spark, monkeypatch):
@@ -359,7 +391,7 @@ def test_centroid_broadcast_budget_is_enforced(spark, monkeypatch):
         "cid bigint, cemb array<double>",
     )  # 3 x 3 = 9 elements > 8
     with _pytest.raises(ValueError, match="Coarsen K"):
-        similarity.bucketed_cosine_pairs_blocked(emb, cen)
+        similarity.bucketed_cosine_pairs(emb, cen)
 
 
 def test_winnowing_guarantee_shared_span_yields_common_fingerprint(spark):

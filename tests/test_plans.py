@@ -14,7 +14,6 @@ _INTENDED_CROSS = {
     "subquery_above_avg",
     "emb_cosine_topk",
     "emb_topk_batch",
-    "emb_ivf_assign",
     "validation_rowcount",
     "validation_freshness_lag",
 }
@@ -74,6 +73,15 @@ def test_bucketed_neardup_single_cluster_shuffle(spark, sf_dir):
     assert "Join" not in plan
     # distinct adds its own exchange over (ia, ib, cos_sim); nothing else may
     assert plan.count("Exchange hashpartitioning") <= 2
+
+
+def test_ivf_assign_is_map_side(spark, sf_dir):
+    """IVF assignment is the map-side Arrow kernel: no N×K cross join
+    of vectors and centroids, no per-vector ranking window."""
+    plan = _plan(spark, sf_dir, "emb_ivf_assign")
+    assert "MapInPandas" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Window" not in plan
 
 
 def test_salted_join_spreads_hot_key(spark, sf_dir):

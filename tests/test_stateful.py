@@ -127,84 +127,6 @@ def test_seen_dedup_emits_each_id_once(spark, sf_dir, tmp_path):
     assert all(batch_of[i_] == 0 for i_ in first_ids)
 
 
-def test_seen_dedup_v2_native_ttl_terminates_cleanly(spark, sf_dir, tmp_path):
-    """The v2 (transformWithStateInPandas) dedup: same semantics as
-    seen_dedup, but native state TTL means an availableNow replay
-    terminates on its own — no timer batches, no sink polling."""
-    import os
-
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="pyspark's transformWithState runtime needs protobuf "
-        "(not in this container) — operator gated, plumbing unit-tested",
-    )
-    from lakehouse_cdc_spark.streaming.stateful import seen_dedup_v2
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        e = table(spark, sf_dir, "events").select(
-            "user_id", "value", "ts", "event_id"
-        )
-        first = e.orderBy("ts").limit(300)
-        flat = str(tmp_path / "flat")
-        os.makedirs(flat)
-        first.coalesce(1).write.parquet(str(tmp_path / "b0"))
-        first.unionByName(e.orderBy(F.desc("ts")).limit(100)).coalesce(1).write.parquet(
-            str(tmp_path / "b1")
-        )
-        i = 0
-        for sub in ["b0", "b1"]:
-            for f_ in sorted(os.listdir(str(tmp_path / sub))):
-                if f_.endswith(".parquet"):
-                    os.link(str(tmp_path / sub / f_), f"{flat}/{i:03d}.parquet")
-                    i += 1
-        stream = file_cdc_source(spark, flat, e.schema, max_files_per_trigger=1)
-        q = (
-            seen_dedup_v2(stream)
-            .writeStream.format("memory")
-            .queryName("dedup_v2_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # native TTL => no pending timers => the bounded replay ENDS
-        assert q.awaitTermination(300), "v2 stream did not terminate"
-        emitted = spark.sql("SELECT * FROM dedup_v2_out").collect()
-        ids = [r.event_id for r in emitted]
-        assert len(ids) == len(set(ids)) == 400
-        batch_of = {r.event_id: r.first_seen_batch for r in emitted}
-        first_ids = {r.event_id for r in first.collect()}
-        assert all(batch_of[i_] == 0 for i_ in first_ids)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_seen_dedup_v2_env_gate_is_explicit(spark, sf_dir):
-    """Without protobuf the v2 operator must fail at PLAN BUILD with
-    an actionable message, not deep inside an executor."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf present — the e2e test covers this env")
-    except ImportError:
-        pass
-    from lakehouse_cdc_spark.streaming.stateful import seen_dedup_v2
-
-    with pytest.raises(ImportError, match="protobuf"):
-        seen_dedup_v2(table(spark, sf_dir, "events").select("user_id", "event_id"))
-
-
 def test_session_totals_closes_sessions_on_watermark(spark, tmp_path):
     """Event-time sessionization e2e: crafted per-user gaps must close
     exactly the expected sessions once a far-future flush event drives
