@@ -79,6 +79,48 @@ def _at_snapshot(n: int):
     return lambda sink: sink.committed_snapshot() == n
 
 
+class _FedSink:
+    """A demo ``SnapshotUpsertSink`` whose reads never return None.
+
+    The sink returns None for a state, table or change range that
+    holds no rows (every read of a sink fed only empty batches); here
+    that reads as an empty change batch, i.e. the last batch fed to
+    the sink with no rows, so the queries' feed loops and aggregates
+    run unchanged on empty input."""
+
+    def __init__(self, prefix: str, keys: list[str], n_buckets: int):
+        from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
+
+        self.sink = SnapshotUpsertSink(
+            tempfile.mkdtemp(prefix=prefix),
+            keys=keys,
+            order_by=["seq"],
+            n_buckets=n_buckets,
+        )
+        self.empty = None
+
+    def process_batch(self, batch, batch_id: int) -> None:
+        self.sink.process_batch(batch, batch_id)
+        self.empty = batch.limit(0)
+
+    def committed_snapshot(self):
+        return self.sink.committed_snapshot()
+
+    def _or_empty(self, df):
+        return self.empty if df is None else df
+
+    def state_at(self, spark, snapshot: int):
+        return self._or_empty(self.sink.state_at(spark, snapshot))
+
+    def changes_between(self, spark, from_snap: int, to_snap: int):
+        return self._or_empty(
+            self.sink.changes_between(spark, from_snap, to_snap)
+        )
+
+    def current_table(self, spark):
+        return self._or_empty(self.sink.current_table(spark))
+
+
 def _demo_batches(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     val = fixed_point(F.col("o_totalprice"), 2)
@@ -125,14 +167,7 @@ def _demo_sink(spark, sf_dir):
     """Build (once per sf_dir per process) the three-snapshot demo
     sink.  COW mode so every snapshot is bucket-complete and the feed
     exercises the rewritten-bucket diff path."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
-
-    sink = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_demo_"),
-        keys=["k"],
-        order_by=["seq"],
-        n_buckets=8,
-    )
+    sink = _FedSink("cdf_demo_", ["k"], 8)
     for i, b in enumerate(_demo_batches(spark, sf_dir)):
         sink.process_batch(b, i)
     assert sink.committed_snapshot() == 2
@@ -383,21 +418,10 @@ def _text_demo_batches(spark, sf_dir):
 def _text_demo_sinks(spark, sf_dir):
     """Base text sink (3 change batches) + the inverted-index sink
     maintained from its feed, cached per sf_dir."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import token_index_changes
 
-    base = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_textbase_"),
-        keys=["doc"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
-    idx = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_index_"),
-        keys=["token", "doc"],
-        order_by=["seq"],
-        n_buckets=8,
-    )
+    base = _FedSink("cdf_textbase_", ["doc"], 4)
+    idx = _FedSink("cdf_index_", ["token", "doc"], 8)
     for i, b in enumerate(_text_demo_batches(spark, sf_dir)):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)
@@ -495,7 +519,6 @@ def _ann_demo_sinks(spark, sf_dir):
     Centroids are the 8 vectors ``vec_id < 8`` from the base parquet,
     FROZEN across batches (centroids retrain offline; assignment
     streams)."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import ann_index_changes
 
     e = table(spark, sf_dir, "embeddings")
@@ -533,18 +556,8 @@ def _ann_demo_sinks(spark, sf_dir):
     centroids = e.filter(vid < 8).select(
         vid.alias("cid"), F.col("embedding").alias("cemb")
     )
-    base = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_annbase_"),
-        keys=["vec_id"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
-    idx = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_annidx_"),
-        keys=["vec_id"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
+    base = _FedSink("cdf_annbase_", ["vec_id"], 4)
+    idx = _FedSink("cdf_annidx_", ["vec_id"], 4)
     for i, b in enumerate((b0, b1, b2)):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)
@@ -633,21 +646,10 @@ def _lsh_demo_sinks(spark, sf_dir):
     """Base text sink (same batches as the inverted-index demo) + the
     MinHash-LSH band-index sink maintained from its feed, cached per
     sf_dir."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import lsh_index_changes
 
-    base = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_lshbase_"),
-        keys=["doc"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
-    idx = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_lshidx_"),
-        keys=["doc", "band"],
-        order_by=["seq"],
-        n_buckets=8,
-    )
+    base = _FedSink("cdf_lshbase_", ["doc"], 4)
+    idx = _FedSink("cdf_lshidx_", ["doc", "band"], 8)
     for i, b in enumerate(_text_demo_batches(spark, sf_dir)):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)
@@ -861,7 +863,6 @@ def _grp_demo_sinks(spark, sf_dir):
     0 / 1 / 2 — the whole documents table by the end), with the LSH
     band index AND the dedup-group label table maintained from its
     feed, cached per sf_dir."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
     from lakehouse_cdc_spark.streaming.indexing import (
         dedup_groups_changes,
         lsh_index_changes,
@@ -878,24 +879,9 @@ def _grp_demo_sinks(spark, sf_dir):
         )
         for i in range(3)
     ]
-    base = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_grpbase_"),
-        keys=["doc"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
-    idx = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_grpidx_"),
-        keys=["doc", "band"],
-        order_by=["seq"],
-        n_buckets=8,
-    )
-    lab = SnapshotUpsertSink(
-        tempfile.mkdtemp(prefix="cdf_grplab_"),
-        keys=["doc"],
-        order_by=["seq"],
-        n_buckets=4,
-    )
+    base = _FedSink("cdf_grpbase_", ["doc"], 4)
+    idx = _FedSink("cdf_grpidx_", ["doc", "band"], 8)
+    lab = _FedSink("cdf_grplab_", ["doc"], 4)
     for i, b in enumerate(batches):
         base.process_batch(b, i)
         feed = base.changes_between(spark, i - 1, i)

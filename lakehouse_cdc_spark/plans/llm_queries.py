@@ -45,7 +45,13 @@ from lakehouse_cdc_spark.llm.text import (
     token_count,
     tokens,
 )
-from lakehouse_cdc_spark.plans.registry import davg, register, sql_davg, table
+from lakehouse_cdc_spark.plans.registry import (
+    davg,
+    read_parquet,
+    register,
+    sql_davg,
+    table,
+)
 
 #: shared shingle CTE (3-word shingles, distinct per doc) — the DuckDB
 #: mirror of llm/dedup.py:shingle_table
@@ -3104,7 +3110,7 @@ def _old_shard_band_index(spark, sf_dir):
         path = tempfile.mkdtemp(prefix="lsh_old_index_")
         idx.write.mode("overwrite").parquet(path)
         _OLD_INDEX_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @register(

@@ -358,6 +358,10 @@ def _pq_cen_int(m: int, c: int, j: int) -> int:
     )
 
 
+#: the rows of ``_pq_adc_exact``: one per vector against query vector 0
+_PQ_SCHEMA = "vec_id bigint, adc_dist bigint, exact_dist bigint"
+
+
 def _pq_adc_exact(spark, sf_dir):
     """Shared PQ pipeline: ONE map-side Arrow kernel emitting
     (vec_id, adc_dist, exact_dist) per vector against query vector 0.
@@ -380,11 +384,13 @@ def _pq_adc_exact(spark, sf_dir):
     import pandas as pd
 
     emb = table(spark, sf_dir, "embeddings")
-    qrow = (
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    )
+    qrows = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
+    if not qrows:
+        # no query vector: the oracle's ``qv`` CTE is empty, and so is
+        # every distance it joins against
+        return spark.createDataFrame([], _PQ_SCHEMA)
     qint = np.floor(
-        np.asarray(qrow, dtype=np.float64) * _PQ_FP + 0.5
+        np.asarray(qrows[0][0], dtype=np.float64) * _PQ_FP + 0.5
     ).astype(np.int64)
     cen = np.array(
         [
@@ -418,9 +424,7 @@ def _pq_adc_exact(spark, sf_dir):
                 }
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        _pq_batches, "vec_id bigint, adc_dist bigint, exact_dist bigint"
-    )
+    return emb.select("vec_id", "embedding").mapInPandas(_pq_batches, _PQ_SCHEMA)
 
 
 _PQ_COARSE = 50  # ADC candidate-list size for the re-rank stage
