@@ -32,48 +32,6 @@ from pyspark.sql import functions as F
 from lakehouse_cdc_spark.operators.hints import runtime_sized
 
 
-def delta_agg_adjustments(
-    prev_state: DataFrame,
-    delta_compacted: DataFrame,
-    keys: list[str],
-    group_col: str,
-    measure: Column,
-    op_col: str = "operation",
-    delete_op: str = "d",
-) -> DataFrame:
-    """Per-group ``(cnt_adj, sum_adj)`` a compacted delta implies.
-
-    ``delta_compacted`` must hold ≤1 row per key (run
-    ``compact_changes`` first — MERGE cardinality rule).  ``measure``
-    is an integer-typed column expression (use ``fixed_point`` for
-    money) so retraction is exact.
-    """
-    # delta keys are micro-batch-bounded in streaming use but
-    # UNBOUNDED under backfill/replay — a forced hint would ship a
-    # data-sized set to every executor.  runtime_sized leaves the
-    # call to AQE, which broadcasts exactly when the materialized
-    # delta fits the threshold (operators/hints.py).
-    changed = runtime_sized(delta_compacted.select(*keys).distinct(), "delta")
-    old = prev_state.join(changed, on=keys, how="left_semi").select(
-        F.col(group_col).alias("g"),
-        F.lit(-1).cast("bigint").alias("cnt_adj"),
-        (-measure).cast("bigint").alias("sum_adj"),
-    )
-    new = delta_compacted.filter(F.col(op_col) != delete_op).select(
-        F.col(group_col).alias("g"),
-        F.lit(1).cast("bigint").alias("cnt_adj"),
-        measure.cast("bigint").alias("sum_adj"),
-    )
-    return (
-        old.unionByName(new)
-        .groupBy("g")
-        .agg(
-            F.sum("cnt_adj").alias("cnt_adj"),
-            F.sum("sum_adj").alias("sum_adj"),
-        )
-    )
-
-
 def delta_moment_adjustments(
     prev_state: DataFrame,
     delta_compacted: DataFrame,
@@ -83,16 +41,23 @@ def delta_moment_adjustments(
     op_col: str = "operation",
     delete_op: str = "d",
 ) -> DataFrame:
-    """Per-group ``(cnt_adj, <name>_adj …)`` for SEVERAL additive
-    measures at once — the generalization that makes VARIANCE (and any
-    higher moment) incrementally maintainable: maintain exact integer
-    ``(count, Σx, Σx²)`` and the serving layer derives
-    ``var = (n·Σx² − (Σx)²) / n²`` at read time.  Retraction is exact
-    because every maintained quantity is an integer sum (pass
-    fixed-point measures); ONE semi-join lookup of the changed keys
-    serves all measures, so adding moments costs no extra shuffle."""
-    # same AQE delegation as delta_group_adjustments: no forced hint,
-    # the broadcast happens exactly when the materialized delta fits.
+    """Per-group ``(cnt_adj, <name>_adj …)`` a compacted delta implies,
+    one ``<name>_adj`` per entry of ``measures``.
+
+    ``delta_compacted`` must hold ≤1 row per key (run
+    ``compact_changes`` first — MERGE cardinality rule).  Each measure
+    is an integer-typed column expression (use ``fixed_point`` for
+    money) so retraction is exact.  Several measures make VARIANCE
+    (and any higher moment) incrementally maintainable: maintain exact
+    integer ``(count, Σx, Σx²)`` and the serving layer derives
+    ``var = (n·Σx² − (Σx)²) / n²`` at read time.  ONE semi-join lookup
+    of the changed keys serves all measures, so adding moments costs
+    no extra shuffle."""
+    # delta keys are micro-batch-bounded in streaming use but
+    # UNBOUNDED under backfill/replay — a forced hint would ship a
+    # data-sized set to every executor.  runtime_sized leaves the
+    # call to AQE, which broadcasts exactly when the materialized
+    # delta fits the threshold (operators/hints.py).
     changed = runtime_sized(delta_compacted.select(*keys).distinct(), "delta")
     old = prev_state.join(changed, on=keys, how="left_semi").select(
         F.col(group_col).alias("g"),
@@ -121,9 +86,13 @@ def apply_moment_adjustments(
     cnt_col: str,
     sum_cols: list[str],
 ) -> DataFrame:
-    """Merge multi-measure adjustments (``delta_moment_adjustments``)
-    into the previous aggregate; same full-outer group join and
-    zero-count drop-out as :func:`apply_agg_adjustments`."""
+    """Merge per-group adjustments (:func:`delta_moment_adjustments`)
+    into the previous aggregate: ``sum_cols`` name the measures.
+
+    Full-outer join on the group (groups can appear, drain to zero, or
+    be born in one batch); zero-count groups drop out.  |groups| rows
+    on each side — this join is tiny next to the facts it summarizes.
+    """
     adj = adjustments.withColumnRenamed("g", group_col)
     merged = prev_agg.join(adj, on=group_col, how="full_outer")
     return (
@@ -140,37 +109,6 @@ def apply_moment_adjustments(
                 ).alias(c)
                 for c in sum_cols
             ],
-        )
-        .filter(F.col(cnt_col) > 0)
-    )
-
-
-def apply_agg_adjustments(
-    prev_agg: DataFrame,
-    adjustments: DataFrame,
-    group_col: str,
-    cnt_col: str,
-    sum_col: str,
-) -> DataFrame:
-    """Merge per-group adjustments into the previous aggregate.
-
-    Full-outer join on the group (groups can appear, drain to zero, or
-    be born in one batch); zero-count groups drop out.  |groups| rows
-    on each side — this join is tiny next to the facts it summarizes.
-    """
-    adj = adjustments.withColumnRenamed("g", group_col)
-    merged = prev_agg.join(adj, on=group_col, how="full_outer")
-    return (
-        merged.select(
-            F.col(group_col),
-            (
-                F.coalesce(F.col(cnt_col), F.lit(0))
-                + F.coalesce(F.col("cnt_adj"), F.lit(0))
-            ).alias(cnt_col),
-            (
-                F.coalesce(F.col(sum_col), F.lit(0))
-                + F.coalesce(F.col("sum_adj"), F.lit(0))
-            ).alias(sum_col),
         )
         .filter(F.col(cnt_col) > 0)
     )

@@ -553,40 +553,39 @@ def ivf_topk(
     :func:`bucketed_cosine_pairs` (all-pairs dedup).
 
     1. rank centroids against the query, keep the ``probes`` nearest
-       (driver-free: a tiny broadcast limit),
+       (the :func:`ivf_assign` kernel on the one query row),
     2. restrict the scan to vectors assigned to those buckets
        (broadcast semi-join — at scale this is partition pruning on a
        cluster-partitioned table: only probes/K of the data is read),
     3. exact cosine top-k inside the probed buckets
        (TakeOrderedAndProject).
 
+    Both assignments score against one collected centroid block.
     Deterministic approximation: rounded sims, id tie-breaks —
     reproducible in any engine, so the oracle composes the SAME
     probe pipeline and must agree bit-for-bit."""
-    qvec = F.col(query_vec_col).cast("array<double>")
-    cvec = F.col(centroid_vec_col).cast("array<double>")
-    probe = (
-        centroids.crossJoin(F.broadcast(query))
-        .select(
-            F.col(centroid_id_col).alias("cluster"),
-            F.round(cosine_sim(cvec, qvec), round_digits).alias("qcs"),
-        )
-        .orderBy(F.desc("qcs"), F.asc("cluster"))
-        .limit(probes)
-        .select("cluster")
-    )
+    blk = _centroid_block(centroids, centroid_id_col, centroid_vec_col)
+    probe = ivf_assign(
+        query.select(F.lit(0).cast("bigint").alias("qid"), query_vec_col),
+        centroids,
+        id_col="qid",
+        vec_col=query_vec_col,
+        round_digits=round_digits,
+        probes=probes,
+        block=blk,
+    ).select("cluster")
     assign = ivf_assign(
         embeddings,
         centroids,
         id_col=id_col,
         vec_col=vec_col,
-        centroid_id_col=centroid_id_col,
-        centroid_vec_col=centroid_vec_col,
         round_digits=round_digits,
+        block=blk,
     ).select(id_col, "cluster")
     in_probed = assign.join(F.broadcast(probe), "cluster").select(id_col)
     cand = embeddings.join(in_probed, id_col)
     vec = F.col(vec_col).cast("array<double>")
+    qvec = F.col(query_vec_col).cast("array<double>")
     return (
         cand.crossJoin(F.broadcast(query))
         .select(

@@ -208,8 +208,8 @@ def cdf_incremental_view_maintenance(spark, sf_dir):
     from the final state directly — a hash match proves
     feed ≡ recompute across inserts, updates, AND deletes."""
     from lakehouse_cdc_spark.cdc.incremental import (
-        apply_agg_adjustments,
-        delta_agg_adjustments,
+        apply_moment_adjustments,
+        delta_moment_adjustments,
     )
 
     sink = _demo_sink(spark, sf_dir)
@@ -223,14 +223,14 @@ def cdf_incremental_view_maintenance(spark, sf_dir):
         prev_visible = sink.state_at(spark, s - 1).filter(
             F.col("operation") != "d"
         )
-        adj = delta_agg_adjustments(
+        adj = delta_moment_adjustments(
             prev_visible,
             feed,
             keys=["k"],
             group_col="grp",
-            measure=F.col("val_cents"),
+            measures={"sum_cents": F.col("val_cents")},
         )
-        agg = apply_agg_adjustments(agg, adj, "grp", "cnt", "sum_cents")
+        agg = apply_moment_adjustments(agg, adj, "grp", "cnt", ["sum_cents"])
     return agg.select(
         "grp",
         F.col("cnt").cast("bigint").alias("cnt"),

@@ -1244,6 +1244,76 @@ def emb_neardup_bucketed(spark, sf_dir):
     )
 
 
+def _ivf_recall(spark, sf_dir, probe_counts):
+    """Per ``(probes, qid)``: ``n_cand``, the candidates the IVF path
+    scans, and ``n_hit``, how many of the exact top-10 its top-10
+    recovers — for the five query vectors (vec_id 3–7) against the
+    8-centroid fit (vec_id < 8), at every probe count in
+    ``probe_counts``.  A qid with no candidates has no row.  Rankings
+    use the rounded cosine with id tie-breaks, as the oracles do.
+
+    The corpus assignment and the query→centroid ranking at
+    ``max(probe_counts)`` run once through the ``ivf_assign`` kernel
+    against one collected block; each arm keeps the ranking's first
+    ``probes`` clusters, and ONE join of the assignment against every
+    arm yields the candidates.  (One ``ivf_assign`` per arm would
+    rescore the corpus per arm: ``mapInPandas`` output has no exchange
+    for Spark to reuse.)"""
+    emb = with_norm(table(spark, sf_dir, "embeddings"))
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
+    )
+    qs = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") <= 7)).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qemb"),
+        F.col("__norm_sq").alias("qnorm"),
+    )
+    cos = F.round(
+        dot(
+            F.col("embedding").cast("array<double>"),
+            F.col("qemb").cast("array<double>"),
+        )
+        / (F.sqrt("__norm_sq") * F.sqrt("qnorm")),
+        6,
+    ).alias("cs")
+
+    def top10(df, *part):
+        w = Window.partitionBy(*part).orderBy(F.desc("cs"), F.asc("vec_id"))
+        return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10)
+
+    exact = top10(emb.crossJoin(F.broadcast(qs)).select("qid", "vec_id", cos), "qid")
+    blk = _centroid_block(cents)
+    assign = ivf_assign(emb, cents, block=blk).select("vec_id", "cluster")
+    rank = F.row_number().over(
+        Window.partitionBy("qid").orderBy(F.desc("cs"), F.asc("cluster"))
+    )
+    arms = (
+        ivf_assign(
+            qs, cents, id_col="qid", vec_col="qemb",
+            probes=max(probe_counts), block=blk,
+        )
+        .withColumn("rank", rank)
+        .withColumn("probes", F.explode(F.array(*[F.lit(p) for p in probe_counts])))
+        .filter(F.col("rank") <= F.col("probes"))
+        .select(F.col("probes").cast("bigint"), "qid", "cluster")
+    )
+    cand = assign.join(F.broadcast(arms), "cluster")
+    n_cand = F.count(F.lit(1)).over(Window.partitionBy("probes", "qid"))
+    ivf = top10(
+        cand.join(emb, "vec_id")
+        .join(F.broadcast(qs), "qid")
+        .select("probes", "qid", "vec_id", cos, n_cand.alias("n_cand")),
+        "probes",
+        "qid",
+    )
+    hits = exact.select("qid", "vec_id", F.lit(1).alias("hit"))
+    return (
+        ivf.join(hits, ["qid", "vec_id"], "left")
+        .groupBy("probes", "qid")
+        .agg(F.max("n_cand").alias("n_cand"), F.count("hit").alias("n_hit"))
+    )
+
+
 @register(
     "emb_ivf_recall_probe",
     bench=True,
@@ -1314,129 +1384,18 @@ def emb_ivf_recall_probe(spark, sf_dir):
     vec_id tie-breaks, so the probe is deterministic and the oracle
     replays it bit-for-bit.
 
-    Scale shape: queries and centroids broadcast (5 and 8 rows); the
-    corpus is scored map-side twice (exact ranking + assignment); the
-    per-qid rank windows partition on qid; candidate scoring touches
-    only the probed buckets.  At 100 TB the exact arm runs on a
+    Scale shape: queries broadcast; the corpus is scored map-side
+    twice (exact ranking + assignment); the per-qid rank windows
+    partition on qid; candidate scoring touches only the probed
+    buckets (``_ivf_recall``).  At 100 TB the exact arm runs on a
     SAMPLED query set (as here — 5 probes), never per production
     query."""
-    emb = with_norm(table(spark, sf_dir, "embeddings"))
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("__norm_sq").alias("cnorm"),
-    )
-    qs = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") <= 7)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.col("__norm_sq").alias("qnorm"),
-    )
-
-    def _cos(vec, norm, qvec, qnorm):
-        return F.round(
-            dot(vec.cast("array<double>"), qvec.cast("array<double>"))
-            / (F.sqrt(norm) * F.sqrt(qnorm)),
-            6,
-        )
-
-    w_q = Window.partitionBy("qid")
-    exact = (
-        emb.crossJoin(F.broadcast(qs))
-        .select(
-            "qid",
-            "vec_id",
-            _cos(
-                F.col("embedding"), F.col("__norm_sq"),
-                F.col("qemb"), F.col("qnorm"),
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(w_q.orderBy(F.desc("cs"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    assign = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.col("cid").alias("cluster"),
-            _cos(
-                F.col("embedding"), F.col("__norm_sq"),
-                F.col("cemb"), F.col("cnorm"),
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("cs"), F.asc("cluster")
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster")
-    )
-    probe = (
-        qs.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            F.col("cid").alias("cluster"),
-            _cos(
-                F.col("cemb"), F.col("cnorm"), F.col("qemb"), F.col("qnorm")
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(w_q.orderBy(F.desc("cs"), F.asc("cluster"))),
-        )
-        .filter(F.col("rn") <= 2)
-        .select("qid", "cluster")
-    )
-    cand = assign.join(F.broadcast(probe), "cluster").select("qid", "vec_id")
-    ivf = (
-        cand.join(emb, "vec_id")
-        .join(F.broadcast(qs), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            _cos(
-                F.col("embedding"), F.col("__norm_sq"),
-                F.col("qemb"), F.col("qnorm"),
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(w_q.orderBy(F.desc("cs"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    counts = cand.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    hits = (
-        exact.alias("e")
-        .join(
-            ivf.alias("i"),
-            (F.col("e.qid") == F.col("i.qid"))
-            & (F.col("e.vec_id") == F.col("i.vec_id")),
-            "left",
-        )
-        .groupBy(F.col("e.qid").alias("qid"))
-        .agg(F.count(F.col("i.vec_id")).cast("bigint").alias("n_hit"))
-    )
-    return (
-        hits.join(counts, "qid")
-        .select(
-            "qid",
-            "n_cand",
-            "n_hit",
-            (F.col("n_hit") * 10).cast("bigint").alias("recall_pct"),
-        )
-        .orderBy("qid")
-    )
+    return _ivf_recall(spark, sf_dir, (2,)).select(
+        "qid",
+        "n_cand",
+        "n_hit",
+        (F.col("n_hit") * 10).cast("bigint").alias("recall_pct"),
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -4072,125 +4031,23 @@ def emb_ivf_probe_sweep(spark, sf_dir):
     scored map-side once for assignment; candidate scoring per arm
     touches only probed buckets — the sweep costs one assignment pass
     plus the union of the arms' candidate sets, NOT three index
-    builds."""
-    emb = with_norm(table(spark, sf_dir, "embeddings"))
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("__norm_sq").alias("cnorm"),
+    builds (``_ivf_recall``).  Every probe count has a row, with zero
+    totals when no query has candidates."""
+    totals = _ivf_recall(spark, sf_dir, _SWEEP_PROBES).groupBy("probes").agg(
+        F.sum("n_cand").alias("n_cand"), F.sum("n_hit").alias("n_hit")
     )
-    qs = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") <= 7)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.col("__norm_sq").alias("qnorm"),
-    )
-
-    def _cos(vec, norm, qvec, qnorm):
-        return F.round(
-            dot(vec.cast("array<double>"), qvec.cast("array<double>"))
-            / (F.sqrt(norm) * F.sqrt(qnorm)),
-            6,
-        )
-
-    w_q = Window.partitionBy("qid")
-    exact = (
-        emb.crossJoin(F.broadcast(qs))
+    arms = spark.createDataFrame([(p,) for p in _SWEEP_PROBES], "probes bigint")
+    n_hit = F.coalesce(F.col("n_hit"), F.lit(0)).cast("bigint")
+    return (
+        arms.join(totals, "probes", "left")
         .select(
-            "qid",
-            "vec_id",
-            _cos(
-                F.col("embedding"), F.col("__norm_sq"),
-                F.col("qemb"), F.col("qnorm"),
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(w_q.orderBy(F.desc("cs"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    assign = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.col("cid").alias("cluster"),
-            _cos(
-                F.col("embedding"), F.col("__norm_sq"),
-                F.col("cemb"), F.col("cnorm"),
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("cs"), F.asc("cluster")
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster")
-    )
-    probe_ranked = (
-        qs.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            F.col("cid").alias("cluster"),
-            _cos(
-                F.col("cemb"), F.col("cnorm"), F.col("qemb"), F.col("qnorm")
-            ).alias("cs"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(w_q.orderBy(F.desc("cs"), F.asc("cluster"))),
-        )
-        .select("qid", "cluster", "rn")
-    )
-    out = None
-    for p in _SWEEP_PROBES:
-        cand = (
-            assign.join(
-                F.broadcast(probe_ranked.filter(F.col("rn") <= p)), "cluster"
-            )
-            .select("qid", "vec_id")
-            .distinct()
-        )
-        ivf = (
-            cand.join(emb, "vec_id")
-            .join(F.broadcast(qs), "qid")
-            .select(
-                "qid",
-                "vec_id",
-                _cos(
-                    F.col("embedding"), F.col("__norm_sq"),
-                    F.col("qemb"), F.col("qnorm"),
-                ).alias("cs"),
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    w_q.orderBy(F.desc("cs"), F.asc("vec_id"))
-                ),
-            )
-            .filter(F.col("rn") <= 10)
-            .select("qid", "vec_id")
-        )
-        hits = exact.join(ivf, ["qid", "vec_id"], "left_semi")
-        arm = hits.agg(
-            F.lit(p).cast("bigint").alias("probes"),
-            F.count(F.lit(1)).cast("bigint").alias("n_hit_total"),
-        ).crossJoin(
-            F.broadcast(
-                cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand_total"))
-            )
-        ).select(
             "probes",
-            "n_cand_total",
-            "n_hit_total",
-            (F.col("n_hit_total") * 2).cast("bigint").alias("recall_pct"),
+            F.coalesce(F.col("n_cand"), F.lit(0)).cast("bigint").alias("n_cand_total"),
+            n_hit.alias("n_hit_total"),
+            (n_hit * 2).alias("recall_pct"),
         )
-        out = arm if out is None else out.unionByName(arm)
-    return out.orderBy("probes")
+        .orderBy("probes")
+    )
 
 
 # ---------------------------------------------------------------------------

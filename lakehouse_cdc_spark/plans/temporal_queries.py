@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from lakehouse_cdc_spark.cdc.apply import compact_changes
 from lakehouse_cdc_spark.cdc.incremental import (
-    apply_agg_adjustments,
-    delta_agg_adjustments,
+    apply_moment_adjustments,
+    delta_moment_adjustments,
 )
 from lakehouse_cdc_spark.cdc.scd import scd2_history
 from lakehouse_cdc_spark.operators.asof import asof_join_backward
@@ -204,15 +204,15 @@ def cdc_incremental_agg(spark, sf_dir):
     )
 
     delta_c = compact_changes(delta, keys=["user_id"], order_by=["ts", "event_id"])
-    adj = delta_agg_adjustments(
+    adj = delta_moment_adjustments(
         prev_state.withColumnRenamed("event_type", "state_group"),
         delta_c.withColumnRenamed("event_type", "state_group"),
         keys=["user_id"],
         group_col="state_group",
-        measure=measure,
+        measures={"sum_fp": measure},
     )
-    new_agg = apply_agg_adjustments(
-        prev_agg, adj, group_col="state_group", cnt_col="key_cnt", sum_col="sum_fp"
+    new_agg = apply_moment_adjustments(
+        prev_agg, adj, group_col="state_group", cnt_col="key_cnt", sum_cols=["sum_fp"]
     )
     return new_agg.select(
         "state_group",

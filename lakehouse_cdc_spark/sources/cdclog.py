@@ -53,6 +53,7 @@ import dataclasses
 import hashlib
 import json
 import os
+import threading
 import time
 import uuid
 from collections.abc import Iterator
@@ -483,10 +484,6 @@ def _read_manifest_json(path: str, manifest: str = "_COMMIT.json") -> dict:
         return {"files": [], "rows": 0}
 
 
-def _manifest_files(path: str, manifest: str = "_COMMIT.json") -> list[str]:
-    return list(_read_manifest_json(path, manifest)["files"])
-
-
 def _next_generation(files: list[str]) -> int:
     """Generation counter from manifested names (``part-g<gen>-<i>``):
     every commit writes files under a FRESH generation, so a published
@@ -827,6 +824,9 @@ class CdcLogDataSource(DataSource):
         return CdcLogStreamWriter(self.options, overwrite)
 
 
+_REGISTER_LOCK = threading.Lock()
+
+
 def register_cdclog(spark) -> None:
     """Idempotently register the source with a session.
 
@@ -835,9 +835,12 @@ def register_cdclog(spark) -> None:
     Spark REFUSES to plan a reader that implements ``pushFilters``
     while the capability flag is off, so registration and the flag
     must travel together — including on the driver's vanilla harness
-    session."""
+    session.  Thread-safe: Spark refuses a registration that races
+    another thread's registration of the same name
+    (``DATA_SOURCE_ALREADY_EXISTS``), so registrations take one lock."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(CdcLogDataSource)
+    with _REGISTER_LOCK:
+        spark.dataSource.register(CdcLogDataSource)
 
 
 #: DuckDB regeneration of the same log (shared CTE for oracles) —

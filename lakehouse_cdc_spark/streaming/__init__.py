@@ -13,7 +13,6 @@ from lakehouse_cdc_spark.streaming.sources import (
     file_cdc_source,
     kafka_cdc_source,
     kafka_source_options,
-    rate_source,
 )
 from lakehouse_cdc_spark.streaming.feed import FeedCursor
 from lakehouse_cdc_spark.streaming.indexing import (
@@ -41,7 +40,6 @@ __all__ = [
     "file_cdc_source",
     "kafka_cdc_source",
     "kafka_source_options",
-    "rate_source",
     "SnapshotUpsertSink",
     "cdc_pipeline",
     "staged_cdc_pipeline",

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -277,8 +278,14 @@ class FeedRangeDataSource(DataSource):
         return FeedRangeStreamReader(self.options)
 
 
+_REGISTER_LOCK = threading.Lock()
+
+
 def register_snapshotfeed(spark: SparkSession) -> None:
-    spark.dataSource.register(FeedRangeDataSource)
+    # one lock, as in sources.cdclog.register_cdclog: Spark refuses a
+    # registration that races another thread's (DATA_SOURCE_ALREADY_EXISTS)
+    with _REGISTER_LOCK:
+        spark.dataSource.register(FeedRangeDataSource)
 
 
 def feed_stream(

@@ -1967,17 +1967,16 @@ class SnapshotUpsertSink:
     def quarantine_table(self, spark: SparkSession) -> DataFrame | None:
         """The quarantine lane as a DataFrame (batch schema +
         ``__check`` = failing rule, ``__batch`` = source batch id), or
-        None if nothing was ever quarantined."""
-        try:
-            # mergeSchema: violators append across batches whose schemas
-            # may evolve (the sink supports widening/added columns) —
-            # a single sampled footer would silently drop historical
-            # violator columns from the view.
-            return spark.read.option("mergeSchema", "true").parquet(
-                store.quarantine_path(self.target_dir)
-            )
-        except Exception:
+        None if nothing was ever quarantined (no lane directory).  A
+        lane that exists but cannot be read raises."""
+        lane = store.quarantine_path(self.target_dir)
+        if not os.path.isdir(lane):
             return None
+        # mergeSchema: violators append across batches whose schemas
+        # may evolve (the sink supports widening/added columns) — a
+        # single sampled footer would silently drop historical violator
+        # columns from the view.
+        return spark.read.option("mergeSchema", "true").parquet(lane)
 
     def _merge_into_buckets(
         self,

@@ -113,13 +113,3 @@ def file_cdc_source(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
     )
-
-
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source — load-generator stand-in (the reference
-    uses Locust, src/locust/locustfile.py)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )

@@ -274,8 +274,8 @@ def test_feed_driven_aggregate_tracks_recompute_through_maintenance(
     the cdf_incremental_view_maintenance oracle checks end-state for,
     here verified step-by-step through maintenance commits."""
     from lakehouse_cdc_spark.cdc.incremental import (
-        apply_agg_adjustments,
-        delta_agg_adjustments,
+        apply_moment_adjustments,
+        delta_moment_adjustments,
     )
 
     def g(spark, rows):
@@ -319,11 +319,11 @@ def test_feed_driven_aggregate_tracks_recompute_through_maintenance(
             prev_vis = sink.state_at(spark, s - 1).filter(
                 F.col("operation") != "d"
             )
-            adj = delta_agg_adjustments(
+            adj = delta_moment_adjustments(
                 prev_vis, feed, keys=["id"], group_col="grp",
-                measure=F.col("val"),
+                measures={"s": F.col("val")},
             )
-            agg = apply_agg_adjustments(agg, adj, "grp", "cnt", "s")
+            agg = apply_moment_adjustments(agg, adj, "grp", "cnt", ["s"])
         last = snap
         return sorted((r.grp, r.cnt, r.s) for r in agg.collect())
 

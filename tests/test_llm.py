@@ -984,6 +984,75 @@ def test_maxsim_blocked_equals_expression_form(spark):
     assert blocked == naive
 
 
+@pytest.mark.parametrize("probes", [1, 2, 6])
+def test_ivf_assign_equals_expression_form_on_ties(spark, probes):
+    """The map-side IVF kernel must rank centroids exactly as the
+    crossJoin + ``row_number`` form the oracles replay — rounded cosine
+    desc, centroid id asc — on vectors with planted EXACT cosine ties:
+    a duplicated centroid under two ids, and vectors equidistant from
+    two or four basis centroids.  Also the one-row query frame with a
+    literal id that ``ivf_topk`` probes with."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    from lakehouse_cdc_spark.llm.similarity import cosine_sim, ivf_assign
+
+    dim = 8
+    basis = np.eye(dim)
+    # cid 9 duplicates cid 2, so every vector ties on that pair
+    cvecs = {9: basis[0], 2: basis[0], 7: basis[1], 4: basis[2],
+             5: basis[3], 1: np.linspace(-1, 1, dim)}
+    cents = spark.createDataFrame(
+        [(c, [float(x) for x in v]) for c, v in cvecs.items()],
+        "cid bigint, cemb array<double>",
+    )
+    rng = np.random.default_rng(7)
+    planted = [basis[0] + basis[1], basis[0] + basis[1] + basis[2] + basis[3],
+               basis[0], 3 * basis[1] + 3 * basis[2]]
+    vecs = planted + list(rng.uniform(-1, 1, (40, dim)))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+    def expression_form(df, id_col, vec_col):
+        cs = F.round(
+            cosine_sim(
+                F.col(vec_col).cast("array<double>"),
+                F.col("cemb").cast("array<double>"),
+            ),
+            6,
+        )
+        w = Window.partitionBy(id_col).orderBy(F.desc("cs"), F.asc("cluster"))
+        return sorted(
+            tuple(r)
+            for r in df.crossJoin(F.broadcast(cents))
+            .select(id_col, F.col("cid").alias("cluster"), cs.alias("cs"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= probes)
+            .select(id_col, "cluster", "cs")
+            .collect()
+        )
+
+    def kernel(df, id_col, vec_col):
+        out = ivf_assign(df, cents, id_col=id_col, vec_col=vec_col, probes=probes)
+        return sorted(tuple(r) for r in out.collect())
+
+    want = expression_form(emb, "vec_id", "embedding")
+    assert kernel(emb, "vec_id", "embedding") == want
+    if probes < len(cvecs):  # the planted ties are real and break by cid
+        tied = {0: [2, 7, 9], 1: [2, 4, 5, 7, 9], 2: [2, 9]}
+        for v, cids in tied.items():
+            assert sorted(c for u, c, _ in want if u == v) == cids[:probes]
+
+    query = emb.filter(F.col("vec_id") == 1).select(
+        F.lit(0).cast("bigint").alias("qid"), F.col("embedding").alias("q_embedding")
+    )
+    assert kernel(query, "qid", "q_embedding") == expression_form(
+        query, "qid", "q_embedding"
+    )
+
+
 def test_containment_pairs_mirror_is_complete_and_symmetric(spark):
     """The halved-join form must still emit BOTH directions of every
     co-shingled pair, with direction-correct sizes: A embedded in B

@@ -1530,6 +1530,33 @@ def test_sink_check_constraints_quarantine_and_fail(spark, tmp_path):
     assert mor.quarantine_table(spark).count() == 1
 
 
+def test_quarantine_table_is_none_only_without_a_lane(spark, tmp_path):
+    """``quarantine_table`` reads None only while the lane directory
+    does not exist; a lane holding an unreadable file raises rather
+    than reading as "nothing quarantined"."""
+    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink, store
+
+    sink = SnapshotUpsertSink(
+        str(tmp_path / "t"),
+        keys=["id"],
+        order_by=["seq"],
+        n_buckets=1,
+        checks={"v_positive": "v > 0"},
+    )
+    batch = spark.createDataFrame(
+        [(1, 5, "c", 0)], "id int, v long, operation string, seq int"
+    )
+    sink.process_batch(batch, 0)
+    assert sink.quarantine_table(spark) is None  # clean: no lane yet
+
+    lane = store.quarantine_path(sink.target_dir)
+    os.makedirs(lane)
+    with open(os.path.join(lane, "part-00000-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        sink.quarantine_table(spark)
+
+
 def test_sink_schema_widening_int_to_bigint(spark, tmp_path):
     """A later batch whose column widened (int -> bigint) must merge:
     Spark's set-operation type coercion widens the union, and the

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from lakehouse_cdc_spark.cdc.apply import compact_changes
 from lakehouse_cdc_spark.cdc.incremental import (
-    apply_agg_adjustments,
-    delta_agg_adjustments,
+    apply_moment_adjustments,
+    delta_moment_adjustments,
 )
 from lakehouse_cdc_spark.cdc.scd import scd2_history
 from lakehouse_cdc_spark.operators.asof import asof_join_backward
@@ -158,13 +158,13 @@ def test_incremental_agg_equals_full_recompute(spark):
         F.count(F.lit(1)).alias("cnt"), F.sum(measure).alias("s")
     )
     delta_c = compact_changes(delta_df, keys=["k"], order_by=[F.desc("seq")])
-    adj = delta_agg_adjustments(
-        base_df, delta_c, keys=["k"], group_col="grp", measure=measure
+    adj = delta_moment_adjustments(
+        base_df, delta_c, keys=["k"], group_col="grp", measures={"s": measure}
     )
     got = {
         r["grp"]: (r["cnt"], r["s"])
-        for r in apply_agg_adjustments(
-            prev_agg, adj, group_col="grp", cnt_col="cnt", sum_col="s"
+        for r in apply_moment_adjustments(
+            prev_agg, adj, group_col="grp", cnt_col="cnt", sum_cols=["s"]
         ).collect()
     }
 
@@ -193,15 +193,15 @@ def test_incremental_agg_group_drains_to_zero(spark):
     prev_agg = base_df.groupBy("grp").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum(measure).alias("s")
     )
-    adj = delta_agg_adjustments(
+    adj = delta_moment_adjustments(
         base_df,
         compact_changes(delta_df, keys=["k"], order_by=[F.desc("seq")]),
         keys=["k"],
         group_col="grp",
-        measure=measure,
+        measures={"s": measure},
     )
-    out = apply_agg_adjustments(
-        prev_agg, adj, group_col="grp", cnt_col="cnt", sum_col="s"
+    out = apply_moment_adjustments(
+        prev_agg, adj, group_col="grp", cnt_col="cnt", sum_cols=["s"]
     ).collect()
     assert out == []  # drained group disappears, no zero-count residue
 
